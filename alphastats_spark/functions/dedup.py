@@ -55,7 +55,7 @@ from alphastats_spark.functions.text import normalize
 #: J >= 0.5); the also-tested (16, 4, 4) lost 7-9 recall points. The
 #: remaining super-linear growth was the CAP's to fix, not the
 #: family's — see :data:`MAX_BAND_BUCKET`. Per-shingle hashing cost is
-#: ONE md5 regardless of k since round 13 — see :data:`SIG_FAMILY`.
+#: ONE md5 regardless of k — see :data:`SIG_FAMILY`.
 MINHASH_K = 24
 ROWS_PER_BAND = 3
 SIMHASH_BITS = 32
@@ -69,35 +69,19 @@ SIMHASH_BITS = 32
 #: Same prime Spark MLlib's MinHashLSH uses (mllib MinHashLSH.HASH_PRIME).
 MINHASH_PRIME = 2_147_483_647
 
-#: MinHash signature hash family identifier, recorded in every dedup
-#: index's ``<path>/meta`` so readers hash new batches with the family
-#: the stored bands were built with (a family mismatch yields ZERO band
-#: collisions, i.e. every near-duplicate silently admitted).
+#: The MinHash signature hash family, recorded as ``sig_family`` in
+#: every dedup index's ``<path>/meta``. Readers refuse an index whose
+#: meta names any other family (or none): a family mismatch yields ZERO
+#: band collisions, i.e. every near-duplicate silently admitted.
 #:
-#: ``"affine31"`` (default, round 13): one 60-bit md5 per shingle
-#: reduced mod :data:`MINHASH_PRIME`, then ``mh_j = (a_j*h + b_j) % p``
-#: per hash function — k plain integer ops instead of the legacy
-#: family's k FULL md5 digests per shingle occurrence. At 100 TB the
+#: One 60-bit md5 per shingle reduced mod :data:`MINHASH_PRIME`, then
+#: ``mh_j = (a_j*h + b_j) % p`` per hash function — k plain integer ops
+#: instead of k full digests per shingle occurrence. At 100 TB the
 #: signature aggregate's per-row cost is the dominant scan-side work of
-#: the dedup pipeline, so this is a ~k× cut of that stage; the min-wise
-#: property is the standard universal-hashing MinHash construction
-#: (Broder 1997; same shape as Spark MLlib's MinHashLSH). DuckDB oracles
-#: mirror the exact 64-bit arithmetic, so cross-engine parity is by
-#: construction.
-#:
-#: ``"md5"``: the pre-r13 family (``min(md5('seed{j}:' || shingle))``
-#: per j) — kept so indexes written before ``sig_family`` metadata
-#: existed keep admitting correctly against their stored bands.
-#:
-#: ``"xxh31"`` (opt-in, round 14): Spark's builtin ``xxhash64`` pmod
-#: the prime feeding the SAME frozen affine transforms — several times
-#: cheaper than even the one md5, for deployments that don't need the
-#: DuckDB oracle. It is NOT oracle-checkable (xxhash64 has no DuckDB
-#: twin), which is why affine31 stays the default in a repo whose
-#: correctness story is cross-engine value-hash parity; its min-wise
-#: estimator quality is pytest-pinned through the real signature path
-#: instead. Safe by construction: every index records its family (and
-#: its coefficient checksum) in meta, so mixed-family joins fail loudly.
+#: the dedup pipeline. The min-wise property is the standard
+#: universal-hashing MinHash construction (Broder 1997; same shape as
+#: Spark MLlib's MinHashLSH). DuckDB oracles mirror the exact 64-bit
+#: arithmetic, so cross-engine parity is by construction.
 SIG_FAMILY = "affine31"
 
 
@@ -456,24 +440,12 @@ def recommend_banding(
     )
 
 
-def minhash_base_hash(col: Column, family: str = "affine31") -> Column:
-    """The ONE per-shingle base hash feeding the affine transforms.
-
-    ``"affine31"``: the canonical 60-bit md5 key
+def minhash_base_hash(col: Column) -> Column:
+    """The ONE per-shingle base hash feeding the affine transforms: the
+    canonical 60-bit md5 key
     (:func:`~alphastats_spark.functions.text.hash_key60`) reduced mod
     :data:`MINHASH_PRIME`. Oracle mirror:
-    ``CAST(CONCAT('0x', substr(md5(x), 1, 15)) AS BIGINT) % 2147483647``.
-
-    ``"xxh31"``: Spark's builtin ``xxhash64`` (pmod'd non-negative) —
-    several times cheaper than even one md5, for deployments that don't
-    need the DuckDB oracle (xxhash64 has no DuckDB twin, so this family
-    is NOT oracle-checkable; see :data:`SIG_FAMILY`).
-
-    NOTE: keep calls inside higher-order-function lambdas UNARY
-    (``lambda s: minhash_base_hash(s, fam)``) — PySpark dispatches HOF
-    lambdas on parameter count, and this function now has two."""
-    if family == "xxh31":
-        return F.pmod(F.xxhash64(col), F.lit(MINHASH_PRIME))
+    ``CAST(CONCAT('0x', substr(md5(x), 1, 15)) AS BIGINT) % 2147483647``."""
     from alphastats_spark.functions.text import hash_key60
 
     return hash_key60(col) % F.lit(MINHASH_PRIME)
@@ -481,80 +453,55 @@ def minhash_base_hash(col: Column, family: str = "affine31") -> Column:
 
 def minhash_signature_cols(
     k: int = MINHASH_K,
-    family: str = SIG_FAMILY,
     src: str = "shingle",
     prehashed: bool = False,
 ) -> list:
-    """K min-hash aggregate expressions over an exploded shingle column.
-
-    ``family="affine31"`` (default): ``mh_j = min((a_j*h + b_j) % p)``
-    over the document's shingles, with ``h`` the one-md5 base hash — see
-    :data:`SIG_FAMILY` for the cost/portability reasoning. Prefer
-    :func:`_sigs_over_shingles`, which projects ``h`` once below the
-    aggregate so the single-digest guarantee is structural rather than
-    left to codegen subexpression elimination; ``prehashed=True`` says
-    ``src`` already holds the reduced base hash.
-
-    ``family="xxh31"``: same affine transforms over an ``xxhash64`` base
-    hash — cheaper still, but NOT oracle-checkable (see
-    :data:`SIG_FAMILY`).
-
-    ``family="md5"``: the legacy k-independent-digests family, kept for
-    dedup indexes written before ``sig_family`` metadata existed.
+    """K min-hash aggregate expressions over an exploded shingle column:
+    ``mh_j = min((a_j*h + b_j) % p)`` over the document's shingles, with
+    ``h`` the one-md5 base hash — see :data:`SIG_FAMILY` for the
+    cost/portability reasoning. Prefer :func:`_sigs_over_shingles`, which
+    projects ``h`` once below the aggregate so the single-digest
+    guarantee is structural rather than left to codegen subexpression
+    elimination; ``prehashed=True`` says ``src`` already holds the
+    reduced base hash.
     """
     col = F.col(src)
-    if family == "md5":
-        return [
-            F.min(F.md5(F.concat(F.lit(f"seed{j}:"), col))).alias(f"mh{j}")
-            for j in range(k)
-        ]
-    if family not in ("affine31", "xxh31"):
-        raise ValueError(f"unknown MinHash signature family {family!r}")
 
     def build() -> list:
-        h = col if prehashed else minhash_base_hash(col, family)
+        h = col if prehashed else minhash_base_hash(col)
         p = F.lit(MINHASH_PRIME)
         return [
             F.min((F.lit(a) * h + F.lit(b)) % p).alias(f"mh{j}")
             for j, (a, b) in enumerate(_affine_coeffs(k))
         ]
 
-    # k Column trees of ~8 nodes each per call — memoized per
-    # (k, family, src): the trees are pure functions of those three
-    return _memo_col(("sigcols", k, family, src, prehashed), build)
+    # k Column trees of ~8 nodes each per call — memoized: the trees are
+    # pure functions of the key
+    return _memo_col(("sigcols", k, src, prehashed), build)
 
 
 def _sigs_over_shingles(
     sh: DataFrame,
     id_col: str,
     k: int,
-    family: str = SIG_FAMILY,
     extra_aggs: tuple = (),
     base60_col: str | None = None,
 ) -> DataFrame:
     """``sh.groupBy(id).agg(*signature cols, *extra_aggs)`` with the
-    affine family's base hash projected ONCE below the aggregate — the
-    structural guarantee that each (id, shingle) row pays exactly one md5
-    however large k is (inlining the digest into each of the k min()
-    inputs would leave de-duplication to codegen subexpression
-    elimination, which aggregate inputs don't reliably get).
-    ``extra_aggs`` ride the same shuffle (row counts etc.).
+    base hash projected ONCE below the aggregate — the structural
+    guarantee that each (id, shingle) row pays exactly one md5 however
+    large k is (inlining the digest into each of the k min() inputs
+    would leave de-duplication to codegen subexpression elimination,
+    which aggregate inputs don't reliably get). ``extra_aggs`` ride the
+    same shuffle (row counts etc.).
 
-    ``base60_col`` (affine31 only): name of a column that ALREADY holds
-    the canonical 60-bit key (:func:`~alphastats_spark.functions.text.
-    hash_key60` of the shingle) — the base hash is then the cached key
-    mod p, and this function performs no hashing at all. This is how
+    ``base60_col``: name of a column that ALREADY holds the canonical
+    60-bit key (:func:`~alphastats_spark.functions.text.hash_key60` of
+    the shingle) — the base hash is then the cached key mod p, and this
+    function performs no hashing at all. This is how
     :func:`lsh_verified_pairs` shares ONE md5 per shingle row between
-    the signature branch and the verify joins (round 14)."""
-    if family == "md5":
-        return sh.groupBy(id_col).agg(
-            *minhash_signature_cols(k, family), *extra_aggs
-        )
+    the signature branch and the verify joins."""
     if base60_col is not None:
-        if family != "affine31":
-            raise ValueError(
-                f"base60_col only applies to the affine31 family, not {family!r}"
-            )
         hashed = sh.select(
             F.col(id_col),
             _memo_col(
@@ -566,12 +513,12 @@ def _sigs_over_shingles(
         hashed = sh.select(
             F.col(id_col),
             _memo_col(
-                ("sig_base", family),
-                lambda: minhash_base_hash(F.col("shingle"), family).alias("__h"),
+                ("sig_base",),
+                lambda: minhash_base_hash(F.col("shingle")).alias("__h"),
             ),
         )
     return hashed.groupBy(id_col).agg(
-        *minhash_signature_cols(k, family, src="__h", prehashed=True),
+        *minhash_signature_cols(k, src="__h", prehashed=True),
         *extra_aggs,
     )
 
@@ -653,7 +600,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = MINHASH_K,
-    family: str = SIG_FAMILY,
 ) -> DataFrame:
     """Per-document K min-hashes via explode + groupBy.
 
@@ -666,7 +612,7 @@ def minhash_signatures(
     faster plan at every scale tested.
     """
     exploded = _exploded_shingles(df, id_col, text_col)
-    return _sigs_over_shingles(exploded, id_col, k, family)
+    return _sigs_over_shingles(exploded, id_col, k)
 
 
 def _band_table(
@@ -1617,70 +1563,26 @@ def lsh_verified_pairs(
     per branch (``ordered.persist_tracked`` — callers that fully
     materialize release it via ``release_pass_caches``).
 
-    Round 14: under the default affine31 family the persisted table
-    carries ``(id, hash_key60(shingle))`` — 16-byte rows — instead of the
-    raw gram strings. The signature base hash is the cached key mod p and
-    the verify joins use the cached key directly, so each shingle row
-    pays exactly ONE md5 for the WHOLE pipeline where the previous shape
-    paid three (signature branch + both join-side ``hash_key60``
-    projections over the cached raw strings), and the cache itself
-    shrinks several-fold. Values are unchanged by construction — both
-    consumers were already derived from the same ``hash_key60``.
+    The persisted table carries ``(id, hash_key60(shingle))`` — 16-byte
+    rows — instead of the raw gram strings. The signature base hash is
+    the cached key mod p and the verify joins use the cached key
+    directly, so each shingle row pays exactly ONE md5 for the WHOLE
+    pipeline (instead of one per branch), and the cache itself is
+    several-fold smaller than one of raw strings.
     """
     from alphastats_spark.operators import ordered
 
     from alphastats_spark.functions.text import hash_key60
 
-    if SIG_FAMILY == "affine31":
-        sh = ordered.persist_tracked(
-            _exploded_shingles(df, id_col, text_col, n).select(
-                F.col(id_col),
-                _memo_col(
-                    ("h60_shingle",),
-                    lambda: hash_key60(F.col("shingle")).alias("__h60"),
-                ),
-            )
+    sh = ordered.persist_tracked(
+        _exploded_shingles(df, id_col, text_col, n).select(
+            F.col(id_col),
+            _memo_col(
+                ("h60_shingle",),
+                lambda: hash_key60(F.col("shingle")).alias("__h60"),
+            ),
         )
-        sigs = _sigs_over_shingles(
-            sh, id_col, k,
-            extra_aggs=(F.count(F.lit(1)).alias("__nsh"),),
-            base60_col="__h60",
-        )
-        cands = ordered.persist_tracked(
-            _candidates_from_sigs(
-                sigs, id_col, k, rows_per_band, max_band_bucket,
-                size_col="__nsh", size_ratio=threshold,
-            ).select("id_a", "id_b", "size_a", "size_b")
-        )
-        a = sh.select(
-            F.col(id_col).alias("id_a"), F.col("__h60").alias("shingle")
-        )
-        b = sh.select(
-            F.col(id_col).alias("id_b"), F.col("__h60").alias("shingle")
-        )
-        common = (
-            cands.select("id_a", "id_b")
-            .join(a, "id_a")
-            .join(b, ["id_b", "shingle"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-        return (
-            common.join(cands, ["id_a", "id_b"])
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("common")
-                    / (F.col("size_a") + F.col("size_b") - F.col("common")),
-                    7,
-                ),
-            )
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-
-    # legacy md5 / xxh31 families: signatures need the raw shingle string
-    sh = ordered.persist_tracked(_exploded_shingles(df, id_col, text_col, n))
+    )
     # the per-doc set size rides the SAME aggregate that builds the
     # minhash signature (one shuffle) and then the band table itself
     # (8 bytes on a rows-per-doc = n_bands table), so the verify stage
@@ -1697,7 +1599,9 @@ def lsh_verified_pairs(
     # rounded threshold can admit; the DuckDB oracles need no mirror
     # because the output set is unchanged.
     sigs = _sigs_over_shingles(
-        sh, id_col, k, extra_aggs=(F.count(F.lit(1)).alias("__nsh"),)
+        sh, id_col, k,
+        extra_aggs=(F.count(F.lit(1)).alias("__nsh"),),
+        base60_col="__h60",
     )
     # persisted: the explode join consumes the id pairs and the jaccard
     # projection re-joins the sizes — without the persist that second
@@ -1708,16 +1612,11 @@ def lsh_verified_pairs(
             size_col="__nsh", size_ratio=threshold,
         ).select("id_a", "id_b", "size_a", "size_b")
     )
-
-    # the verify join shuffles on (id, shingle) twice; carry the shingle
-    # as a 60-bit hash, not the raw gram string (see _hashed_shingles —
-    # the persisted sh keeps RAW shingles because the minhash signature
-    # branch needs them; only the join projections hash)
     a = sh.select(
-        F.col(id_col).alias("id_a"), hash_key60(F.col("shingle")).alias("shingle")
+        F.col(id_col).alias("id_a"), F.col("__h60").alias("shingle")
     )
     b = sh.select(
-        F.col(id_col).alias("id_b"), hash_key60(F.col("shingle")).alias("shingle")
+        F.col(id_col).alias("id_b"), F.col("__h60").alias("shingle")
     )
     common = (
         cands.select("id_a", "id_b")
@@ -1730,7 +1629,11 @@ def lsh_verified_pairs(
         common.join(cands, ["id_a", "id_b"])
         .withColumn(
             "jaccard",
-            F.round(F.col("common") / (F.col("size_a") + F.col("size_b") - F.col("common")), 7),
+            F.round(
+                F.col("common")
+                / (F.col("size_a") + F.col("size_b") - F.col("common")),
+                7,
+            ),
         )
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
@@ -1954,38 +1857,16 @@ def incremental_near_dups(
     from alphastats_spark.functions.text import hash_key60
 
     # one exploded shingle table per side feeds signatures, sizes and the
-    # verify joins (see lsh_verified_pairs) — under the default affine31
-    # family both persisted tables carry the 60-bit key instead of the
-    # raw gram string, so each shingle row pays ONE md5 for the whole
-    # admit (signatures + verify join + sizes; round 14, same sharing as
-    # lsh_verified_pairs)
-    if SIG_FAMILY == "affine31":
-        sh_n = ordered.persist_tracked(
-            _exploded_shingles(new_df, id_col, text_col, n, out_id="new_id")
-            .select(F.col("new_id"), hash_key60(F.col("shingle")).alias("__h60"))
-        )
-        sh_o = ordered.persist_tracked(
-            _exploded_shingles(corpus_df, id_col, text_col, n, out_id="match_id")
-            .select(F.col("match_id"), hash_key60(F.col("shingle")).alias("__h60"))
-        )
-        bn = ordered.persist_tracked(_band_table(
-            _sigs_over_shingles(sh_n, "new_id", k, base60_col="__h60"),
-            "new_id", k, rows_per_band
-        ))
-        bo = ordered.persist_tracked(_band_table(
-            _sigs_over_shingles(sh_o, "match_id", k, base60_col="__h60"),
-            "match_id", k, rows_per_band
-        ))
-        return _verified_matches(
-            bn, bo, sh_n, sh_o, threshold,
-            sh_n_hashed_col="__h60", sh_o_hashed_col="__h60",
-        )
-
+    # verify joins (see lsh_verified_pairs); both persisted tables carry
+    # the 60-bit key instead of the raw gram string, so each shingle row
+    # pays ONE md5 for the whole admit (signatures + verify join + sizes)
     sh_n = ordered.persist_tracked(
         _exploded_shingles(new_df, id_col, text_col, n, out_id="new_id")
+        .select(F.col("new_id"), hash_key60(F.col("shingle")).alias("__h60"))
     )
     sh_o = ordered.persist_tracked(
         _exploded_shingles(corpus_df, id_col, text_col, n, out_id="match_id")
+        .select(F.col("match_id"), hash_key60(F.col("shingle")).alias("__h60"))
     )
     # both band tables are consumed more than once downstream (bn: the
     # probe distinct + the broadcast candidate join; bo: the mega-bucket
@@ -1993,12 +1874,14 @@ def incremental_near_dups(
     # no parquet scan whose pruning a persist could break, so persist both
     # rather than re-running the signature groupBys per consumer
     bn = ordered.persist_tracked(_band_table(
-        _sigs_over_shingles(sh_n, "new_id", k), "new_id", k, rows_per_band
+        _sigs_over_shingles(sh_n, "new_id", k, base60_col="__h60"),
+        "new_id", k, rows_per_band
     ))
     bo = ordered.persist_tracked(_band_table(
-        _sigs_over_shingles(sh_o, "match_id", k), "match_id", k, rows_per_band
+        _sigs_over_shingles(sh_o, "match_id", k, base60_col="__h60"),
+        "match_id", k, rows_per_band
     ))
-    return _verified_matches(bn, bo, sh_n, sh_o, threshold)
+    return _verified_matches(bn, bo, sh_n, sh_o, threshold, sh_o_hashed_col="__h60")
 
 
 def _verified_matches(
@@ -2008,7 +1891,6 @@ def _verified_matches(
     sh_o: DataFrame,
     threshold: float,
     max_band_bucket: int | None = MAX_BAND_BUCKET,
-    sh_n_hashed_col: str | None = None,
     sh_o_hashed_col: str | None = None,
 ) -> DataFrame:
     """Band-collision candidates verified by exact shingle Jaccard —
@@ -2017,13 +1899,12 @@ def _verified_matches(
     by ``match_id``; the batch side broadcasts.
 
     The verify join carries shingles as 60-bit hashes (see
-    :func:`_hashed_shingles` for the width/collision reasoning) — for the
-    index path that hashing is a scan-side projection over the stored raw
-    shingle table, so the index format is unchanged.
-    ``sh_n_hashed_col``/``sh_o_hashed_col`` name a column that ALREADY
-    holds the 60-bit key (a caller that persisted the hashed table so the
-    signature branch shares the one md5 — see :func:`lsh_verified_pairs`,
-    round 14); the join then reads it directly instead of re-hashing.
+    :func:`_hashed_shingles` for the width/collision reasoning). ``sh_n``
+    always carries them in ``__h60`` (the batch side is hashed once and
+    shared with its signature branch — see :func:`lsh_verified_pairs`).
+    ``sh_o_hashed_col`` names the corpus side's hashed column when it has
+    one; without it (the stored index's raw shingle table) the hashing is
+    a scan-side projection, so the index format is unchanged.
 
     ``max_band_bucket`` is the corpus-side twin of the self-join's
     mega-bucket guard: a boilerplate (band, sig) bucket holding D corpus
@@ -2054,11 +1935,7 @@ def _verified_matches(
         .select("new_id", "match_id")
         .distinct()
     )
-    hn = sh_n.select(
-        "new_id",
-        (F.col(sh_n_hashed_col) if sh_n_hashed_col
-         else hash_key60(F.col("shingle"))).alias("shingle"),
-    )
+    hn = sh_n.select("new_id", F.col("__h60").alias("shingle"))
     ho = sh_o.select(
         "match_id",
         (F.col(sh_o_hashed_col) if sh_o_hashed_col
@@ -2299,7 +2176,6 @@ def write_dedup_index(
     rows_per_band: int = ROWS_PER_BAND,
     n: int = 3,
     mode: str = "overwrite",
-    sig_family: str | None = None,
 ) -> None:
     """Materialize the corpus side of the incremental dedup as a stored
     index: ``<path>/bands`` (the MinHash band table, parquet PARTITIONED
@@ -2309,54 +2185,31 @@ def write_dedup_index(
     re-hashing the corpus — the production shape where the corpus is
     billions of documents and ingest cost must be O(batch).
 
-    ``sig_family``: ``None`` (default) builds with :data:`SIG_FAMILY`
-    for a fresh index and INHERITS the stored family on append;
-    ``"affine31"`` or ``"xxh31"`` selects explicitly (an explicit value
-    conflicting with an appended-to index raises — its rows would never
-    collide with the stored corpus's). ``"md5"`` is read-only legacy:
-    new indexes can't be built with it.
-
     ``<path>/meta`` records the hash parameters (k, rows_per_band, n,
-    sig_family, sig_coeffs) the index was built with: an admit pass
-    hashed with DIFFERENT parameters produces zero band collisions and
-    silently admits every near-duplicate, so the readers
+    ``sig_family="affine31"``, sig_coeffs) the index was built with: an
+    admit pass hashed with DIFFERENT parameters produces zero band
+    collisions and silently admits every near-duplicate, so the readers
     (:func:`admit_against_index`,
     :func:`alphastats_spark.streaming.streaming_index_candidates`) load
-    these as defaults and fail loudly on an explicit mismatch. Written as
-    a single-row Spark JSON table, so the index stays portable to any
+    these as defaults and fail loudly on an explicit mismatch. An index
+    whose meta records another signature family (or none) must be
+    rebuilt with ``mode="overwrite"``; appending to it raises. Written as
+    a single-row JSON file, so the index stays portable to any
     Hadoop-compatible filesystem (no driver-local ``open()``)."""
     from alphastats_spark.operators import ordered
 
-    if sig_family is not None and sig_family not in ("affine31", "xxh31"):
-        raise ValueError(
-            f"cannot build a new index with sig_family={sig_family!r}: "
-            "'affine31' (oracle-checkable default) and 'xxh31' (cheaper, "
-            "no cross-engine oracle) are the writable families; 'md5' is "
-            "the read-only legacy family of pre-r13 indexes"
-        )
-    family = sig_family if sig_family is not None else SIG_FAMILY
     # an APPEND into an existing index must hash with the index's own
     # parameters: band rows hashed with different (k, rows_per_band, n)
-    # — or a different signature FAMILY (the r13 md5 → affine31 default
-    # flip makes this a live hazard for pre-r13 indexes) — never collide
-    # with the stored corpus's rows, so every near-dup of the original
-    # corpus would be silently admitted; and because meta is rewritten
-    # below, the mismatch would also be invisible to the readers'
-    # FAILFAST checks. Raise at write time instead, and inherit the
-    # STORED family so appends into an md5-era index keep its family.
+    # or a different signature family never collide with the stored
+    # corpus's rows, so every near-dup of the original corpus would be
+    # silently admitted; and because meta is rewritten below, the
+    # mismatch would also be invisible to the readers' FAILFAST checks.
+    # Raise at write time instead.
     existing = None
     if mode == "append":
         existing = read_index_meta(corpus_df.sparkSession, path)
         if existing is not None:
-            _, _, _, stored = _resolve_index_params(existing, k, rows_per_band, n)
-            if sig_family is not None and sig_family != stored:
-                raise ValueError(
-                    f"sig_family={sig_family!r} does not match the index "
-                    f"(built with {stored!r}); mixed-family band rows "
-                    "never collide, silently admitting every "
-                    "near-duplicate of the stored corpus"
-                )
-            family = stored
+            _resolve_index_params(existing, k, rows_per_band, n)
         else:
             # a band table with NO meta is a pre-metadata (legacy) index:
             # its rows may be hashed with ANY parameters, and stamping
@@ -2374,7 +2227,8 @@ def write_dedup_index(
                     f"this call's (k={k}, rows_per_band={rows_per_band}, "
                     f"n={n}) over rows possibly hashed with different "
                     f"parameters, silently admitting near-duplicates of "
-                    f"the stored corpus. Rebuild with mode='overwrite'."
+                    f"the stored corpus. Rebuild the index with "
+                    f"mode='overwrite'."
                 )
 
     # fully materializing (everything lands on disk), so the shared
@@ -2386,7 +2240,7 @@ def write_dedup_index(
             _exploded_shingles(corpus_df, id_col, text_col, n, out_id="match_id")
         )
         bands = _band_table(
-            _sigs_over_shingles(sh, "match_id", k, family),
+            _sigs_over_shingles(sh, "match_id", k),
             "match_id", k, rows_per_band,
         )
         # cluster by band before the partitioned write (same rationale as
@@ -2435,14 +2289,13 @@ def write_dedup_index(
         # sig_coeffs: digest of the affine coefficient prefix this index's
         # band signatures bake in — readers FAILFAST-validate it so a
         # runtime with a divergent coefficient table raises instead of
-        # hashing into empty buckets (null for the coefficient-free md5
-        # family, and for pre-r14 affine indexes, which predate the stamp)
-        coeffs = _affine_checksum(int(k)) if family != "md5" else None
+        # hashing into empty buckets (older affine31 indexes predate the
+        # stamp and carry none)
         # one-row metadata is driver work, not a distributed job: the
         # Hadoop FileSystem client writes the single JSON line directly
         # (portable to HDFS/s3a/local like every other index file), where
         # even the JVM-literal one-task Spark write paid ~0.2 s of job
-        # scheduling per call — 3 writes per compaction cycle (round 14).
+        # scheduling per call — 3 writes per compaction cycle.
         # Layout (meta/part-00000.json, one object per line) is exactly
         # what the previous Spark json writer produced, so old and new
         # indexes stay mutually readable.
@@ -2451,8 +2304,8 @@ def write_dedup_index(
             "rows_per_band": int(rows_per_band),
             "n": int(n),
             "version": 2,
-            "sig_family": family,
-            "sig_coeffs": coeffs,
+            "sig_family": SIG_FAMILY,
+            "sig_coeffs": _affine_checksum(int(k)),
         }
         # An append whose parameters already match the stored record (the
         # ONLY legal append — mismatches raised above) rewrites nothing:
@@ -2460,8 +2313,7 @@ def write_dedup_index(
         # race on, so skipping it makes overlapped appends meta-safe, and
         # it sheds driver I/O either way. Appends into an index whose meta
         # PREDATES a field (old version / missing sig_coeffs) still
-        # rewrite — that upgrade path is serialize-your-appends territory,
-        # exactly as before.
+        # rewrite — that upgrade path needs its appends serialized.
         if not (
             mode == "append"
             and existing is not None
@@ -2517,13 +2369,12 @@ class _IndexMeta:
 
 
 def read_index_meta(spark, path: str):
-    """The ``(k, rows_per_band, n, sig_family)`` parameters stored by
-    :func:`write_dedup_index`, or None for a PRE-METADATA index (no
-    ``<path>/meta`` directory). A meta row WITHOUT ``sig_family`` (any
-    index written before round 13) reads it as null, which
-    :func:`_resolve_index_params` resolves to the legacy ``"md5"``
-    family — the only family that existed when such meta was written.
-    Only the missing-path case maps to None: any other read failure
+    """The ``(k, rows_per_band, n, sig_family, sig_coeffs)`` parameters
+    stored by :func:`write_dedup_index`, or None for a PRE-METADATA index
+    (no ``<path>/meta`` directory). Fields missing from an older meta row
+    are absent from the result; :func:`_resolve_index_params` refuses a
+    row whose ``sig_family`` is not ``"affine31"`` (absent included) and
+    asks for a rebuild. Only the missing-path case maps to None: any other read failure
     (transient filesystem error, permission denial, corrupt JSON)
     re-raises — treating it as "no metadata" would silently fall back to
     default hash parameters, i.e. zero band collisions and every
@@ -2628,54 +2479,42 @@ def compact_dedup_index(
 
 def _resolve_index_params(meta, k, rows_per_band, n, allow_defaults=False):
     """Fill None parameters from index metadata and return
-    ``(k, rows_per_band, n, sig_family)``; raise on an explicit value
-    that contradicts what the index was built with — a silent mismatch
-    yields zero band collisions, i.e. every near-duplicate admitted.
+    ``(k, rows_per_band, n)``; raise on an explicit value that
+    contradicts what the index was built with — a silent mismatch yields
+    zero band collisions, i.e. every near-duplicate admitted.
 
-    ``sig_family`` is never caller-supplied: it resolves to the stored
-    value, or to the legacy ``"md5"`` family when the meta row predates
-    the field (pre-r13 indexes were all md5-built).
+    The index must record ``sig_family="affine31"`` (:data:`SIG_FAMILY`).
+    A PRE-METADATA index (``meta is None``), or a meta row naming another
+    family or none, raises: its band signatures were hashed by a family
+    this runtime cannot reproduce, so it must be rebuilt with
+    :func:`write_dedup_index`.
 
-    A PRE-METADATA index (``meta is None``) raises unless ALL of
-    ``k``/``rows_per_band``/``n`` are explicit: module defaults MOVE
-    across releases (r12 flipped (8, 2) → (24, 3); r13 flipped the hash
-    family itself), and an index whose build parameters are unrecorded
-    resolved against NEW defaults — wholly OR partially (an explicit k=8
-    with a defaulted rows_per_band is just as wrong) — hashes into empty
-    buckets: zero collisions, every near-duplicate silently admitted.
-    Callers who know how a legacy index was built pass its full
-    parameter set explicitly (legacy implies family "md5").
-
-    An affine31 meta row carrying a ``sig_coeffs`` stamp (r14+) is
-    validated against this runtime's frozen coefficient table
-    (:func:`_affine_checksum`); divergence raises.
-    ``allow_defaults=True`` is the one deliberate exception — the
-    no-``index_path`` streaming form, whose documented contract is
-    lockstep with the CURRENT module defaults (family included): the
-    caller opted out of metadata entirely, not inherited a stale index.
+    A meta row carrying a ``sig_coeffs`` stamp is validated against this
+    runtime's frozen coefficient table (:func:`_affine_checksum`);
+    divergence raises. ``allow_defaults=True`` is the one deliberate
+    exception to the meta requirement — the no-``index_path`` streaming
+    form, whose documented contract is lockstep with the CURRENT module
+    defaults: the caller opted out of metadata entirely, not inherited a
+    stale index.
     """
-    if (
-        meta is None and not allow_defaults
-        and (k is None or rows_per_band is None or n is None)
-    ):
-        # a PARTIAL explicit set is the same hazard as none: the missing
-        # parameters would fill from CURRENT module defaults, which move
-        # across releases (r12 flipped rows_per_band 2 → 3), so e.g. an
-        # explicit k=8 with a defaulted rows_per_band yields a wrong band
-        # table with no error — require all three or none-with-meta
-        given = {"k": k, "rows_per_band": rows_per_band, "n": n}
-        missing = [name for name, v in given.items() if v is None]
+    if meta is None and not allow_defaults:
         raise ValueError(
-            "dedup index has no <path>/meta parameter record and "
-            f"({', '.join(missing)}) "
-            f"{'were' if len(missing) > 1 else 'was'} not given explicitly "
-            "— module defaults have changed across releases, and hashing "
-            "with parameters the index was not built with yields zero "
-            "band collisions (every near-duplicate admitted). Pass ALL of "
-            "the index's build parameters (k, rows_per_band, n) "
-            "explicitly, or rebuild it with write_dedup_index (which "
-            "records them)."
+            "dedup index has no <path>/meta parameter record, so the hash "
+            "parameters its bands were built with are unknown — hashing "
+            "with different ones yields zero band collisions (every "
+            "near-duplicate admitted). Rebuild the index with "
+            "write_dedup_index(mode='overwrite'), which records them."
         )
+    if meta is not None:
+        family = getattr(meta, "sig_family", None)
+        if family != SIG_FAMILY:
+            raise ValueError(
+                f"dedup index meta records MinHash signature family "
+                f"{family!r}, but only {SIG_FAMILY!r} is supported — "
+                "banding a batch with a different family yields zero "
+                "collisions (every near-duplicate admitted). Rebuild the "
+                "index with write_dedup_index(mode='overwrite')."
+            )
     resolved = []
     for name, given, default in (
         ("k", k, MINHASH_K),
@@ -2693,34 +2532,25 @@ def _resolve_index_params(meta, k, rows_per_band, n, allow_defaults=False):
                     "band collisions and admits every near-duplicate"
                 )
             resolved.append(int(given))
-    if meta is not None:
-        stored_family = getattr(meta, "sig_family", None)
-        family = stored_family if stored_family is not None else "md5"
-        stored_coeffs = getattr(meta, "sig_coeffs", None)
-        if family in ("affine31", "xxh31") and stored_coeffs is not None:
-            # the index's band signatures bake the coefficient prefix in;
-            # a runtime whose _AFFINE_TABLE diverged (edited, truncated,
-            # reordered) would hash every batch into empty buckets — fail
-            # loudly instead. Pre-r14 affine meta has no stamp (null) and
-            # is valid by construction: the table is frozen source.
-            current = _affine_checksum(int(resolved[0]))
-            if stored_coeffs != current:
-                raise ValueError(
-                    f"dedup index records affine coefficient checksum "
-                    f"{stored_coeffs!r} but this runtime's frozen table "
-                    f"yields {current!r} for k={resolved[0]} — the "
-                    "coefficient source diverged from the one the index "
-                    "was built with, so banding would yield zero "
-                    "collisions (every near-duplicate admitted). Use a "
-                    "runtime with the original _AFFINE_TABLE or rebuild "
-                    "the index."
-                )
-        resolved.append(family)
-    else:
-        # no meta: an opted-out streaming caller bands with CURRENT module
-        # code (SIG_FAMILY); a legacy stored index predates the affine
-        # family by construction
-        resolved.append(SIG_FAMILY if allow_defaults else "md5")
+    stored_coeffs = getattr(meta, "sig_coeffs", None)
+    if stored_coeffs is not None:
+        # the index's band signatures bake the coefficient prefix in;
+        # a runtime whose _AFFINE_TABLE diverged (edited, truncated,
+        # reordered) would hash every batch into empty buckets — fail
+        # loudly instead. Older meta has no stamp (null) and is valid by
+        # construction: the table is frozen source.
+        current = _affine_checksum(int(resolved[0]))
+        if stored_coeffs != current:
+            raise ValueError(
+                f"dedup index records affine coefficient checksum "
+                f"{stored_coeffs!r} but this runtime's frozen table "
+                f"yields {current!r} for k={resolved[0]} — the "
+                "coefficient source diverged from the one the index "
+                "was built with, so banding would yield zero "
+                "collisions (every near-duplicate admitted). Use a "
+                "runtime with the original _AFFINE_TABLE or rebuild "
+                "the index."
+            )
     return tuple(resolved)
 
 
@@ -2740,46 +2570,35 @@ def admit_against_index(
     off parquet. The batch band table still broadcasts, so the stored
     corpus tables never reshuffle beyond their band/shingle join keys.
 
-    ``k``/``rows_per_band``/``n`` — and the signature hash family —
-    default to the parameters stored in the index's ``meta`` table
-    (stored meta ALWAYS wins over module defaults, so an index built
-    under older defaults keeps admitting correctly after a default
-    flip); passing explicit values that contradict the index raises
-    (zero band collisions ⇒ every near-dup admitted). An index with no
-    meta at all raises unless the caller supplies its build parameters
-    (see :func:`_resolve_index_params`)."""
+    ``k``/``rows_per_band``/``n`` default to the parameters stored in
+    the index's ``meta`` table (stored meta ALWAYS wins over module
+    defaults, so an index built under older defaults keeps admitting
+    correctly after a default flip); passing explicit values that
+    contradict the index raises (zero band collisions ⇒ every near-dup
+    admitted). An index with no meta, or whose meta records a signature
+    family other than ``"affine31"``, raises and must be rebuilt (see
+    :func:`_resolve_index_params`)."""
     from alphastats_spark.operators import ordered
 
+    from alphastats_spark.functions.text import hash_key60
+
     spark = new_df.sparkSession
-    k, rows_per_band, n, family = _resolve_index_params(
+    k, rows_per_band, n = _resolve_index_params(
         read_index_meta(spark, index_path), k, rows_per_band, n
     )
     bo = spark.read.parquet(f"{index_path}/bands")
     sh_o = spark.read.parquet(f"{index_path}/shingles")
-    if family == "affine31":
-        # batch side persists the 60-bit key: one md5 per batch shingle
-        # for signatures + verify join + sizes (round 14). The STORED
-        # corpus side stays raw — the index format is unchanged and its
-        # hashing remains a scan-side projection.
-        from alphastats_spark.functions.text import hash_key60
-
-        sh_n = ordered.persist_tracked(
-            _exploded_shingles(new_df, id_col, text_col, n, out_id="new_id")
-            .select(F.col("new_id"), hash_key60(F.col("shingle")).alias("__h60"))
-        )
-        bn = _band_table(
-            _sigs_over_shingles(sh_n, "new_id", k, family, base60_col="__h60"),
-            "new_id", k, rows_per_band,
-        )
-        matches = _verified_matches(
-            bn, bo, sh_n, sh_o, threshold, sh_n_hashed_col="__h60"
-        )
-        return _admit_rank(new_df, matches, id_col)
+    # batch side persists the 60-bit key: one md5 per batch shingle for
+    # signatures + verify join + sizes. The STORED corpus side stays raw —
+    # the index format is unchanged and its hashing remains a scan-side
+    # projection.
     sh_n = ordered.persist_tracked(
         _exploded_shingles(new_df, id_col, text_col, n, out_id="new_id")
+        .select(F.col("new_id"), hash_key60(F.col("shingle")).alias("__h60"))
     )
     bn = _band_table(
-        _sigs_over_shingles(sh_n, "new_id", k, family), "new_id", k, rows_per_band
+        _sigs_over_shingles(sh_n, "new_id", k, base60_col="__h60"),
+        "new_id", k, rows_per_band,
     )
     matches = _verified_matches(bn, bo, sh_n, sh_o, threshold)
     return _admit_rank(new_df, matches, id_col)

@@ -96,12 +96,13 @@ def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-# NOTE on the per-pair dot (round-14 measured): a flat unrolled
+# NOTE on the per-pair dot: a flat unrolled
 # ``try_element_at(a,1)*try_element_at(b,1) + ...`` sum IS bit-identical
 # to the zip_with/aggregate fold and measured 2.1× FASTER over a
-# persisted columnar scan (scripts/bench_dot_flat.py) — but 2.7× SLOWER
-# when the same expression sits in the projection of a bucket self-JOIN
-# (49.1 s vs 18.0 s over the knn_join's 2M-pair volume): the join stage's
+# persisted columnar scan (scripts/bench_dot_flat.py in git commit
+# 7e2302d) — but 2.7× SLOWER when the same expression sits in the
+# projection of a bucket self-JOIN (49.1 s vs 18.0 s over the
+# knn_join's 2M-pair volume): the join stage's
 # whole-stage-codegen method grows past what the JIT compiles, and a
 # 64-term expression evaluated in interpreted generated code loses to the
 # single interpreted HOF loop. Chunked partial sums stay JIT-friendly but
@@ -578,6 +579,9 @@ def _centroid_id_expr(vec: Column, centroids: list[list[float]]) -> Column:
             v = _as_double_sql(_quote(vec))
             return F.expr(_argmin_sql([_sqdist_sql(v, s) for s in sqls]))
         vec = F.col(vec)
+    # _as_double(vec) is re-evaluated per centroid reference; binding it
+    # once via element_at(transform(array(e), ...), 1) measured SLOWER
+    # (+72% here, +45% in pq_encode_expr; 500k x 64-d rows, local[32])
     v = _as_double(vec)
     return _argmin_expr([_sqdist(v, c) for c in centroids])
 
@@ -786,6 +790,7 @@ def pq_encode_expr(vec: Column, codebooks: list[list[list[float]]]) -> Column:
                 parts.append(_argmin_sql([_sqdist_sql(sv, s) for s in cb]))
             return F.expr("array(" + ",".join(parts) + ")")
         vec = F.col(vec)
+    # not let-bound on purpose: see the note in _centroid_id_expr
     v = _as_double(vec)
     parts = []
     for s_i, cb in enumerate(codebooks):

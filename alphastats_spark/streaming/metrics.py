@@ -253,7 +253,7 @@ def session_metrics(
 
 def _stream_banded(
     df: DataFrame, id_col: str, text_col: str, k: int, rows_per_band: int,
-    n: int = 3, sig_family: str | None = None,
+    n: int = 3,
 ) -> DataFrame:
     """Per-row MinHash band rows ``(__id, band, sig)`` for a document
     stream — ``array_min`` over the shingle array, no shuffle, identical
@@ -263,18 +263,12 @@ def _stream_banded(
     subexpression per element, so nesting ``shingles(text)`` inside each
     of the k transforms would re-run the whole tokenization k×|shingles|
     times per row (same trap as functions/dedup._grams_over). For the
-    same reason the affine family's base md5 runs in its OWN projected
-    transform (one digest per shingle) and the k per-hash transforms do
-    plain integer arithmetic over the hashed array — the streaming twin
-    of the batch ``dedup._sigs_over_shingles`` structure.
-    ``sig_family`` must match whatever built the table this stream joins
-    against (``dedup.SIG_FAMILY`` default; ``"md5"`` for pre-r13
-    indexes, ``"xxh31"`` for indexes built with the cheaper non-oracle
-    family — callers resolve it from the index meta)."""
+    same reason the base md5 runs in its OWN projected transform (one
+    digest per shingle) and the k per-hash transforms do plain integer
+    arithmetic over the hashed array — the streaming twin of the batch
+    ``dedup._sigs_over_shingles`` structure."""
     from alphastats_spark.functions import dedup as _dedup
 
-    if sig_family is None:
-        sig_family = _dedup.SIG_FAMILY
     id_type = df.schema[id_col].dataType.typeName()
     if id_type not in ("byte", "short", "integer", "long"):
         # a string/uuid id would cast to null and silently join nothing —
@@ -323,41 +317,20 @@ def _stream_banded(
         F.col("__id"), _dedup._grams_over(F.col("__toks"), n).alias("__sh")
     )
 
-    if sig_family == "md5":
-        def mh(j: int) -> Column:
-            prefix = f"seed{j}:"
-            # unary lambda — F.transform would pass the array index to a
-            # 2-arg one
-            return F.array_min(
-                F.transform(
-                    F.col("__sh"), lambda s: F.md5(F.concat(F.lit(prefix), s))
-                )
-            )
-    else:
-        if sig_family not in ("affine31", "xxh31"):
-            raise ValueError(f"unknown MinHash signature family {sig_family!r}")
-        # one base digest per shingle, projected once; each mh(j) is then
-        # k-cheap integer arithmetic over the SAME hashed array. The
-        # lambda must stay UNARY: minhash_base_hash takes a family
-        # parameter now, and F.transform passes the array index to a
-        # 2-parameter function
-        fam = sig_family
-        base = base.select(
-            "__id",
-            F.transform(
-                F.col("__sh"), lambda s: _dedup.minhash_base_hash(s, fam)
-            ).alias("__sh"),
-        )
-        coeffs = _dedup._affine_coeffs(k)
-        p = F.lit(_dedup.MINHASH_PRIME)
+    # one base digest per shingle, projected once; each mh(j) is then
+    # k-cheap integer arithmetic over the SAME hashed array
+    base = base.select(
+        "__id",
+        F.transform(F.col("__sh"), _dedup.minhash_base_hash).alias("__sh"),
+    )
+    coeffs = _dedup._affine_coeffs(k)
+    p = F.lit(_dedup.MINHASH_PRIME)
 
-        def mh(j: int) -> Column:
-            a, b_ = coeffs[j]
-            return F.array_min(
-                F.transform(
-                    F.col("__sh"), lambda h: (F.lit(a) * h + F.lit(b_)) % p
-                )
-            )
+    def mh(j: int) -> Column:
+        a, b_ = coeffs[j]
+        return F.array_min(
+            F.transform(F.col("__sh"), lambda h: (F.lit(a) * h + F.lit(b_)) % p)
+        )
 
     n_bands = k // rows_per_band
     band_structs = [
@@ -419,23 +392,23 @@ def streaming_index_candidates(
     Stream bands MUST be hashed with the index's build parameters or no
     collision ever fires (every near-dup silently admitted): pass
     ``index_path`` to load ``k``/``rows_per_band``/``n`` (the shingle
-    width) AND the signature hash family from the stored meta (stored
-    values win over module defaults, so an index built under older
-    defaults — or the pre-r13 md5 family — keeps colliding correctly
-    after a default flip; explicit mismatches fail loudly). Without it,
-    ``None`` falls back to the library-wide defaults
-    ``dedup.MINHASH_K``/``dedup.ROWS_PER_BAND``/3 and
-    ``dedup.SIG_FAMILY`` that ``write_dedup_index`` also uses, so the
-    two stay in lockstep when a global constant changes.
+    width) from the stored meta (stored values win over module defaults,
+    so an index built under older defaults keeps colliding correctly
+    after a default flip; explicit mismatches fail loudly). An index
+    whose meta is missing or records a signature family other than
+    ``"affine31"`` raises and must be rebuilt with ``write_dedup_index``.
+    Without ``index_path``, ``None`` falls back to the library-wide
+    defaults ``dedup.MINHASH_K``/``dedup.ROWS_PER_BAND``/3 that
+    ``write_dedup_index`` also uses, so the two stay in lockstep when a
+    global constant changes.
 
     .. warning:: That no-``index_path`` fallback means a bands frame
-       from an index built under OLDER defaults — notably any pre-r13
-       index, whose signatures are md5-family — never collides with the
-       stream's affine31 banding: zero candidates, every near-duplicate
-       admitted, no error. The r13 md5 → affine31 default flip makes
-       this a live migration hazard, so the call emits a ``UserWarning``
-       pointing at ``index_path`` (which resolves the stored family and
-       is the safe form for any materialized index).
+       from an index built with a different ``k`` or ``rows_per_band``
+       never collides with the stream's banding: zero candidates, every
+       near-duplicate admitted, no error. The call therefore emits a
+       ``UserWarning`` pointing at ``index_path`` (which resolves the
+       stored parameters and is the safe form for any materialized
+       index).
     """
     import warnings
 
@@ -445,14 +418,12 @@ def streaming_index_candidates(
         warnings.warn(
             "streaming_index_candidates called with index_bands but no "
             "index_path: the stream is banded with CURRENT module "
-            "defaults (signature family "
-            f"{dedup.SIG_FAMILY!r}, k={k if k is not None else dedup.MINHASH_K}, "
+            f"defaults (k={k if k is not None else dedup.MINHASH_K}, "
             f"rows_per_band={rows_per_band if rows_per_band is not None else dedup.ROWS_PER_BAND}). "
-            "If the bands frame comes from an index built under "
-            "different parameters — any pre-r13 index is md5-family — "
-            "NO candidate ever fires and every near-duplicate is "
-            "silently admitted. Pass index_path to resolve the stored "
-            "parameters instead.",
+            "If the bands frame comes from an index built with a "
+            "different k or rows_per_band, NO candidate ever fires and "
+            "every near-duplicate is silently admitted. Pass index_path "
+            "to resolve the stored parameters instead.",
             UserWarning,
             stacklevel=2,
         )
@@ -461,14 +432,12 @@ def streaming_index_candidates(
         if index_path is not None
         else None
     )
-    k, rows_per_band, n, family = dedup._resolve_index_params(
+    k, rows_per_band, n = dedup._resolve_index_params(
         meta, k, rows_per_band, n, allow_defaults=index_path is None
     )
     if max_band_bucket == _USE_MODULE_DEFAULT:
         max_band_bucket = dedup.MAX_BAND_BUCKET
-    banded = _stream_banded(
-        stream_df, id_col, text_col, k, rows_per_band, n, sig_family=family
-    )
+    banded = _stream_banded(stream_df, id_col, text_col, k, rows_per_band, n)
     idx = index_bands.select(
         F.col("match_id").cast("long").alias("match_id"), "band", "sig"
     )

@@ -479,109 +479,6 @@ def run_band_ab(spark, sizes=(2_000_000, 5_000_000)) -> list[dict]:
     return results
 
 
-def run_signature_ab(spark, sizes=(2_000_000, 5_000_000)) -> list[dict]:
-    """A/B the MinHash signature HASH FAMILIES at the shipped banding
-    ((24, 3, 8), cap 25) — the r12 verdict item 1: the legacy family ran
-    k=24 independent md5 digests per (doc, shingle) row, the dominant
-    per-row cost of the signature stage at corpus scale; the affine31
-    family hashes each shingle once and derives the 24 min-hashes with
-    plain 64-bit arithmetic.
-
-    Per (size, family): the SIGNATURE-STAGE wall in isolation (the
-    signature aggregate is persisted and counted before candidates are
-    generated — in run_band_ab that cost is folded into t_candidates),
-    then candidate/verify walls and counts. Recall is relative to the
-    union of both families' verified sets (each verification is exact,
-    so each set lower-bounds the truth); the two families band different
-    minhash collisions, so candidate sets differ slightly — the claim
-    under test is equal recall at a much cheaper signature stage, not
-    identical candidates."""
-    from pyspark.sql import functions as F
-
-    from alphastats_spark.functions import dedup
-    from alphastats_spark.functions.text import hash_key60
-    from alphastats_spark.operators import ordered
-
-    results = []
-    for n_docs in sizes:
-        docs = synth_docs(spark, n_docs).persist()
-        docs.count()
-        point: dict = {"n_docs": n_docs, "k": 24, "rows_per_band": 3,
-                       "max_band_bucket": dedup.MAX_BAND_BUCKET,
-                       **load_stamp(), "families": {}}
-        with ordered.pass_cache_scope():
-            sh = ordered.persist_tracked(
-                dedup._exploded_shingles(docs, "doc_id", "text", 3)
-            )
-            point["n_shingle_rows"] = sh.count()
-            a = sh.select(
-                F.col("doc_id").alias("id_a"),
-                hash_key60(F.col("shingle")).alias("shingle"),
-            )
-            b = sh.select(
-                F.col("doc_id").alias("id_b"),
-                hash_key60(F.col("shingle")).alias("shingle"),
-            )
-            verified_frames = {}
-            for family in ("md5", "affine31"):
-                row: dict = {**load_stamp()}
-                t0 = time.time()
-                sigs = ordered.persist_tracked(dedup._sigs_over_shingles(
-                    sh, "doc_id", 24, family,
-                    extra_aggs=(F.count(F.lit(1)).alias("__nsh"),),
-                ))
-                row["n_docs_signed"] = sigs.count()
-                row["t_signature"] = round(time.time() - t0, 2)
-                t0 = time.time()
-                cands = ordered.persist_tracked(
-                    dedup._candidates_from_sigs(
-                        sigs, "doc_id", 24, 3, dedup.MAX_BAND_BUCKET,
-                        size_col="__nsh", size_ratio=0.5,
-                    ).select("id_a", "id_b", "size_a", "size_b")
-                )
-                row["n_candidates"] = cands.count()
-                row["t_candidates"] = round(time.time() - t0, 2)
-                t0 = time.time()
-                common = (
-                    cands.select("id_a", "id_b")
-                    .join(a, "id_a")
-                    .join(b, ["id_b", "shingle"])
-                    .groupBy("id_a", "id_b")
-                    .agg(F.count(F.lit(1)).alias("common"))
-                )
-                ver = ordered.persist_tracked(
-                    common.join(cands, ["id_a", "id_b"])
-                    .where(
-                        F.round(
-                            F.col("common")
-                            / (F.col("size_a") + F.col("size_b")
-                               - F.col("common")),
-                            7,
-                        )
-                        >= 0.5
-                    )
-                    .select("id_a", "id_b")
-                )
-                row["n_verified"] = ver.count()
-                row["t_verify"] = round(time.time() - t0, 2)
-                verified_frames[family] = ver
-                point["families"][family] = row
-                print(f"  signature_ab[{n_docs}] {family}: {row}", flush=True)
-            union = None
-            for ver in verified_frames.values():
-                union = ver if union is None else union.unionByName(ver)
-            n_union = union.distinct().count()
-            point["n_verified_union"] = n_union
-            for family, row in point["families"].items():
-                row["recall_vs_union"] = round(
-                    row["n_verified"] / n_union, 5
-                ) if n_union else None
-        docs.unpersist()
-        print(f"  signature_ab[{n_docs}] union={n_union}", flush=True)
-        results.append(point)
-    return results
-
-
 def run_cap_sweep(
     spark, k: int = 24, r: int = 3,
     caps=(200, 100, 50, 25),
@@ -1085,11 +982,9 @@ def main() -> None:
     band_ab = "--band-ab" in sys.argv  # r12: banding-family A/B at 2M/5M
     cap_sweep = "--cap-sweep" in sys.argv  # r12: MAX_BAND_BUCKET sweep
     curation = "--curation" in sys.argv  # r12: curate_corpus probe 500k/1M
-    sig_ab = "--signature-ab" in sys.argv  # r13: md5 vs affine31 at 2M/5M
     tfidf_pairs = "--tfidf-pairs" in sys.argv  # r14: pairs join cap sweep
     stages = stages or deep4
-    deep3 = (deep3 or stages or band_ab or curation or cap_sweep or sig_ab
-             or tfidf_pairs)
+    deep3 = deep3 or stages or band_ab or curation or cap_sweep or tfidf_pairs
     deep = deep or deep3
 
     # 16g driver heap: the 10x shingle/band self-joins spill-OOM local-mode's
@@ -1113,11 +1008,6 @@ def main() -> None:
 
     if band_ab:
         print(json.dumps({"banding_ab": run_band_ab(spark),
-                          "stamp_presession": pre_stamp}))
-        return
-
-    if sig_ab:
-        print(json.dumps({"signature_ab": run_signature_ab(spark),
                           "stamp_presession": pre_stamp}))
         return
 

@@ -2085,6 +2085,7 @@ def test_admit_band_bucket_cap(spark):
     small explicit cap suppresses the mega-bucket's matches; None
     restores them."""
     from alphastats_spark.functions import dedup
+    from alphastats_spark.functions.text import hash_key60
 
     corpus = spark.createDataFrame(
         [(i, "alpha beta gamma delta epsilon zeta") for i in range(12)],
@@ -2095,7 +2096,9 @@ def test_admit_band_bucket_cap(spark):
     )
 
     def run(cap):
-        sh_n = dedup._exploded_shingles(batch, "doc_id", "text", 3, out_id="new_id")
+        sh_n = dedup._exploded_shingles(
+            batch, "doc_id", "text", 3, out_id="new_id"
+        ).withColumn("__h60", hash_key60(F.col("shingle")))
         sh_o = dedup._exploded_shingles(corpus, "doc_id", "text", 3, out_id="match_id")
         bn = dedup._band_table(
             sh_n.groupBy("new_id").agg(*dedup.minhash_signature_cols(8)), "new_id", 8, 2
@@ -2205,12 +2208,11 @@ def test_affine_table_frozen_values():
 
 
 def test_minhash_affine_family(spark):
-    """The r13 affine family: coefficients are deterministic with the
+    """The affine family: coefficients are deterministic with the
     k-prefix property (k=12's coeffs are k=24's first 12, so banding
     subsets stay consistent), signature values are BIGINTs below the
-    prime, the structural one-md5 helper matches the inline expression
-    path, and the legacy md5 family still produces the pre-r13 hex
-    strings."""
+    prime, and the structural one-md5 helper matches the inline
+    expression path."""
     from alphastats_spark.functions import dedup
 
     c24, c12 = dedup._affine_coeffs(24), dedup._affine_coeffs(12)
@@ -2235,16 +2237,6 @@ def test_minhash_affine_family(spark):
         for r in sh.groupBy("doc_id").agg(*dedup.minhash_signature_cols(6)).collect()
     }
     assert inline == rows
-
-    # legacy family: md5 hex strings, unchanged by the flip
-    legacy = dedup._sigs_over_shingles(sh, "doc_id", 4, family="md5")
-    assert all(f.dataType.typeName() == "string" for f in legacy.schema.fields[1:])
-    lrow = legacy.where("doc_id = 1").collect()[0]
-    assert all(len(v) == 32 and int(v, 16) >= 0 for v in tuple(lrow)[1:])
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="unknown MinHash signature family"):
-        dedup.minhash_signature_cols(4, family="sha9000")
 
 
 def test_streaming_dedup_defaults_follow_module(spark, monkeypatch):

@@ -474,23 +474,22 @@ def test_hash_key60_engine_parity(spark, values):
         assert got_spark[v] == expect_py == got_duck, (v, got_spark[v], expect_py, got_duck)
 
 
-@pytest.mark.parametrize("family", ["affine31", "xxh31"])
+@pytest.mark.parametrize("family", ["affine31"])
 def test_affine_minhash_estimator_quality(spark, family):
-    """End-to-end min-wise property of the affine-transform families:
+    """End-to-end min-wise property of the affine-transform family:
     over a seeded corpus of document pairs with known Jaccard, the k=24
     signature agreement fraction estimates true Jaccard within the
     binomial noise envelope (σ = √(J(1−J)/k) ≈ 0.1) on average — the
     property the whole LSH pipeline rests on, checked through the REAL
     signature path, not a unit mock. A broken hash family (biased, or
-    collapsing shingles) fails the mean-error bound immediately.
-    ``xxh31`` (the cheaper opt-in family) has NO DuckDB oracle, so this
-    property pin is its entire correctness story — keep it honest."""
+    collapsing shingles) fails the mean-error bound immediately."""
     import random
 
     from pyspark.sql import functions as F
 
     from alphastats_spark.functions import dedup
 
+    assert dedup.SIG_FAMILY == family
     rng = random.Random(42)
     vocab = [f"w{i}" for i in range(400)]
     rows, truth = [], {}
@@ -514,7 +513,7 @@ def test_affine_minhash_estimator_quality(spark, family):
         sets.setdefault(r["doc_id"], set()).add(r["shingle"])
     sigs = {
         r["doc_id"]: tuple(r)[1:]
-        for r in dedup.minhash_signatures(docs, k=24, family=family).collect()
+        for r in dedup.minhash_signatures(docs, k=24).collect()
     }
     errs = []
     for (a_id, b_id) in truth:

@@ -1239,113 +1239,53 @@ def test_index_meta_single_row_on_append(spark, tmp_path):
         dedup.read_index_meta(spark, path)
 
 
-def _legacy_md5_index(spark, docs, path, k=8, rows_per_band=2, n=3,
-                      write_meta=True):
-    """Simulate an index written by PRE-r13 code: md5-family band
-    signatures, and (when present) a meta row WITHOUT sig_family —
-    byte-for-byte what write_dedup_index produced before the affine
-    family and the (8, 2) → (24, 3) default flip."""
-    from alphastats_spark.functions import dedup
-
-    sh = dedup._exploded_shingles(docs, "doc_id", "text", n, out_id="match_id")
-    dedup._band_table(
-        dedup._sigs_over_shingles(sh, "match_id", k, family="md5"),
-        "match_id", k, rows_per_band,
-    ).write.partitionBy("band").parquet(f"{path}/bands")
-    sh.write.parquet(f"{path}/shingles")
-    if write_meta:
-        spark.createDataFrame(
-            [(k, rows_per_band, n, 1)],
-            "k int, rows_per_band int, n int, version int",
-        ).coalesce(1).write.json(f"{path}/meta")
-
-
-def test_legacy_md5_index_admits_via_stored_meta(spark, tmp_path):
-    """An index written BEFORE the r13 family flip (md5 signatures, (8,2)
-    banding, meta without sig_family) must keep admitting correctly with
-    NO explicit parameters: stored meta wins over the moved module
-    defaults ((8,2) → (24,3), md5 → affine31). If the reader resolved
-    module defaults instead, the batch's band signatures would live in a
-    different hash universe than the stored corpus's — zero collisions,
-    every near-duplicate silently admitted — which is exactly what the
-    exact-duplicate assertions below would catch."""
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("meta_kind", ["md5", "xxh31", "absent", "metaless"])
+def test_non_affine_index_requires_rebuild(spark, tmp_path, meta_kind):
+    """affine31 is the only MinHash signature family. An index whose meta
+    records another family ("md5", "xxh31"), records none ("absent"), or
+    that has no meta at all ("metaless") was hashed by a family this
+    runtime cannot reproduce: banding a batch against it would yield zero
+    collisions and silently admit every near-duplicate. Each reader —
+    batch admit, the streaming candidates with index_path, and an append
+    write — must refuse it and name the rebuild, even when the caller
+    passes the build parameters explicitly."""
+    import shutil
 
     from alphastats_spark.functions import dedup
-
-    corpus = _tiny_docs(spark).where("doc_id % 5 != 0")
-    path = str(tmp_path / "legacy_idx")
-    _legacy_md5_index(spark, corpus, path)
-
-    # batch: two EXACT copies of corpus texts (collide in every band
-    # under ANY correct family) + one novel document
-    batch = spark.createDataFrame(
-        [
-            (1001, " ".join(f"tok{(1 * 13 + j * 7) % 23}" for j in range(12))),
-            (1002, " ".join(f"tok{(2 * 13 + j * 7) % 23}" for j in range(12))),
-            (1003, " ".join(f"novel{j}" for j in range(12))),
-        ],
-        "doc_id bigint, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in dedup.admit_against_index(batch, path, threshold=0.5).collect()
-    }
-    assert not out[1001]["admitted"] and out[1001]["best_jaccard"] == 1.0
-    assert not out[1002]["admitted"] and out[1002]["best_jaccard"] == 1.0
-    assert out[1003]["admitted"]
-
-    # the streaming reader resolves the same stored meta (family included)
     from alphastats_spark.streaming import streaming_index_candidates
 
-    src = str(tmp_path / "legacy_stream_src")
-    batch.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
-    bands = spark.read.parquet(f"{path}/bands")
-    name = "legacy_idx_stream_q"
-    sq = (
-        streaming_index_candidates(stream, bands, index_path=path)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
+    docs = _tiny_docs(spark)
+    path = str(tmp_path / f"{meta_kind}_idx")
+    dedup.write_dedup_index(docs, path, k=8, rows_per_band=2, n=3)
+    if meta_kind == "metaless":
+        shutil.rmtree(f"{path}/meta")
+    elif meta_kind == "absent":
+        spark.createDataFrame(
+            [(8, 2, 3, 1)], "k int, rows_per_band int, n int, version int"
+        ).coalesce(1).write.mode("overwrite").json(f"{path}/meta")
+    else:
+        spark.createDataFrame(
+            [(8, 2, 3, 2, meta_kind, dedup._affine_checksum(8))],
+            "k int, rows_per_band int, n int, version int, "
+            "sig_family string, sig_coeffs string",
+        ).coalesce(1).write.mode("overwrite").json(f"{path}/meta")
+    params = {"k": 8, "rows_per_band": 2, "n": 3}
+
+    with pytest.raises(ValueError, match="Rebuild the index"):
+        dedup.admit_against_index(docs.limit(3), path, **params)
+    with pytest.raises(ValueError, match="Rebuild the index"):
+        dedup.admit_against_index(docs.limit(3), path)
+    stream = (
+        spark.readStream.format("rate").load()
+        .selectExpr("value as doc_id", "cast(value as string) as text")
     )
-    sq.awaitTermination(120)
-    got = {
-        r["new_id"]
-        for r in spark.table(name).select("new_id").distinct().collect()
-    }
-    assert {1001, 1002} <= got and 1003 not in got
-
-
-def test_metaless_index_requires_explicit_params(spark, tmp_path):
-    """A PRE-METADATA index (no <path>/meta at all) must not silently
-    resolve to module defaults — defaults move across releases, and a
-    mismatched family/banding yields zero collisions (every near-dup
-    admitted). No params → raise; explicit legacy params → correct
-    admission via the md5 family."""
-    from alphastats_spark.functions import dedup
-
-    corpus = _tiny_docs(spark).where("doc_id % 5 != 0")
-    path = str(tmp_path / "metaless_idx")
-    _legacy_md5_index(spark, corpus, path, write_meta=False)
-
-    batch = spark.createDataFrame(
-        [(1001, " ".join(f"tok{(1 * 13 + j * 7) % 23}" for j in range(12)))],
-        "doc_id bigint, text string",
-    )
-    with pytest.raises(ValueError, match="no <path>/meta|explicit"):
-        dedup.admit_against_index(batch, path)
-    # a PARTIAL explicit set is the same hazard: the missing parameters
-    # would fill from CURRENT module defaults, which move across releases
-    # (r12 flipped rows_per_band 2 → 3) — k=8 explicit + defaulted
-    # rows_per_band yields a wrong band table with no error
-    with pytest.raises(ValueError, match="rows_per_band, n"):
-        dedup.admit_against_index(batch, path, k=8)
-    with pytest.raises(ValueError, match="no <path>/meta"):
-        dedup.admit_against_index(batch, path, k=8, rows_per_band=2)
-    row = dedup.admit_against_index(
-        batch, path, k=8, rows_per_band=2, n=3
-    ).collect()[0]
-    assert not row["admitted"] and row["best_jaccard"] == 1.0
+    with pytest.raises(ValueError, match="Rebuild the index"):
+        streaming_index_candidates(
+            stream, spark.read.parquet(f"{path}/bands"), index_path=path,
+            **params,
+        )
+    with pytest.raises(ValueError, match="Rebuild the index"):
+        dedup.write_dedup_index(docs, path, mode="append", **params)
 
 
 def test_index_meta_coeffs_checksum(spark, tmp_path):
@@ -1384,84 +1324,12 @@ def test_index_meta_coeffs_checksum(spark, tmp_path):
     assert dedup.admit_against_index(docs.limit(5), path).count() == 5
 
 
-def test_xxh31_index_roundtrip(spark, tmp_path):
-    """The opt-in xxh31 family (xxhash64 base hash feeding the same
-    frozen affine transforms): an index built with it records the family
-    AND the coefficient checksum in meta, batch admit resolves the stored
-    family (exact copies collide in every band; novel docs admit), the
-    streaming reader threads the family through its banding, a
-    conflicting-family append raises, and 'md5' is read-only legacy."""
-    from alphastats_spark.functions import dedup
-    from alphastats_spark.streaming import streaming_index_candidates
-
-    corpus = _tiny_docs(spark).where("doc_id % 5 != 0")
-    path = str(tmp_path / "xxh_idx")
-    dedup.write_dedup_index(
-        corpus, path, k=8, rows_per_band=2, n=3, sig_family="xxh31"
-    )
-    meta = dedup.read_index_meta(spark, path)
-    assert meta.sig_family == "xxh31"
-    assert meta.sig_coeffs == dedup._affine_checksum(8)
-
-    batch = spark.createDataFrame(
-        [
-            (1001, " ".join(f"tok{(1 * 13 + j * 7) % 23}" for j in range(12))),
-            (1003, " ".join(f"novel{j}" for j in range(12))),
-        ],
-        "doc_id bigint, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in dedup.admit_against_index(batch, path, threshold=0.5).collect()
-    }
-    assert not out[1001]["admitted"] and out[1001]["best_jaccard"] == 1.0
-    assert out[1003]["admitted"]
-
-    # the streaming reader resolves the stored xxh31 family from meta
-    src = str(tmp_path / "xxh_stream_src")
-    batch.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
-    bands = spark.read.parquet(f"{path}/bands")
-    name = "xxh_idx_stream_q"
-    sq = (
-        streaming_index_candidates(stream, bands, index_path=path)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    sq.awaitTermination(120)
-    got = {
-        r["new_id"]
-        for r in spark.table(name).select("new_id").distinct().collect()
-    }
-    assert 1001 in got and 1003 not in got
-
-    # conflicting explicit family on append raises; md5 builds are legacy
-    with pytest.raises(ValueError, match="does not match the index"):
-        dedup.write_dedup_index(
-            corpus, path, k=8, rows_per_band=2, n=3,
-            mode="append", sig_family="affine31",
-        )
-    with pytest.raises(ValueError, match="read-only legacy"):
-        dedup.write_dedup_index(
-            corpus, str(tmp_path / "md5_idx"), sig_family="md5"
-        )
-    # signature values live in the same [0, p) universe but are a
-    # DIFFERENT hash family — they must not accidentally equal affine31's
-    aff = dedup.minhash_signatures(corpus.limit(3), k=4).collect()
-    xxh = dedup.minhash_signatures(corpus.limit(3), k=4, family="xxh31").collect()
-    assert all(
-        0 <= v < dedup.MINHASH_PRIME for r in xxh for v in tuple(r)[1:]
-    )
-    assert [tuple(r)[1:] for r in aff] != [tuple(r)[1:] for r in xxh]
-
-
 def test_streaming_index_bands_without_path_warns(spark, tmp_path):
     """streaming_index_candidates with index_bands but NO index_path bands
-    the stream with CURRENT module defaults — against md5-era stored
-    bands that is zero collisions and silent admission of every
-    near-duplicate (the r13 family flip made this a live migration
-    hazard), so the opt-out form must emit a UserWarning naming
-    index_path as the safe alternative."""
+    the stream with CURRENT module defaults — against stored bands built
+    with a different k or rows_per_band that is zero collisions and
+    silent admission of every near-duplicate, so the opt-out form must
+    emit a UserWarning naming index_path as the safe alternative."""
     from alphastats_spark.functions import dedup
     from alphastats_spark.streaming import streaming_index_candidates
 
