@@ -28,8 +28,6 @@ All hashes are md5-derived so each operator has an exact DuckDB oracle.
 
 from __future__ import annotations
 
-import threading as _threading
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1527,9 +1525,7 @@ def duplicate_clusters(
     # the returned frame stays cached (callers branch over it); register it
     # so release_pass_caches / pass_cache_scope can free it — a bare
     # persist() here leaked one labels frame per deduplicate() call
-    # (already persisted above, so _persist_pass would double-persist;
-    # append the registry entry shape directly)
-    _ordered._PASS_CACHES.append((_threading.get_ident(), labels))
+    _ordered.track_pass_cache(labels)
     return labels.select("id", "cluster_id")
 
 

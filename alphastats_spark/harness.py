@@ -225,8 +225,9 @@ def _report_col_ctes(t: str, col: str) -> str:
     islands, calendar buckets, streak islands and the ~45 scalar aggregates
     the report renders for column ``col`` of the joined frame ``jf``.
     Every scalar is aliased ``{t}_*`` so two column blocks cross-join
-    safely into one 1-row frame. Mirrors reports._column_aggs /
-    _calendar_agg / islands.drawdown_episode_stats exactly."""
+    safely into one 1-row frame. Computes the same values as
+    reports._column_leaves with reports._derive_column, reports._calendar_agg
+    and islands.drawdown_episode_stats."""
     z95 = repr(_Z95)
     return f""",
 w_{t} AS (SELECT d, {col} AS r, EXP(SUM(LN(1 + {col})) OVER (ORDER BY d)) AS w FROM jf),

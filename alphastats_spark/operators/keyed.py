@@ -63,7 +63,7 @@ def add_prefix_columns_keyed(
     # persisted for the same single-execution reason as the keyless
     # ordered.add_prefix_columns: the offsets branch below re-consumes this
     # frame, and column pruning defeats ReuseExchange between the branches
-    df = ordered_mod._persist_pass(df.select("*", *within_cols))
+    df = ordered_mod.persist_tracked(df.select("*", *within_cols))
 
     aggs = [F.sum(col).alias(out) for out, col in sums.items()]
     aggs += [F.max(col).alias(out) for out, col in maxes.items()]

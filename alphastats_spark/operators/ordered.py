@@ -29,6 +29,7 @@ still correct (sign-flip / collapse-to-zero) beyond that.
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
@@ -48,22 +49,36 @@ _TEMPORAL_TYPES = (T.DateType, T.TimestampType, T.TimestampNTZType)
 # APIs intentionally do NOT auto-release: the cache must outlive the
 # caller's eventual action, and repeated identical queries legitimately
 # re-hit it via plan canonicalization.
-# DataFrames (persist_tracked) and _CheckpointHandle shims
-# (local_checkpoint_tracked) — release only ever calls .unpersist().
-# Entries are (owner thread ident, cache): mark-based release stays
-# position-based and cross-thread (bench/report semantics), while
-# pass_cache_scope releases only its own thread's registrations so
-# scopes overlapped across a driver thread pool (concurrent index
-# appends, guide §2.6) cannot release each other's live caches.
+# Entries are (token, owner thread ident, cache); a cache is a DataFrame
+# or a _CheckpointHandle shim — release only ever calls .unpersist().
+# Driver thread pools register concurrently (report passes, index
+# appends), so every read and write holds _PASS_LOCK, and entries are
+# identified by their token, drawn from a counter that never repeats —
+# not by list position (shifted by concurrent releases) or id() (reused
+# once a released cache is garbage collected).
 _PASS_CACHES: list = []
+_PASS_LOCK = threading.Lock()
+_next_token = 0
 
 
-def _persist_pass(df: DataFrame) -> DataFrame:
-    import threading
+class _Mark(int):
+    """A registry mark: as an int, the number of live pass caches when it
+    was taken; ``token`` is the token the next registration receives."""
 
-    df = df.persist()
-    _PASS_CACHES.append((threading.get_ident(), df))
-    return df
+    def __new__(cls, live: int, token: int):
+        mark = super().__new__(cls, live)
+        mark.token = token
+        return mark
+
+
+def track_pass_cache(cache) -> None:
+    """Register an already-persisted frame (or any object with
+    ``unpersist()``) for release by :func:`release_pass_caches` and
+    :func:`pass_cache_scope`."""
+    global _next_token
+    with _PASS_LOCK:
+        _PASS_CACHES.append((_next_token, threading.get_ident(), cache))
+        _next_token += 1
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
@@ -76,24 +91,37 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     explode four times before this. Registering here (instead of a bare
     ``persist()``) lets fully-materializing callers release every cache a
     query created with one :func:`release_pass_caches` call."""
-    return _persist_pass(df)
+    df = df.persist()
+    track_pass_cache(df)
+    return df
 
 
-def pass_cache_mark() -> int:
-    """Registry position; pass to :func:`release_pass_caches` to release
-    only the caches created after this point (scoped cleanup)."""
-    return len(_PASS_CACHES)
+def pass_cache_mark() -> _Mark:
+    """Registry mark; pass to :func:`release_pass_caches` to release only
+    the caches registered after this point (scoped cleanup). Compared as
+    an int it is the number of live pass caches."""
+    with _PASS_LOCK:
+        return _Mark(len(_PASS_CACHES), _next_token)
+
+
+def _release(drop) -> None:
+    """Unregister every entry ``drop(token, owner)`` selects, atomically,
+    then unpersist them outside the lock (unpersist is a JVM call)."""
+    with _PASS_LOCK:
+        gone = [e for e in _PASS_CACHES if drop(e[0], e[1])]
+        _PASS_CACHES[:] = [e for e in _PASS_CACHES if not drop(e[0], e[1])]
+    for _token, _owner, cache in gone:
+        cache.unpersist()
 
 
 def release_pass_caches(from_mark: int = 0) -> None:
-    """Unpersist prefix-pass caches created since ``from_mark`` (all, by
-    default), whichever thread registered them. Only call once every query
-    derived from them has been fully materialized; not safe against other
-    threads still building plans."""
-    tail = _PASS_CACHES[from_mark:]
-    del _PASS_CACHES[from_mark:]
-    for _owner, df in tail:
-        df.unpersist()
+    """Unpersist pass caches registered since ``from_mark`` (a
+    :func:`pass_cache_mark`; the default 0 releases every one), whichever
+    thread registered them. Only call once every query derived from them
+    has been fully materialized: a cache another thread registers after
+    the mark is released too."""
+    start = getattr(from_mark, "token", from_mark)
+    _release(lambda token, _owner: token >= start)
 
 
 @contextmanager
@@ -121,22 +149,12 @@ def pass_cache_scope():
     materialize their result inside the block — a DataFrame returned out
     of the scope loses its caches' benefit (it stays CORRECT; the
     lineage simply recomputes)."""
-    import threading
-
     me = threading.get_ident()
-    before = {id(c) for owner, c in _PASS_CACHES if owner == me}
+    start = pass_cache_mark().token
     try:
         yield
     finally:
-        mine = [
-            e for e in _PASS_CACHES if e[0] == me and id(e[1]) not in before
-        ]
-        for e in mine:
-            try:
-                _PASS_CACHES.remove(e)
-            except ValueError:  # already released by a cross-thread sweep
-                continue
-            e[1].unpersist()
+        _release(lambda token, owner: owner == me and token >= start)
 
 
 class _CheckpointHandle:
@@ -172,10 +190,8 @@ def local_checkpoint_tracked(df: DataFrame, eager: bool = True) -> DataFrame:
     checkpoint is fully materialized: the lineage is GONE, so a released
     checkpoint fails loudly (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) instead
     of silently recomputing the way a released persist does."""
-    import threading
-
     ck = df.localCheckpoint(eager=eager)
-    _PASS_CACHES.append((threading.get_ident(), _CheckpointHandle(ck)))
+    track_pass_cache(_CheckpointHandle(ck))
     return ck
 
 
@@ -325,7 +341,7 @@ def add_ordered_columns(
     if lags:
         # bucket-first marker for the lag boundary fill; rides the same sort
         within.append(f"row_number() {_W_PLAIN} AS __as_rn")
-    df = _persist_pass(df.selectExpr("*", *within))
+    df = persist_tracked(df.selectExpr("*", *within))
 
     o = _q(ORDER_COL)
     aggs = [F.expr(f"max_by({_q(out + '__in')}, {o})").alias(out) for out in sums]
@@ -498,7 +514,7 @@ def _drawdown_fused(
         win2.append(
             f"max(CASE WHEN {nn} THEN 1 END) {_W_CUM} AS {_q(out + '__na')}"
         )
-    df = _persist_pass(df.selectExpr("*", *win2))
+    df = persist_tracked(df.selectExpr("*", *win2))
 
     # ---- ONE bucket aggregate (sums totals + peak-class totals + extras)
     aggs = []

@@ -10,17 +10,26 @@ table in the legacy QuantStats row order
 Execution parity is deliberately NOT kept: the reference evaluates each cell
 as its own ``collect()`` (``reports.py:397-447``) — O(rows×columns)
 mini-queries, hundreds of Spark jobs if translated naively (SURVEY §3C).
-Here the whole report runs in a fixed small number of Spark jobs regardless
-of column count:
+Here the whole report runs in a fixed set of passes regardless of column
+count (32 Spark jobs for one strategy and a benchmark, including the
+enrichment's prefix passes):
 
 1. one metadata pass (max date, per-column first/last non-null date);
-2. ONE main aggregation pass computing every scalar metric expression for
-   every column — including trailing-window returns as conditional
-   aggregates with literal date bounds, streak lengths via the prefix-max
-   trick, and autocorrelation coefficients for smart ratios;
-3. one dependent pass for CVaR / serenity (literal-injected thresholds);
+2. ONE main aggregation pass over primitive statistics for every column —
+   counts, sums, means, std/var/covar, skew/kurtosis, min/max, exact
+   percentiles, products, with trailing-window returns as conditional
+   products under literal date bounds and streak lengths via the
+   prefix-max trick;
+3. one dependent pass for the leaves that need main-pass values: CVaR and
+   drawdown CVaR (literal-injected thresholds) and the correlations;
 4. one calendar pass per granularity (month / quarter / year);
 5. one gaps-and-islands pass for drawdown episode rows.
+
+Spark aggregates only those leaves; every ratio (sharpe, sortino, Kelly,
+CPC, risk of ruin, beta, …) is derived on the driver from the collected
+row with ``_fdiv``/``_pow``, which reproduce ``expressions.fdiv`` and
+Spark's ``pow`` bit for bit. Nested in-plan ratios made the main pass's
+analysis and optimization cost more than its execution.
 
 Report-only semantics preserved from the reference: NaN→null→**0** fill on
 the series (``reports.py:376-378`` — unlike the raw stats API which keeps
@@ -148,7 +157,7 @@ def metrics(
 
         # ---- enrichment + aggregation, chunked over asset-column groups ------
         # A single pass over a WIDE frame explodes Janino codegen superlinearly
-        # (~35 aggregate expressions per column incl. exact-percentile object
+        # (~50 leaf aggregates per column incl. exact-percentile object
         # aggregates, plus 4 window/prefix expressions per column in the
         # drawdown machinery): measured driver OOM at 30 columns on a 4 GB
         # heap, and minutes of compile time just below that. Processing groups
@@ -159,7 +168,6 @@ def metrics(
         # single-pass.
         chunk = max(1, int(kwargs.get("agg_chunk_columns", 8)))
         main: dict[str, Any] = {}
-        stage2: dict[str, Any] = {}
         episodes: dict[str, dict[str, float]] = {}
 
         # Independent report passes run as CONCURRENT Spark jobs (submitted
@@ -173,18 +181,17 @@ def metrics(
         # job/stage overhead — overlapping them buys wall-clock roughly equal
         # to the sum of the shorter passes, and on a real cluster concurrent
         # small jobs interleave harmlessly under FIFO scheduling.
+        def calendar(granularity):
+            # The meta job materializes the prepared frame's cache. A pass
+            # that reached its scan first would run a cache-materialization
+            # job of its own, so the job count would depend on timing.
+            meta_fut.result()
+            return _calendar_agg(filled, temporal, output_names, granularity, rf)
+
         cal_futs = {}
         if temporal:
-            cal_futs["month"] = pool.submit(
-                _calendar_agg, filled, temporal, output_names, "month", rf
-            )
-            if full:
-                cal_futs["quarter"] = pool.submit(
-                    _calendar_agg, filled, temporal, output_names, "quarter", rf
-                )
-                cal_futs["year"] = pool.submit(
-                    _calendar_agg, filled, temporal, output_names, "year", rf
-                )
+            for granularity in ("month", "quarter", "year") if full else ("month",):
+                cal_futs[granularity] = pool.submit(calendar, granularity)
 
         windows = None
         meta = None
@@ -238,11 +245,11 @@ def metrics(
                     max_ts = max_ts.date()
                 windows = _window_bounds(max_ts) if temporal else None
 
-            aggs: list = []
+            leaves: dict = {}
             for c in group:
-                aggs.extend(_column_aggs(c, rf, compounded, periods_per_year, full, windows))
+                leaves.update(_column_leaves(c, rf, compounded, full, windows))
                 if full and has_bench and c != benchmark_name:
-                    aggs.extend(_bench_aggs(c, benchmark_name))
+                    leaves.update(_bench_leaves(c, benchmark_name))
             mat_fut.result()
 
             # episodes never read the main aggregate — overlap it with the
@@ -253,30 +260,24 @@ def metrics(
                 {c: f"__dd_{c}" for c in group},
                 {c: f"__dd_{c}__pos" for c in group},
             )
-            main.update(rdf.agg(*aggs).first().asDict())
-
-            # dependent pass: CVaR + serenity (serenity is in basic mode too)
-            s2_aggs = []
+            values = _agg_leaves(rdf, leaves)
             for c in group:
-                ddvar = main[f"ddvar_{c}"]
-                if ddvar is not None and not math.isnan(ddvar):
-                    dd = F.col(f"__dd_{c}")
-                    s2_aggs.append(
-                        F.coalesce(
-                            F.mean(X.when_pl(dd < F.lit(ddvar), dd, None)), F.lit(ddvar)
-                        ).alias(f"ddcvar_{c}")
-                    )
+                main.update(
+                    _derive_column(values, c, rf, compounded, periods_per_year, windows)
+                )
+
+            # dependent pass: the leaves whose SQL needs main-pass values
+            s2_leaves: dict = {}
+            for c in group:
+                s2_leaves.update(_stage2_leaves(main, c, full, benchmark_name))
+                main.update(dict.fromkeys((f"ddcvar_{c}", f"acorr_{c}", f"corrb_{c}")))
                 if full:
-                    v = main[f"var_{c}"]
-                    if v is not None and not math.isnan(v):
-                        col = F.col(c)
-                        s2_aggs.append(
-                            F.coalesce(
-                                F.mean(X.when_pl(col < F.lit(v), col, None)), F.lit(v)
-                            ).alias(f"cvar_{c}")
-                        )
-            if s2_aggs:
-                stage2.update(rdf.agg(*s2_aggs).first().asDict())
+                    main[f"cvar_{c}"] = main[f"var_{c}"]
+            if s2_leaves:
+                for (name, c), v in _agg_leaves(rdf, s2_leaves).items():
+                    # a threshold with nothing below it is its own tail mean
+                    threshold = _CVAR_THRESHOLD.get(name)
+                    main[f"{name}_{c}"] = main[f"{threshold}_{c}"] if v is None and threshold else v
             episodes.update(eps_fut.result())
             rdf.unpersist()
             _persisted.remove(rdf)
@@ -330,7 +331,7 @@ def metrics(
         add("Cumulative Return", per_col(lambda c: g("comp", c) * pct))
     else:
         add("Total Return", per_col(lambda c: g("sum", c) * pct))
-    add("CAGR﹪", per_col(lambda c: _cagr_value(main, c, compounded, periods_per_year) * pct))
+    add("CAGR﹪", per_col(lambda c: _cagr_value(main, c, periods_per_year) * pct))
     add_sep()
 
     add("Sharpe", per_col(lambda c: g("sharpe", c)))
@@ -383,10 +384,7 @@ def metrics(
                 lambda c: _calmar_value(main, c, compounded, periods_per_year)
             ),
         )
-        # the Skew/Kurtosis rows read the SAME bias-corrected aggregates
-        # the PSR computation already builds (skew_/kurt_) - the former
-        # skew_corr_/kurt_corr_ aliases were byte-identical duplicates in
-        # the codegen-width-bound aggregate pass
+        # the bias-corrected skew/kurtosis, the same values PSR reads
         add("Skew", per_col(lambda c: g("skew", c)))
         add("Kurtosis", per_col(lambda c: g("kurt", c)))
         add("Expected Daily", per_col(lambda c: g("geo", c) * pct))
@@ -397,7 +395,7 @@ def metrics(
         add("Daily Value-at-Risk", per_col(lambda c: g("var", c) * pct))
         add(
             "Expected Shortfall (cVaR)",
-            per_col(lambda c: _stage2_value(stage2, f"cvar_{c}", main, f"var_{c}") * pct),
+            per_col(lambda c: g("cvar", c) * pct),
         )
         add("Max Consecutive Wins", per_col(lambda c: int(g("cwin", c))))
         add("Max Consecutive Losses", per_col(lambda c: int(g("closs", c))))
@@ -425,16 +423,8 @@ def metrics(
         for c in output_names:
             compv = g(f"w_{key}", c)
             if annualized:
-                n = g(f"wn_{key}", c)
-                base = 1 + compv
-                # negative base ** fractional is a COMPLEX number in
-                # Python (not an exception); Spark's F.pow says NaN -
-                # mirror it (odd count of sub--100% returns in a window)
-                values[c] = (
-                    math.nan
-                    if n == 0 or base < 0
-                    else (base ** (periods_per_year / n) - 1) * pct
-                )
+                years = g(f"wn_{key}", c) / periods_per_year
+                values[c] = (_pow(1 + compv, _fdiv(1.0, years)) - 1) * pct
             else:
                 values[c] = compv * pct
         return values
@@ -451,7 +441,7 @@ def metrics(
     add(
         "All-time (ann.)",
         per_col(
-            lambda c: _cagr_value(main, c, compounded, periods_per_year, rf_key=alltime_key) * pct
+            lambda c: _cagr_value(main, c, periods_per_year, alltime_key) * pct
         ),
     )
 
@@ -471,7 +461,7 @@ def metrics(
     add("Ulcer Index", per_col(lambda c: g("ulcer", c)))
     add(
         "Serenity Index",
-        per_col(lambda c: _serenity_value(main, stage2, c, rf)),
+        per_col(lambda c: _serenity_value(main, c, rf)),
     )
 
     if full:
@@ -491,7 +481,7 @@ def metrics(
             add("Correlation", bench_row(lambda c: g("corrb", c) * pct))
             add(
                 "Treynor Ratio",
-                bench_row(lambda c: (g("comp", c) - rf) / g("beta", c) * pct if g("beta", c) else math.nan),
+                bench_row(lambda c: _fdiv(g("comp", c) - rf, g("beta", c)) * pct),
             )
 
     if numeric:
@@ -579,123 +569,323 @@ def _add_months(d: dt.date, n: int) -> dt.date:
     return d.replace(year=y, month=m, day=min(d.day, _calendar.monthrange(y, m)[1]))
 
 
-_COLUMN_AGGS_CACHE: dict = {}
+def _q(name: str) -> str:
+    """SQL identifier for a column name."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _column_aggs(c, rf, compounded, ppy, full, windows):
-    """Memoized: the returned aggregates are UNRESOLVED Column trees — pure
-    functions of the arguments, frame-agnostic and immutable — but building
-    them costs ~400 py4j round-trips (~0.7s measured), which dominates
-    repeated report calls in one session. Keyed on the JVM application id
-    so a restarted SparkContext can't serve stale JavaObject handles."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    app = sc.applicationId if sc is not None else None
-    wkey = tuple(sorted(windows.items())) if windows else None
-    key = (app, c, rf, compounded, ppy, full, wkey)
-    hit = _COLUMN_AGGS_CACHE.get(key)
-    if hit is not None:
-        return list(hit)
-    out = _column_aggs_build(c, rf, compounded, ppy, full, windows)
-    if len(_COLUMN_AGGS_CACHE) > 256:  # bound: one entry per (asset, params)
-        _COLUMN_AGGS_CACHE.clear()
-    _COLUMN_AGGS_CACHE[key] = out
-    return list(out)
+def _dbl(x: float) -> str:
+    """SQL double literal that reads back as exactly ``x``."""
+    if math.isinf(x):
+        return "double('Infinity')" if x > 0 else "double('-Infinity')"
+    return f"({x!r}D)"
 
 
-def _column_aggs_build(c, rf, compounded, ppy, full, windows):
-    col = F.col(c)
-    dd = F.col(f"__dd_{c}")
-    excess = col - F.lit(float(rf)) if rf else col
-    out = [
-        F.count(col).alias(f"n_{c}"),
-        X.exposure(col).alias(f"exposure_{c}"),
-        X.comp(col).alias(f"comp_{c}"),
-        F.sum(col).alias(f"sum_{c}"),
-        (X.comp(excess) if compounded else F.sum(excess)).alias(f"cagrbase_{c}"),
-        X.sharpe(col, rf, ppy, True).alias(f"sharpe_{c}"),
-        X.sharpe(col, None, ppy, False).alias(f"sr0_{c}"),
-        X.skew(col).alias(f"skew_{c}"),
-        X.kurtosis(col).alias(f"kurt_{c}"),
-        X.sortino(col, rf, ppy, True).alias(f"sortino_{c}"),
-        X.omega(col).alias(f"omega_{c}"),
-        F.min(dd).alias(f"maxdd_{c}"),
-        X.gain_to_pain_ratio(col, rf).alias(f"g2p_{c}"),
-        X.payoff_ratio(col).alias(f"payoff_{c}"),
-        X.profit_factor(col).alias(f"pf_{c}"),
-        X.common_sense_ratio(col).alias(f"csr_{c}"),
-        X.cpc_index(col).alias(f"cpc_{c}"),
-        X.tail_ratio(col).alias(f"tail_{c}"),
-        X.outlier_win_ratio(col).alias(f"outw_{c}"),
-        X.outlier_loss_ratio(col).alias(f"outl_{c}"),
-        X.fdiv(F.abs(F.sum(col)), F.abs(F.min(dd))).alias(f"recov_{c}"),
-        F.sqrt(X.fdiv(F.sum(F.pow(dd, 2)), F.count(col) - 1)).alias(f"ulcer_{c}"),
-        (F.mean(dd) + F.lit(_NORMAL.inv_cdf(0.05)) * F.stddev_samp(dd)).alias(f"ddvar_{c}"),
-        F.stddev_samp(col).alias(f"rstd_{c}"),
-    ]
+# Percentile points and VaR z-scores of expressions.tail_ratio,
+# outlier_*_ratio, value_at_risk and the serenity drawdown VaR: ``1 - 0.95``
+# is 0.050000000000000044, and the leaves must aggregate the same doubles.
+_P_HI, _P_LO, _P_WIN, _P_LOSS = 0.95, 1 - 0.95, 0.99, 0.01
+_Z_VAR = _NORMAL.inv_cdf(1 - 0.95)
+_Z_DDVAR = _NORMAL.inv_cdf(0.05)
+
+
+def _column_leaves(c, rf, compounded, full, windows) -> dict:
+    """Primitive aggregates of column ``c`` for the main pass, keyed
+    ``(leaf, c)``: SQL text, or a Column where Spark SQL has no function
+    (``product``). The report fills nulls before any pass, so the Polars
+    null-propagating when/then of ``expressions`` is a plain CASE here."""
+    q, dd = _q(c), _q(f"__dd_{c}")
+    x = f"({q} - {_dbl(float(rf))})" if rf else q  # excess return
+    sql = {
+        "n": f"count({q})",
+        "nonzero": f"sum(CAST({q} <> 0 AS BIGINT))",
+        "wins": f"sum(CAST({q} > 0 AS BIGINT))",
+        "losses": f"sum(CAST({q} < 0 AS BIGINT))",
+        "sum": f"sum({q})",
+        "mean": f"avg({q})",
+        "std": f"stddev_samp({q})",
+        "skewness": f"skewness({q})",
+        "kurtosis": f"kurtosis({q})",
+        "gains": f"sum(CASE WHEN {q} >= 0 THEN {q} ELSE 0.0D END)",
+        "pains": f"sum(CASE WHEN {q} < 0 THEN {q} ELSE 0.0D END)",
+        "up_mean": f"avg(CASE WHEN {q} > 0 THEN {q} END)",
+        "down_mean": f"avg(CASE WHEN {q} < 0 THEN {q} END)",
+        "nonneg_mean": f"avg(CASE WHEN {q} >= 0 THEN {q} END)",
+        "omega_up": f"sum(greatest({q}, 0.0D))",
+        "omega_down": f"sum(greatest(-{q}, 0.0D))",
+        "p_hi": f"percentile({q}, {_dbl(_P_HI)})",
+        "p_lo": f"percentile({q}, {_dbl(_P_LO)})",
+        "p_win": f"percentile({q}, {_dbl(_P_WIN)})",
+        "p_loss": f"percentile({q}, {_dbl(_P_LOSS)})",
+        "x_sum": f"sum({x})",
+        "x_mean": f"avg({x})",
+        "x_std": f"stddev_samp({x})",
+        "x_pains": f"sum(CASE WHEN {x} < 0 THEN {x} ELSE 0.0D END)",
+        "x_down2": f"avg(pow(CASE WHEN {x} < 0 THEN {x} ELSE 0.0D END, 2))",
+        "maxdd": f"min({dd})",
+        "dd_sumsq": f"sum(pow({dd}, 2))",
+        "dd_mean": f"avg({dd})",
+        "dd_std": f"stddev_samp({dd})",
+    }
     if full:
-        out += [
-            X.volatility(col, ppy, True).alias(f"vol_{c}"),
-            X.expected_return(col).alias(f"geo_{c}"),
-            X.kelly_criterion(col).alias(f"kelly_{c}"),
-            X.risk_of_ruin(col).alias(f"ror_{c}"),
-            X.value_at_risk(col).alias(f"var_{c}"),
-            F.max(col).alias(f"best_{c}"),
-            F.min(col).alias(f"worst_{c}"),
-            X.win_rate(col).alias(f"winrate_{c}"),
-            F.mean(col).alias(f"mean_{c}"),
-            F.corr(col, F.col(f"__prev_{c}")).alias(f"acorr_{c}"),
-            F.coalesce(
-                F.max(
-                    F.when(
-                        col > 0,
-                        F.col("__idx") - F.coalesce(F.col(f"__lbw_{c}"), F.lit(0)),
-                    ).otherwise(F.lit(0))
-                ),
-                F.lit(0),
-            ).alias(f"cwin_{c}"),
-            F.coalesce(
-                F.max(
-                    F.when(
-                        col < 0,
-                        F.col("__idx") - F.coalesce(F.col(f"__lbl_{c}"), F.lit(0)),
-                    ).otherwise(F.lit(0))
-                ),
-                F.lit(0),
-            ).alias(f"closs_{c}"),
-        ]
-    else:
-        out += [
-            X.expected_return(col).alias(f"geo_{c}"),
-        ]
-    if windows:
-        ts = F.col(ordered.ORDER_COL)
-        for key, (kind, bound) in windows.items():
-            if kind == "ym":
-                cond = (F.year(ts) == bound[0]) & (F.month(ts) == bound[1])
-            elif kind == "y":
-                cond = F.year(ts) == bound
-            else:
-                cond = ts.cast("date") >= F.lit(bound)
-            out.append((F.product(F.when(cond, col + 1)) - 1).alias(f"w_{key}_{c}"))
-            if key in ("3y", "5y", "10y"):
-                out.append(F.count(F.when(cond, col)).alias(f"wn_{key}_{c}"))
+        idx, prev = _q("__idx"), _q(f"__prev_{c}")
+        sql.update(
+            best=f"max({q})",
+            worst=f"min({q})",
+            lag_hi=f"max(CASE WHEN {prev} IS NOT NULL THEN {q} END)",
+            lag_lo=f"min(CASE WHEN {prev} IS NOT NULL THEN {q} END)",
+            prev_hi=f"max({prev})",
+            prev_lo=f"min({prev})",
+            cwin=f"coalesce(max(CASE WHEN {q} > 0 THEN {idx} - "
+            f"coalesce({_q(f'__lbw_{c}')}, 0) ELSE 0 END), 0)",
+            closs=f"coalesce(max(CASE WHEN {q} < 0 THEN {idx} - "
+            f"coalesce({_q(f'__lbl_{c}')}, 0) ELSE 0 END), 0)",
+        )
+    leaves = {(k, c): v for k, v in sql.items()}
+    leaves[("growth", c)] = F.product(F.expr(f"{q} + 1"))
+    if compounded and rf:
+        leaves[("x_growth", c)] = F.product(F.expr(f"{x} + 1"))
+    ts = _q(ordered.ORDER_COL)
+    for key, (kind, bound) in (windows or {}).items():
+        if kind == "ym":
+            cond = f"year({ts}) = {bound[0]} AND month({ts}) = {bound[1]}"
+        elif kind == "y":
+            cond = f"year({ts}) = {bound}"
+        else:
+            cond = f"CAST({ts} AS DATE) >= DATE'{bound.isoformat()}'"
+        leaves[(f"wg_{key}", c)] = F.product(F.expr(f"CASE WHEN {cond} THEN {q} + 1 END"))
+        if key in ("3y", "5y", "10y"):
+            leaves[(f"wn_{key}", c)] = f"count(CASE WHEN {cond} THEN {q} END)"
+    return leaves
+
+
+def _bench_leaves(c, bench_name) -> dict:
+    q, b = _q(c), _q(bench_name)
+    return {
+        ("covb", c): f"covar_samp({q}, {b})",
+        ("varb", c): f"var_samp({b})",
+        ("act_mean", c): f"avg({q} - {b})",
+        ("act_std", c): f"stddev_samp({q} - {b})",
+    }
+
+
+# stage-2 leaf -> the main-pass threshold it falls back to
+_CVAR_THRESHOLD = {"ddcvar": "ddvar", "cvar": "var"}
+
+
+def _stage2_leaves(main, c, full, bench_name) -> dict:
+    """Leaves whose SQL needs main-pass values. CVaR and the drawdown CVaR
+    are tail means below a VaR threshold injected as a literal. The
+    correlations are aggregated only where both sides vary: under ANSI
+    division Spark's ``corr`` raises on a zero-variance input rather than
+    returning NULL, so a skipped one stays NULL."""
+
+    def known(v):
+        return v is not None and not math.isnan(v)
+
+    def varies(hi, lo):
+        return known(main[hi]) and known(main[lo]) and main[hi] > main[lo]
+
+    q = _q(c)
+    leaves = {}
+    thresholds = {"ddcvar": (f"__dd_{c}", main[f"ddvar_{c}"])}
+    if full:
+        thresholds["cvar"] = (c, main[f"var_{c}"])
+    for name, (col, t) in thresholds.items():
+        if known(t):
+            leaves[(name, c)] = f"avg(CASE WHEN {_q(col)} < {_dbl(t)} THEN {_q(col)} END)"
+    if full and varies(f"lag_hi_{c}", f"lag_lo_{c}") and varies(f"prev_hi_{c}", f"prev_lo_{c}"):
+        leaves[("acorr", c)] = f"corr({q}, {_q(f'__prev_{c}')})"
+    if (
+        full and bench_name and c != bench_name
+        and varies(f"best_{c}", f"worst_{c}")
+        and varies(f"best_{bench_name}", f"worst_{bench_name}")
+    ):
+        leaves[("corrb", c)] = f"corr({q}, {_q(bench_name)})"
+    return leaves
+
+
+def _agg_leaves(frame: DataFrame, leaves: dict) -> dict:
+    """One aggregation job over ``leaves`` (key -> SQL text or Column);
+    returns key -> collected value. Leaves with the same SQL text (the
+    excess-return leaves when rf is 0, say) are aggregated once."""
+    aliases: dict = {}
+    cols, by_text = [], {}
+    for key, expr in leaves.items():
+        if isinstance(expr, str):
+            if expr not in by_text:
+                by_text[expr] = f"_l{len(cols)}"
+                cols.append(F.expr(expr).alias(by_text[expr]))
+            aliases[key] = by_text[expr]
+        else:
+            aliases[key] = f"_l{len(cols)}"
+            cols.append(expr.alias(aliases[key]))
+    row = frame.agg(*cols).first()
+    return {key: row[alias] for key, alias in aliases.items()}
+
+
+# ---------------------------------------------------------------------------
+# driver-side derivation
+#
+# Every ratio is derived here from the collected leaves instead of inside
+# the Spark plan: expressions.fdiv copies its numerator into 5 CASE
+# branches and its denominator into 3, so ratios of ratios (Kelly, CPC,
+# risk of ruin) grow multiplicatively, and analysing and optimizing those
+# trees cost more than aggregating the frame. Each formula below is the
+# expressions.* formula with the same floating-point operations in the same
+# order, so it returns the same double. Every operation in them is
+# null-intolerant, so SQL NULL propagates through a formula as a whole: it
+# is NULL exactly when one of its leaves is (see _derive).
+
+
+def _fdiv(num: float, den: float) -> float:
+    """expressions.fdiv on doubles: x/0 is ±inf, 0/0 and NaN/0 are NaN."""
+    if den != 0:
+        return num / den
+    if math.isnan(num) or num == 0:
+        return math.nan
+    return math.inf if num > 0 else -math.inf
+
+
+def _pow(base: float, exp: float) -> float:
+    """Spark's pow (``java.lang.Math.pow``) on doubles. It differs from
+    ``math.pow``, which returns 1 for ``pow(1, nan)`` and ``pow(±1, ±inf)``
+    and raises on a zero base with a negative exponent, a negative base
+    with a non-integer exponent, and overflow."""
+    if math.isnan(exp) or (math.isnan(base) and exp != 0):
+        return math.nan
+    if math.isinf(exp) and abs(base) == 1:
+        return math.nan
+    try:
+        return math.pow(base, exp)
+    except (ValueError, OverflowError):
+        pass
+    if base < 0 and not exp.is_integer():
+        return math.nan
+    # a pole (zero base, negative exponent) or an overflow: infinite, negative
+    # for a negative (or -0.0) base under an odd exponent
+    odd = exp.is_integer() and math.fmod(exp, 2) != 0
+    return -math.inf if odd and math.copysign(1, base) < 0 else math.inf
+
+
+def _sqrt(x: float) -> float:
+    """Spark's sqrt: NaN for a negative radicand instead of raising."""
+    return math.sqrt(x) if x >= 0 else math.nan
+
+
+def _derive(values: dict, c, formulas: dict) -> dict:
+    """Column ``c``'s leaves, plus each formula ``name: (fn, *leaf_names)``
+    evaluated over them, keyed ``{name}_{c}``. A formula is None (SQL NULL)
+    when any of its leaves is, as the in-plan expression would be."""
+    out = {f"{name}_{col}": v for (name, col), v in values.items() if col == c}
+    for name, (fn, *names) in formulas.items():
+        args = [values[(leaf, c)] for leaf in names]
+        none = any(a is None for a in args)
+        out[f"{name}_{c}"] = None if none else fn(*(float(a) for a in args))
     return out
 
 
-def _bench_aggs(c, bench_name):
-    col, b = F.col(c), F.col(bench_name)
-    active = col - b
-    return [
-        F.corr(col, b).alias(f"corrb_{c}"),
-        X.fdiv(F.covar_samp(col, b), F.var_samp(b)).alias(f"beta_{c}"),
-        X.fdiv(F.mean(active), F.stddev_samp(active)).alias(f"ir_{c}"),
-    ]
+def _derive_column(values: dict, c, rf, compounded, ppy, windows) -> dict:
+    """The report's per-column scalars, keyed ``{metric}_{c}``, from the main
+    pass's leaves (``_column_leaves`` and ``_bench_leaves``)."""
+    root = ppy**0.5
+
+    def payoff(up_mean, down_mean):
+        return _fdiv(up_mean, abs(down_mean))
+
+    def profit_factor(gains, pains):
+        return _fdiv(gains, abs(pains))
+
+    def tail(p_hi, p_lo):
+        return _fdiv(abs(p_hi), abs(p_lo))
+
+    def skew(n, skewness):
+        return _fdiv(_sqrt(n * (n - 1)), n - 2) * skewness
+
+    def kurt(n, kurtosis):
+        return _fdiv(n - 1, (n - 2) * (n - 3)) * ((n + 1) * kurtosis + 6)
+
+    def cpc(gains, pains, wins, losses, nonzero):
+        avg_win = _fdiv(gains, wins)
+        avg_loss = _fdiv(abs(pains), losses)
+        return profit_factor(gains, pains) * _fdiv(avg_win, avg_loss) * _fdiv(wins, nonzero)
+
+    def kelly(up_mean, down_mean, wins, nonzero):
+        w, p = payoff(up_mean, down_mean), _fdiv(wins, nonzero)
+        return _fdiv((w * p) - (1 - p), w)
+
+    def risk_of_ruin(wins, nonzero, n):
+        p = _fdiv(wins, nonzero)
+        return _pow(_fdiv(1 - p, 1 + p), n)
+
+    formulas = {
+        "exposure": (_fdiv, "nonzero", "n"),
+        "comp": (lambda g: g - 1, "growth"),
+        "sharpe": (lambda m, s: _fdiv(m, s) * root, "x_mean", "x_std"),
+        "sr0": (_fdiv, "mean", "std"),
+        "skew": (skew, "n", "skewness"),
+        "kurt": (kurt, "n", "kurtosis"),
+        "sortino": (lambda m, d2: _fdiv(m, _sqrt(d2)) * root, "x_mean", "x_down2"),
+        "omega": (_fdiv, "omega_up", "omega_down"),
+        "g2p": (lambda s, p: _fdiv(s, abs(p)), "x_sum", "x_pains"),
+        "payoff": (payoff, "up_mean", "down_mean"),
+        "pf": (profit_factor, "gains", "pains"),
+        "csr": (
+            lambda g, p, hi, lo: profit_factor(g, p) * tail(hi, lo),
+            "gains", "pains", "p_hi", "p_lo",
+        ),
+        "cpc": (cpc, "gains", "pains", "wins", "losses", "nonzero"),
+        "tail": (tail, "p_hi", "p_lo"),
+        "outw": (_fdiv, "p_win", "nonneg_mean"),
+        "outl": (_fdiv, "p_loss", "down_mean"),
+        "recov": (lambda s, m: _fdiv(abs(s), abs(m)), "sum", "maxdd"),
+        "ulcer": (lambda ss, n: _sqrt(_fdiv(ss, n - 1)), "dd_sumsq", "n"),
+        "ddvar": (lambda m, s: m + _Z_DDVAR * s, "dd_mean", "dd_std"),
+        "geo": (lambda g, n: _pow(g, _fdiv(1.0, n)) - 1, "growth", "n"),
+    }
+    if compounded:
+        formulas["cagrbase"] = (lambda g: g - 1, "x_growth" if rf else "growth")
+    else:
+        formulas["cagrbase"] = (lambda s: s, "x_sum")
+    if ("best", c) in values:  # full mode
+        formulas.update(
+            vol=(lambda s: s * root, "std"),
+            kelly=(kelly, "up_mean", "down_mean", "wins", "nonzero"),
+            ror=(risk_of_ruin, "wins", "nonzero", "n"),
+            var=(lambda m, s: m + _Z_VAR * s, "mean", "std"),
+            winrate=(_fdiv, "wins", "nonzero"),
+        )
+    if ("covb", c) in values:
+        formulas.update(
+            beta=(_fdiv, "covb", "varb"),
+            ir=(_fdiv, "act_mean", "act_std"),
+        )
+    for key in windows or {}:
+        formulas[f"w_{key}"] = (lambda g: g - 1, f"wg_{key}")
+    return _derive(values, c, formulas)
 
 
 # ---------------------------------------------------------------------------
 # calendar pass
+
+
+def _calendar_leaves(c, rf) -> dict:
+    """Leaves over one column's per-period compounded (``cmp_``) and summed
+    (``sm_``) returns."""
+    p, sm = _q(f"cmp_{c}"), _q(f"sm_{c}")
+    x = f"({sm} - {_dbl(float(rf))})" if rf else sm
+    return {
+        ("growth", c): F.product(F.expr(f"{p} + 1")),
+        ("n", c): f"count({p})",
+        ("best", c): f"max({p})",
+        ("worst", c): f"min({p})",
+        ("avg_win", c): f"avg(CASE WHEN {p} > 0 THEN {p} END)",
+        ("avg_loss", c): f"avg(CASE WHEN {p} < 0 THEN {p} END)",
+        ("wins", c): f"sum(CAST({p} > 0 AS BIGINT))",
+        ("nonzero", c): f"sum(CAST({p} <> 0 AS BIGINT))",
+        ("x_sum", c): f"sum({x})",
+        ("x_pains", c): f"sum(CASE WHEN {x} < 0 THEN {x} ELSE 0.0D END)",
+    }
 
 
 def _calendar_agg(filled, temporal, output_names, granularity, rf):
@@ -711,19 +901,19 @@ def _calendar_agg(filled, temporal, output_names, granularity, rf):
         per_col.append(X.comp(F.col(c)).alias(f"cmp_{c}"))
         per_col.append(F.sum(F.col(c)).alias(f"sm_{c}"))
     bucketed = filled.groupBy(*keys).agg(*per_col)
-    aggs = []
+    leaves: dict = {}
     for c in output_names:
-        comp_c, sum_c = F.col(f"cmp_{c}"), F.col(f"sm_{c}")
-        aggs += [
-            X.expected_return(comp_c).alias(f"geo_{c}"),
-            F.max(comp_c).alias(f"best_{c}"),
-            F.min(comp_c).alias(f"worst_{c}"),
-            X.avg_win(comp_c).alias(f"avg_win_{c}"),
-            X.avg_loss(comp_c).alias(f"avg_loss_{c}"),
-            X.win_rate(comp_c).alias(f"winrate_{c}"),
-            X.gain_to_pain_ratio(sum_c, rf).alias(f"g2p_sum_{c}"),
-        ]
-    return bucketed.agg(*aggs).first()
+        leaves.update(_calendar_leaves(c, rf))
+    values = _agg_leaves(bucketed, leaves)
+    formulas = {
+        "geo": (lambda g, n: _pow(g, _fdiv(1.0, n)) - 1, "growth", "n"),
+        "winrate": (_fdiv, "wins", "nonzero"),
+        "g2p_sum": (lambda s, p: _fdiv(s, abs(p)), "x_sum", "x_pains"),
+    }
+    out: dict = {}
+    for c in output_names:
+        out.update(_derive(values, c, formulas))
+    return out
 
 
 def _cal_row(cal, granularity, key, output_names, multiplier):
@@ -741,42 +931,26 @@ def _cal_row(cal, granularity, key, output_names, multiplier):
 # driver-side scalar assembly
 
 
-def _cagr_value(main, c, compounded, ppy, rf_key: str = "cagrbase") -> float:
-    base = main[f"{rf_key}_{c}"]
-    n = main[f"n_{c}"]
-    if base is None or not n:
+def _cagr_value(main, c, ppy, key: str = "cagrbase") -> float:
+    """expressions.cagr on the collected total: ``pow(total, 1 / years) - 1``."""
+    base = main[f"{key}_{c}"]
+    if base is None:
         return math.nan
-    total = float(base) + 1
-    if total < 0:
-        # negative ** fractional yields a COMPLEX in Python (no exception
-        # fires); Spark's F.pow yields NaN for the same input - mirror it
-        return math.nan
-    n_years = int(n) / ppy
-    try:
-        return total ** (1 / n_years) - 1
-    except (ZeroDivisionError, ValueError):
-        return math.nan
+    return _pow(float(base) + 1, _fdiv(1.0, main[f"n_{c}"] / ppy)) - 1
 
 
 def _calmar_value(main, c, compounded, ppy) -> float:
-    cagr_v = _cagr_value(main, c, compounded, ppy, rf_key="comp" if compounded else "sum")
     maxdd = main[f"maxdd_{c}"]
-    max_dd = abs(float(maxdd)) if maxdd is not None else 0.0
-    return cagr_v / max_dd if max_dd else math.nan
+    if maxdd is None:
+        return math.nan
+    return _fdiv(_cagr_value(main, c, ppy, "comp" if compounded else "sum"), abs(maxdd))
 
 
-def _stage2_value(stage2, key, main, fallback_key) -> float:
-    if key in stage2 and stage2[key] is not None:
-        return float(stage2[key])
-    v = main[fallback_key]
-    return math.nan if v is None else float(v)
-
-
-def _serenity_value(main, stage2, c, rf) -> float:
-    dd_cvar = stage2.get(f"ddcvar_{c}")
+def _serenity_value(main, c, rf) -> float:
+    dd_cvar = main[f"ddcvar_{c}"]
     if dd_cvar is None:
         return math.nan
-    std = main[f"rstd_{c}"]
+    std = main[f"std_{c}"]
     ulcer = main[f"ulcer_{c}"]
     total = main[f"sum_{c}"]
     if std is None or ulcer is None or total is None or not std:

@@ -362,3 +362,164 @@ def test_drawdown_fused_matches_legacy_two_pass(spark):
             assert [tuple(r) for r in got] == [tuple(r) for r in want], name
     finally:
         ordered.release_pass_caches(mark)
+
+
+# ---------------------------------------------------------------------------
+# pass-cache registry under concurrency (no Spark: fake caches)
+
+
+class _FakeCache:
+    def __init__(self):
+        self.released = 0
+
+    def persist(self):
+        return self
+
+    def unpersist(self, blocking=False):
+        self.released += 1
+
+
+class _InterleavingList(list):
+    """A registry list that, once armed, runs ``fn`` on another thread right
+    after it is first read, and gives that thread up to 0.5 s to finish
+    before the reader goes on. It places a registration exactly inside a
+    release's read-then-truncate window; a registry that holds a lock there
+    blocks the registration until the release is done."""
+
+    def arm(self, fn):
+        self._fn, self._thread = fn, None
+
+    def _interleave(self):
+        import threading
+
+        fn, self._fn = getattr(self, "_fn", None), None
+        if fn is not None:
+            self._thread = threading.Thread(target=fn)
+            self._thread.start()
+            self._thread.join(timeout=0.5)
+
+    def __getitem__(self, i):
+        out = super().__getitem__(i)
+        self._interleave()
+        return out
+
+    def __iter__(self):
+        out = super().__iter__()
+        self._interleave()
+        return out
+
+    def join(self):
+        self._thread.join(10)
+
+
+def test_release_is_atomic_against_a_concurrent_registration(monkeypatch):
+    """A cache registered by another thread while release_pass_caches runs
+    is either released or still registered, never dropped from the
+    registry without an unpersist (a permanent cache leak)."""
+    from alphastats_spark.operators import ordered
+
+    registry = _InterleavingList()
+    monkeypatch.setattr(ordered, "_PASS_CACHES", registry)
+    mark = ordered.pass_cache_mark()
+    mine, late = _FakeCache(), _FakeCache()
+    ordered.persist_tracked(mine)
+    registry.arm(lambda: ordered.persist_tracked(late))
+    ordered.release_pass_caches(mark)
+    registry.join()
+    assert mine.released == 1
+    assert late.released == 1 or any(late in entry for entry in ordered._PASS_CACHES)
+
+
+def test_scope_releases_a_cache_whose_id_was_reused(monkeypatch):
+    """A scope must release what it registered even when that cache's id()
+    equals the id of a cache registered before the scope (CPython reuses
+    the address of a garbage-collected cache). Forcing every id() to 0
+    makes the collision certain."""
+    from alphastats_spark.operators import ordered
+
+    monkeypatch.setattr(ordered, "_PASS_CACHES", [])
+    monkeypatch.setattr(ordered, "id", lambda obj: 0, raising=False)
+    before, inside = _FakeCache(), _FakeCache()
+    ordered.persist_tracked(before)
+    with ordered.pass_cache_scope():
+        ordered.persist_tracked(inside)
+    assert inside.released == 1
+    assert before.released == 0
+    assert ordered.pass_cache_mark() == 1
+
+
+def test_mark_counts_live_caches_and_releases_by_token(monkeypatch):
+    """A mark compares as the live-cache count, and releasing from it frees
+    exactly the caches registered after it, even when a scope on another
+    thread has meanwhile released an older entry (shifting positions)."""
+    import threading
+
+    from alphastats_spark.operators import ordered
+
+    monkeypatch.setattr(ordered, "_PASS_CACHES", [])
+    theirs, older, newer = _FakeCache(), _FakeCache(), _FakeCache()
+    ready, done = threading.Event(), threading.Event()
+
+    def scoped():
+        with ordered.pass_cache_scope():
+            ordered.persist_tracked(theirs)
+            ready.set()
+            done.wait(10)
+
+    t = threading.Thread(target=scoped)
+    t.start()
+    assert ready.wait(10)
+    ordered.persist_tracked(older)
+    mark = ordered.pass_cache_mark()
+    assert mark == 2
+    ordered.persist_tracked(newer)
+    done.set()
+    t.join(10)
+    assert theirs.released == 1
+    ordered.release_pass_caches(mark)
+    assert (older.released, newer.released) == (0, 1)
+    assert ordered.pass_cache_mark() == 1
+
+
+def test_registry_stress_releases_every_cache_exactly_once(monkeypatch):
+    """16 threads (more than cores) register caches inside scopes while the
+    main thread releases from a mark, with a short switch interval to
+    force interleaving. Afterwards every cache was released exactly once:
+    a lost update would leave one registered-but-dropped (0) or release it
+    twice (2)."""
+    import sys
+    import threading
+
+    from alphastats_spark.operators import ordered
+
+    monkeypatch.setattr(ordered, "_PASS_CACHES", [])
+    caches = [[_FakeCache() for _ in range(50)] for _ in range(16)]
+    start = threading.Barrier(len(caches) + 1)
+
+    def worker(mine):
+        start.wait(10)
+        for i, cache in enumerate(mine):
+            if i % 2:
+                with ordered.pass_cache_scope():
+                    ordered.persist_tracked(cache)
+            else:
+                ordered.persist_tracked(cache)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(m,)) for m in caches]
+        for t in threads:
+            t.start()
+        mark = ordered.pass_cache_mark()
+        start.wait(10)
+        for _ in range(20):
+            ordered.release_pass_caches(mark)
+        for t in threads:
+            t.join(30)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    ordered.release_pass_caches(mark)
+    assert ordered.pass_cache_mark() == 0
+    assert sorted({c.released for m in caches for c in m}) == [1]

@@ -2,10 +2,11 @@
 
 * Every round artifact (``*_rNN*.json``) cited by a committed evidence
   document exists in the repository.
-* Every attribute the scripts and ``bench.py`` read off an imported
-  ``alphastats_spark`` module exists, so a library deletion fails here
-  instead of leaving a broken probe script behind (no linter is
-  installed, so this walks the scripts' ASTs with the standard library).
+* Every attribute the scripts, ``bench.py`` and the benchmark
+  (``perfbench/*.py``, read only) read off an imported ``alphastats_spark``
+  module exists, so a library deletion or rename fails here instead of
+  leaving a broken probe script or benchmark behind (no linter is
+  installed, so this walks their ASTs with the standard library).
 """
 
 from __future__ import annotations
@@ -37,7 +38,11 @@ def test_cited_artifacts_exist():
 
 
 def _script_files() -> list[Path]:
-    return sorted(ROOT.glob("scripts/*.py")) + [ROOT / "bench.py"]
+    return (
+        sorted(ROOT.glob("scripts/*.py"))
+        + [ROOT / "bench.py"]
+        + sorted(ROOT.glob("perfbench/*.py"))
+    )
 
 
 def _resolve(module: str, name: str):

@@ -11,10 +11,14 @@ from __future__ import annotations
 import datetime as dt
 import math
 import statistics
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.errors import ArithmeticException as SparkArithmeticError
+from pyspark.sql import functions as F
 
-from alphastats_spark import reports
+from alphastats_spark import reports, stats
+from alphastats_spark.operators import ordered
 
 DAILY = [0.01, -0.02, 0.03, -0.01, 0.02, 0.0, 0.015, -0.005, 0.01, -0.015]
 BENCH = [0.005, -0.01, 0.015, -0.005, 0.01, 0.0, 0.007, -0.002, 0.004, -0.006]
@@ -231,3 +235,267 @@ class TestNumericReport:
         assert rows["Max Drawdown"] == pytest.approx(stats.max_drawdown(DAILY), rel=1e-12)
         # unformatted: more precision than the 2-decimal string table
         assert rows["Sharpe"] != round(rows["Sharpe"], 2)
+
+
+# ---------------------------------------------------------------------------
+# driver-side derivation parity: report cells == the stats.* functions
+
+
+def _stat(fn, with_bench=False):
+    def call(df, bdf):
+        return getattr(stats, fn)(*((df, bdf) if with_bench else (df,)))
+
+    return call
+
+
+def _greek(field):
+    def call(df, bdf):
+        res = stats.greeks(df, bdf)
+        return res.select(*[res[c][field].alias(c) for c in res.columns])
+
+    return call
+
+
+# report row -> stats counterpart, called on (returns frame, benchmark frame)
+PARITY_ROWS = {
+    "Time in Market": _stat("exposure"),
+    "Cumulative Return": _stat("comp"),
+    "CAGR﹪": _stat("cagr"),
+    "Sharpe": _stat("sharpe"),
+    "Prob. Sharpe Ratio": _stat("probabilistic_sharpe_ratio"),
+    "Smart Sharpe": _stat("smart_sharpe"),
+    "Sortino": _stat("sortino"),
+    "Smart Sortino": _stat("smart_sortino"),
+    "Sortino/√2": _stat("adjusted_sortino"),
+    "Smart Sortino/√2": _stat("smart_adjusted_sortino"),
+    "Omega": _stat("omega"),
+    "Max Drawdown": _stat("max_drawdown"),
+    "Longest DD Days": _stat("longest_drawdown_days"),
+    "Volatility (ann.)": _stat("volatility"),
+    "Calmar": _stat("calmar"),
+    "Skew": _stat("skew"),
+    "Kurtosis": _stat("kurtosis"),
+    "Expected Daily": _stat("expected_daily"),
+    "Expected Monthly": _stat("expected_monthly"),
+    "Expected Yearly": _stat("expected_yearly"),
+    "Kelly Criterion": _stat("kelly_criterion"),
+    "Risk of Ruin": _stat("risk_of_ruin"),
+    "Daily Value-at-Risk": _stat("value_at_risk"),
+    "Expected Shortfall (cVaR)": _stat("conditional_value_at_risk"),
+    "Max Consecutive Wins": _stat("consecutive_wins"),
+    "Max Consecutive Losses": _stat("consecutive_losses"),
+    "Gain/Pain Ratio": _stat("gain_to_pain_ratio"),
+    "Gain/Pain (1M)": _stat("gain_to_pain_ratio_1m"),
+    "Payoff Ratio": _stat("payoff_ratio"),
+    "Profit Factor": _stat("profit_factor"),
+    "Common Sense Ratio": _stat("common_sense_ratio"),
+    "CPC Index": _stat("cpc_index"),
+    "Tail Ratio": _stat("tail_ratio"),
+    "Outlier Win Ratio": _stat("outlier_win_ratio"),
+    "Outlier Loss Ratio": _stat("outlier_loss_ratio"),
+    "MTD": _stat("mtd"),
+    "3M": _stat("three_month"),
+    "6M": _stat("six_month"),
+    "YTD": _stat("ytd"),
+    "1Y": _stat("one_year"),
+    "3Y (ann.)": _stat("three_year"),
+    "5Y (ann.)": _stat("five_year"),
+    "10Y (ann.)": _stat("ten_year"),
+    "All-time (ann.)": _stat("all_time"),
+    "Best Day": _stat("best_day"),
+    "Worst Day": _stat("worst_day"),
+    "Best Month": _stat("best_month"),
+    "Worst Month": _stat("worst_month"),
+    "Best Year": _stat("best_year"),
+    "Worst Year": _stat("worst_year"),
+    "Avg. Drawdown": _stat("avg_drawdown"),
+    "Avg. Drawdown Days": _stat("avg_drawdown_days"),
+    "Recovery Factor": _stat("recovery_factor"),
+    "Ulcer Index": _stat("ulcer_index"),
+    "Serenity Index": _stat("serenity_index"),
+    "Avg. Up Month": _stat("avg_up_month"),
+    "Avg. Down Month": _stat("avg_down_month"),
+    "Win Days": _stat("win_days"),
+    "Win Month": _stat("win_month"),
+    "Win Quarter": _stat("win_quarter"),
+    "Win Year": _stat("win_year"),
+}
+BENCH_PARITY_ROWS = {
+    "R^2": _stat("r_squared", with_bench=True),
+    "Information Ratio": _stat("information_ratio", with_bench=True),
+    "Beta": _greek("beta"),
+    "Alpha": _greek("alpha"),
+    "Correlation": _stat("correlation", with_bench=True),
+    "Treynor Ratio": _stat("treynor_ratio", with_bench=True),
+}
+
+# rows whose value passes through a pow: the JVM's and libm's pow may
+# round the same inputs 1 ulp apart
+POW_ROWS = {
+    "CAGR﹪", "All-time (ann.)", "3Y (ann.)", "5Y (ann.)", "10Y (ann.)",
+    "Expected Daily", "Expected Monthly", "Expected Yearly", "Risk of Ruin",
+}
+
+# Null-free edge frames where the IEEE rules of the derivation matter,
+# grouped by length: each group is one multi-column frame, so one report
+# and one call per stats function cover all of its series.
+EDGE_FRAMES = {
+    "mixed": {"mixed": DAILY},
+    "five_rows": {
+        "all_positive": [0.01, 0.02, 0.005, 0.03, 0.015],  # no losses: +inf ratios
+        "all_zero": [0.0] * 5,  # 0/0 = NaN
+        "constant": [0.01] * 5,  # zero std
+        "wipeout": [0.02, -1.0, 0.01, 0.03, -0.01],  # a day at -100%: zero product
+        "below_wipeout": [0.02, -1.5, 0.01, 0.03, 0.01],  # negative base under pow
+    },
+    "one_row": {"one_row": [0.01]},
+    "two_rows": {"two_rows": [0.01, -0.02]},
+    "three_rows": {"three_rows": [0.01, -0.02, 0.03]},
+}
+
+
+def _stat_values(call, df, bdf, names) -> dict:
+    """``call``'s value per column. A call that raises on one column is
+    retried per column; a column on which it still raises is NaN."""
+    from pyspark.sql import DataFrame
+
+    def run(frame, cols):
+        res = call(frame, bdf)
+        row = res.first() if isinstance(res, DataFrame) else {cols[0]: res}
+        return {c: math.nan if row[c] is None else float(row[c]) for c in cols}
+
+    undefined = (ArithmeticError, ValueError, SparkArithmeticError)
+    try:
+        return run(df, names)
+    except undefined:
+        pass
+    out = {}
+    for c in names:
+        try:
+            out.update(run(df.select("d", c), [c]))
+        except undefined:
+            out[c] = math.nan
+    return out
+
+
+def _report_cells(df, names, monkeypatch, **kw) -> dict:
+    """label -> {column: unformatted cell}, captured on the way into the
+    numeric table (which drops the benchmark-relative rows, since the
+    benchmark's own column holds "-" there)."""
+    captured = []
+    monkeypatch.setattr(reports, "_build_numeric_df", lambda rows, _: captured.extend(rows))
+    reports.metrics(df, display=False, mode="full", numeric=True, strategy_title=names, **kw)
+    return dict(captured)
+
+
+def _same_double(got, want, ulps):
+    if math.isnan(got) and math.isnan(want):
+        return True
+    if got == want:
+        return True
+    return math.isfinite(want) and abs(got - want) <= ulps * math.ulp(want)
+
+
+@pytest.mark.parametrize("group", list(EDGE_FRAMES))
+def test_report_cells_equal_stats_functions(spark, group, monkeypatch):
+    """Every report cell with a stats.* counterpart is that function's
+    double; where the function raises because the value is undefined (a
+    zero-variance correlation under ANSI division, a negative PSR
+    radicand) the cell is NaN. The benchmark-relative rows come from a
+    second report: joining the benchmark reshuffles the frame, which
+    changes the multiplication order of the calendar passes' products."""
+    series = EDGE_FRAMES[group]
+    names = list(series)
+    n = len(next(iter(series.values())))
+    dates = [dt.date(2023, 1, 2) + dt.timedelta(days=i) for i in range(n)]
+    rows = [(d, *(series[c][i] for c in names)) for i, d in enumerate(dates)]
+    schema = "d date, " + ", ".join(f"{c} double" for c in names)
+    # one partition: both paths then aggregate in date order
+    df = spark.createDataFrame(rows, schema).coalesce(1)
+    bench = [(d, BENCH[i % len(BENCH)]) for i, d in enumerate(dates)]
+    bdf = spark.createDataFrame(bench, "d date, b double").coalesce(1)
+
+    cells = _report_cells(df, names, monkeypatch)
+    with_bench = _report_cells(df, names, monkeypatch, benchmark=bdf)
+    cells.update({label: with_bench[label] for label in BENCH_PARITY_ROWS})
+    calls = {**PARITY_ROWS, **BENCH_PARITY_ROWS}
+    mark = ordered.pass_cache_mark()
+    try:
+        # tiny frames: each call is fixed per-job cost, so run them side by side
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            wants = dict(zip(calls, pool.map(
+                lambda call: _stat_values(call, df, bdf, names), calls.values()
+            )))
+    finally:
+        ordered.release_pass_caches(mark)
+    wrong = []
+    for label, want in wants.items():
+        for c in names:
+            got = cells[label][c]
+            if not _same_double(got, want[c], 1 if label in POW_ROWS else 0):
+                wrong.append(f"{label} [{c}]: report {got!r} != stats {want[c]!r}")
+    assert not wrong, "\n".join(wrong)
+
+
+def test_report_aggregates_are_leaves(spark):
+    """Every aggregate the report's Spark passes build for a column is a
+    primitive statistic, at most 400 characters as a Column; every ratio is
+    derived on the driver. Nested expressions.fdiv ratios inside the plan
+    ran to 12,145 characters (Kelly), 7,790 (CPC) and 4,489 (risk of ruin),
+    and analysing them cost more than aggregating the frame."""
+    c, bench = "asset", "bench"
+    windows = reports._window_bounds(dt.date(2023, 6, 30))
+    main = {
+        f"{k}_{col}": v
+        for col in (c, bench)
+        for k, v in {
+            "ddvar": -0.05, "var": -0.02, "best": 0.03, "worst": -0.02,
+            "lag_hi": 0.03, "lag_lo": -0.02, "prev_hi": 0.03, "prev_lo": -0.02,
+        }.items()
+    }
+    leaves = {
+        **reports._column_leaves(c, 0.001, True, True, windows),
+        **reports._bench_leaves(c, bench),
+        **reports._stage2_leaves(main, c, True, bench),
+        **reports._calendar_leaves(c, 0.001),
+    }
+    assert {("acorr", c), ("corrb", c), ("cvar", c), ("ddcvar", c)} <= set(leaves)
+    lengths = {
+        key: len(str(F.expr(expr) if isinstance(expr, str) else expr))
+        for key, expr in leaves.items()
+    }
+    too_long = {key: n for key, n in lengths.items() if n > 400}
+    assert not too_long, too_long
+
+
+def test_driver_fdiv_and_pow_match_spark(spark):
+    """The driver-side pair reproduces expressions.fdiv and Spark's pow on
+    zero (both signs), NaN, ±inf, negative bases and overflow: the same
+    special value, and finite results within the 1 ulp by which the JVM's
+    and libm's pow may round."""
+    from alphastats_spark import expressions as X
+
+    inf, nan = math.inf, math.nan
+    bases = [0.0, -0.0, 1.0, -1.0, 2.0, -8.0, 0.5, 1e300, -1e300, -1e-300, inf, -inf, nan]
+    exps = [0.0, -1.0, -2.0, -3.0, 2.0, 3.0, 1 / 3, 63.0, inf, -inf, nan]
+    pairs = [(b, e) for b in bases for e in exps]
+    df = spark.createDataFrame(pairs, "b double, e double")
+    got = df.select(
+        F.pow("b", "e").alias("pow"), X.fdiv(F.col("b"), F.col("e")).alias("fdiv")
+    ).collect()
+
+    def same(a, b):
+        if math.isnan(a) or math.isnan(b) or math.isinf(a) or a == 0:
+            return repr(a) == repr(b)
+        return abs(a - b) <= math.ulp(a)
+
+    wrong = [
+        (b, e, name, want, mine)
+        for (b, e), row in zip(pairs, got)
+        for name, want, mine in (
+            ("pow", row["pow"], reports._pow(b, e)),
+            ("fdiv", row["fdiv"], reports._fdiv(b, e)),
+        )
+        if not same(want, mine)
+    ]
+    assert not wrong, wrong

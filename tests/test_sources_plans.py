@@ -983,7 +983,7 @@ def test_pass_cache_scope_is_thread_owned():
     ready, done = threading.Event(), threading.Event()
 
     def other_thread():
-        ordered._PASS_CACHES.append((threading.get_ident(), theirs))
+        ordered.track_pass_cache(theirs)
         ready.set()
         done.wait(10)
 
@@ -992,7 +992,7 @@ def test_pass_cache_scope_is_thread_owned():
         with ordered.pass_cache_scope():
             t.start()
             assert ready.wait(10)
-            ordered._PASS_CACHES.append((threading.get_ident(), mine))
+            ordered.track_pass_cache(mine)
         # scope exit: my entry released, the other thread's untouched
         assert mine.released == 1 and theirs.released == 0
     finally:
