@@ -23,27 +23,19 @@ _QUERIES, _ORACLES = harness.build_registry()
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: one-pass multi-metric snapshot over sf0.001 returns."""
-    from pyspark.sql import functions as F
-
     from alphastats_spark import expressions as X
     from alphastats_spark.operators import ordered
 
     rets = harness.load_returns(spark, "/root/testdata/sf0.001")
     rets = ordered.with_order(rets, "d")
     rets = ordered.add_drawdown_columns(rets, {"dd": "r"})
-    c = F.col("r")
-    return rets.agg(
-        F.count(c).alias("n_days"),
-        X.comp(c).alias("total_return"),
-        X.cagr(c).alias("cagr"),
-        X.sharpe(c, None, 252, True).alias("sharpe"),
-        X.sortino(c, None, 252, True).alias("sortino"),
-        X.volatility(c, 252, True).alias("volatility"),
-        F.min("dd").alias("max_drawdown"),
-        X.win_rate(c).alias("win_rate"),
-        X.profit_factor(c).alias("profit_factor"),
-        X.tail_ratio(c).alias("tail_ratio"),
-    )
+    spec = X.Spec(v="r", dd="dd")
+    outputs = {
+        "n_days": "n_obs", "total_return": "comp", "cagr": "cagr", "sharpe": "sharpe",
+        "sortino": "sortino", "volatility": "volatility", "max_drawdown": "max_drawdown",
+        "win_rate": "win_rate", "profit_factor": "profit_factor", "tail_ratio": "tail_ratio",
+    }
+    return X.project(rets, {out: (name, spec) for out, name in outputs.items()})
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,15 +1,34 @@
-"""Reusable Column-expression builders — the library's extension mechanism.
+"""The metric formula table: every ratio written once, evaluated two ways.
 
-The reference's metrics are all composable Polars expression builders (e.g.
-``_comp`` at ``alphastats/stats.py:49-50``). Here each metric is a pure
-function ``Column -> Column`` so that:
+The reference's metrics are composable Polars expressions (e.g. ``_comp``
+at ``alphastats/stats.py:49-50``). Here a metric is split in two:
 
-* every public metric is a single ``df.agg(...)`` / ``df.select(...)`` —
-  Catalyst sees one declarative plan, whole-stage codegen covers the math;
-* ``reports.metrics`` can batch ~40 metrics × N columns into ONE aggregation
-  pass instead of launching one Spark job per cell (reference launches one
-  ``collect()`` per cell, ``reports.py:397-447`` — fine in-memory, fatal on a
-  cluster).
+* **Leaves** (``_LEAVES``): the primitive aggregates a metric reads —
+  counts, plain and conditional sums and means, std/var/covar,
+  skewness/kurtosis, min/max, percentiles, products — each defined once
+  over the value column and, where needed, the drawdown, benchmark or
+  lagged column of a :class:`Spec`.
+* **Formulas** (``FORMULAS``): each metric written once over named leaves
+  with Python arithmetic and a small op set — ``div`` (``fdiv``
+  semantics), ``pow``, ``sqrt``, ``abs``, ``where`` (and ``cdf`` for the
+  driver-only PSR). ``where`` takes its branches as thunks and evaluates
+  only the one it selects, so a branch may use plain ``/`` where the
+  other branch guards its zero denominator.
+
+Two op sets evaluate the same formula in the same operation order (so
+the two can differ only where the JVM's and libm's ``pow`` round an ulp
+apart):
+
+* ``FLOAT`` — :func:`evaluate` over collected leaf values, for the report
+  and the driver-side ``stats`` paths (PSR, smart ratios, serenity);
+* ``COLUMN`` — :func:`project` aggregates the leaves once and selects the
+  formulas over the named leaf columns (one flat aggregate, however many
+  ratios), and :func:`column` inlines one metric as a single aggregate
+  Column for callers that need one (streaming windows, calendar buckets).
+
+A NULL leaf makes a formula NULL: in Spark every op but ``where`` is
+null-intolerant, and :func:`evaluate` returns None as soon as a formula
+reads a None leaf.
 
 Polars-vs-Spark semantic shims (critical for parity):
 
@@ -24,12 +43,21 @@ Polars-vs-Spark semantic shims (critical for parity):
 
 from __future__ import annotations
 
+import dataclasses
 import math
+from collections.abc import Callable, Mapping
+from statistics import NormalDist
+from types import SimpleNamespace
+from typing import Any
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from alphastats_spark._utils import to_excess_returns
+
+_NORMAL = NormalDist()
+_SQRT2 = math.sqrt(2)
+
 
 def NAN() -> Column:
     return F.lit(float("nan"))
@@ -64,150 +92,6 @@ def fdiv(num: Column, den: Column) -> Column:
     )
 
 
-def comp(c: Column) -> Column:
-    """Total compounded return ``∏(1+r) − 1`` (reference ``stats.py:49-50``)."""
-    return F.product(c + 1) - 1
-
-
-def cagr(c: Column, rf: float | None = None, compound: bool = True, periods: int = 252) -> Column:
-    """CAGR over excess returns (reference ``stats.py:53-89``)."""
-    excess = to_excess_returns(c, rf)
-    n_years = F.count(c) / F.lit(float(periods))
-    if compound:
-        total = comp(excess) + 1
-    else:
-        total = F.sum(excess) + 1
-    return F.pow(total, fdiv(F.lit(1.0), n_years)) - 1
-
-
-def mean_std_ratio(c: Column, rf: float | None, periods: int, annualize: bool) -> Column:
-    """Shared core of sharpe (reference ``stats.py:142-175``)."""
-    excess = to_excess_returns(c, rf)
-    ratio = fdiv(F.mean(excess), F.stddev_samp(excess))
-    if annualize:
-        ratio = ratio * F.lit(periods**0.5)
-    return ratio
-
-
-sharpe = mean_std_ratio
-
-
-def sortino(c: Column, rf: float | None = None, periods: int = 252, annualize: bool = True) -> Column:
-    """Sortino: mean / sqrt(mean(min(r,0)²)) — denominator mean is over *all*
-    (non-null) rows, not only negatives (reference ``stats.py:219-220``)."""
-    excess = to_excess_returns(c, rf)
-    downside = when_pl(excess < 0, excess, F.lit(0.0))
-    downside_risk = F.sqrt(F.mean(F.pow(downside, 2)))
-    ratio = fdiv(F.mean(excess), downside_risk)
-    if annualize:
-        ratio = ratio * F.lit(periods**0.5)
-    return ratio
-
-
-def volatility(c: Column, periods: int = 252, annualize: bool = True) -> Column:
-    """Sample standard deviation (reference ``stats.py:349-377``)."""
-    out = F.stddev_samp(c)
-    if annualize:
-        out = out * F.lit(periods**0.5)
-    return out
-
-
-def cpc_index(c: Column) -> Column:
-    """Profit factor × payoff ratio × win rate (reference ``stats.py:590-632``)."""
-    gains_sum = F.sum(when_pl(c >= 0, c, F.lit(0.0)))
-    losses_sum_abs = F.abs(F.sum(when_pl(c < 0, c, F.lit(0.0))))
-    wins_count = F.sum((c > 0).cast("long"))
-    losses_count = F.sum((c < 0).cast("long"))
-    non_zero_count = F.sum((c != 0).cast("long"))
-    avg_win = fdiv(gains_sum, wins_count)
-    avg_loss_abs = fdiv(losses_sum_abs, losses_count)
-    profit_factor_ = fdiv(gains_sum, losses_sum_abs)
-    payoff_ratio_ = fdiv(avg_win, avg_loss_abs)
-    win_rate_ = fdiv(wins_count, non_zero_count)
-    return profit_factor_ * payoff_ratio_ * win_rate_
-
-
-def exposure(c: Column) -> Column:
-    """Non-zero periods / non-null periods (reference ``stats.py:643-668``)."""
-    return fdiv(F.sum((c != 0).cast("long")), F.count(c))
-
-
-def omega(c: Column, threshold: float = 0.0) -> Column:
-    """Σmax(0, r−θ) / Σmax(0, θ−r) (reference ``stats.py:679-711``)."""
-    diff = c - F.lit(float(threshold))
-    gains = F.sum(F.greatest(diff, F.lit(0.0)))
-    losses = F.sum(F.greatest(-diff, F.lit(0.0)))
-    return fdiv(gains, losses)
-
-
-def expected_return(c: Column) -> Column:
-    """Geometric mean ``∏(1+r)^(1/n) − 1`` (reference ``stats.py:799-807``)."""
-    return F.pow(F.product(c + 1), fdiv(F.lit(1.0), F.count(c))) - 1
-
-
-def skew(c: Column) -> Column:
-    """Bias-corrected (pandas-style G1) skewness (reference ``stats.py:859-869``).
-
-    Spark's ``F.skewness`` is the population g1 = m3/m2^1.5 computed with a
-    numerically-stable streaming central-moment update (safe at 100 TB, no
-    catastrophic cancellation). The reference applies the bias correction
-    G1 = sqrt(n(n−1))/(n−2) · g1 — we apply the same factor on top.
-    """
-    n = F.count(c).cast("double")
-    return fdiv(F.sqrt(n * (n - 1)), (n - 2)) * F.skewness(c)
-
-
-def kurtosis(c: Column) -> Column:
-    """Bias-corrected excess kurtosis G2 (reference ``stats.py:880-891``).
-
-    Spark's ``F.kurtosis`` is the population excess g2 = m4/m2² − 3;
-    G2 = ((n−1)/((n−2)(n−3)))·((n+1)·g2 + 6).
-    """
-    n = F.count(c).cast("double")
-    return fdiv((n - 1), ((n - 2) * (n - 3))) * ((n + 1) * F.kurtosis(c) + 6)
-
-
-def avg_return(c: Column) -> Column:
-    """Mean of non-zero returns (reference ``stats.py:906-914``)."""
-    return F.mean(when_pl(c != 0, c, None))
-
-
-def avg_win(c: Column) -> Column:
-    """Mean of positive returns (reference ``stats.py:927-935``)."""
-    return F.mean(when_pl(c > 0, c, None))
-
-
-def avg_loss(c: Column) -> Column:
-    """Mean of negative returns (reference ``stats.py:950-958``)."""
-    return F.mean(when_pl(c < 0, c, None))
-
-
-def win_rate(c: Column) -> Column:
-    """count(r>0) / count(r≠0) (reference ``stats.py:973-983``)."""
-    wins = F.sum((c > 0).cast("long"))
-    non_zero = F.sum((c != 0).cast("long"))
-    return fdiv(wins, non_zero)
-
-
-def payoff_ratio(c: Column) -> Column:
-    """avg_win / |avg_loss| (reference ``stats.py:994-1000``)."""
-    return fdiv(avg_win(c), F.abs(avg_loss(c)))
-
-
-def profit_factor(c: Column) -> Column:
-    """Σ(r≥0) / |Σ(r<0)| (reference ``stats.py:1011-1017``)."""
-    wins = F.sum(when_pl(c >= 0, c, F.lit(0.0)))
-    losses = F.abs(F.sum(when_pl(c < 0, c, F.lit(0.0))))
-    return fdiv(wins, losses)
-
-
-def gain_to_pain_ratio(c: Column, rf: float = 0.0) -> Column:
-    """Σ(r−rf) / |Σ negative (r−rf)| (reference ``stats.py:1028-1035``)."""
-    r = to_excess_returns(c, rf)
-    downside = F.abs(F.sum(when_pl(r < 0, r, F.lit(0.0))))
-    return fdiv(F.sum(r), downside)
-
-
 def percentile(c: Column, q: float, exact: bool = True, accuracy: int = 10000) -> Column:
     """Percentile aggregate: exact by default for reference parity, approx
     on request for extreme scale.
@@ -223,105 +107,473 @@ def percentile(c: Column, q: float, exact: bool = True, accuracy: int = 10000) -
     return F.approx_percentile(c, F.lit(float(q)), F.lit(int(accuracy)))
 
 
-def common_sense_ratio(c: Column, exact: bool = True) -> Column:
-    """Profit factor × tail ratio (reference ``stats.py:1059-1071``).
-
-    Exact linear-interpolation percentile by default for parity; see
-    ``percentile`` for the ``exact=False`` scale path.
-    """
-    return profit_factor(c) * tail_ratio(c, exact=exact)
-
-
-def tail_ratio(c: Column, cutoff: float = 0.95, exact: bool = True) -> Column:
-    """|q_cutoff| / |q_{1−cutoff}| (reference ``stats.py:1082-1092``)."""
-    hi = F.abs(percentile(c, cutoff, exact))
-    lo = F.abs(percentile(c, 1 - cutoff, exact))
-    return fdiv(hi, lo)
-
-
-def outlier_win_ratio(c: Column, quantile: float = 0.99, exact: bool = True) -> Column:
-    """q99 / mean(r≥0) (reference ``stats.py:1105-1114``)."""
-    positive_mean = F.mean(when_pl(c >= 0, c, None))
-    return fdiv(percentile(c, quantile, exact), positive_mean)
-
-
-def outlier_loss_ratio(c: Column, quantile: float = 0.01, exact: bool = True) -> Column:
-    """q01 / mean(r<0) (reference ``stats.py:1127-1136``)."""
-    negative_mean = F.mean(when_pl(c < 0, c, None))
-    return fdiv(percentile(c, quantile, exact), negative_mean)
-
-
-def kelly_criterion(c: Column) -> Column:
-    """((W·p) − (1−p)) / W with W=payoff ratio, p=win rate (reference ``stats.py:1147-1158``)."""
-    win_loss = payoff_ratio(c)
-    win_prob = win_rate(c)
-    lose_prob = 1 - win_prob
-    return fdiv((win_loss * win_prob) - lose_prob, win_loss)
-
-
-def risk_of_ruin(c: Column) -> Column:
-    """((1−p)/(1+p))^n (reference ``stats.py:1169-1178``)."""
-    win_prob = win_rate(c)
-    return F.pow(fdiv(1 - win_prob, 1 + win_prob), F.count(c))
-
-
-def value_at_risk(c: Column, sigma: float = 1.0, confidence: float = 0.95) -> Column:
-    """Parametric (variance-covariance) VaR (reference ``stats.py:1194-1205``).
-
-    The Φ⁻¹ z-score is driver-side scalar math, mirroring the reference's use
-    of ``statistics.NormalDist`` (``stats.py:18,1202``).
-    """
-    from statistics import NormalDist
-
+def z_score(sigma: float = 1.0, confidence: float = 0.95) -> float:
+    """The parametric VaR's ``σ·Φ⁻¹(1 − confidence)`` (reference
+    ``stats.py:1194-1205``, which uses ``statistics.NormalDist``)."""
     if confidence > 1:
         confidence = confidence / 100
-    z = NormalDist().inv_cdf(1 - confidence)
-    return F.mean(c) + F.lit(z * sigma) * F.stddev_samp(c)
+    return _NORMAL.inv_cdf(1 - confidence) * sigma
 
 
-def recovery_factor_parts(c: Column, rf: float = 0.0) -> Column:
-    """Numerator |Σr − rf| of recovery factor (reference ``stats.py:1514-1522``);
-    the denominator is a drawdown-window aggregate composed in ``stats.py``."""
-    return F.abs(F.sum(c) - F.lit(float(rf)))
+# the serenity index's drawdown VaR z-score (reference ``stats.py:1549-1567``)
+_Z_DD = _NORMAL.inv_cdf(0.05)
 
 
-def geometric_sum_penalty_col(coef: Column, n: Column) -> Column:
-    """Column form of :func:`geometric_sum_penalty` — the same closed-form
-    geometric sums as Spark expressions, so a PER-KEY penalty computes
-    inside the plan (a million keys never touch the driver).
+@dataclasses.dataclass(frozen=True, eq=False)
+class Spec:
+    """The columns a metric's leaves aggregate and the parameters its
+    formula reads. Columns are names or Columns; ``rf`` falsy means the
+    excess-return (``x_``) leaves are the plain ones."""
 
-    ``coef`` is the |lag-1 autocorrelation| aggregate for the key, ``n``
-    its non-null count.
-    """
-    n = n.cast("double")
-    m = n - 1
-    c_ = F.abs(coef)
-    cm = F.pow(c_, m)
-    s1 = c_ * (1 - cm) / (1 - c_)
-    s2 = c_ * (1 - (m + 1) * cm + m * cm * c_) / F.pow(1 - c_, 2)
-    corr = F.when(c_ == 1.0, m - (m * (m + 1) / 2) / n).otherwise(s1 - s2 / n)
-    return (
-        F.when((n < 2) | coef.isNull() | F.isnan(coef), NAN())
-        .otherwise(F.sqrt(1 + 2 * corr))
-    )
+    v: Column | str | None = None  # returns
+    dd: Column | str | None = None  # drawdown series
+    b: Column | str | None = None  # benchmark returns
+    prev: Column | str | None = None  # previous non-null return (autocorrelation pairs)
+    rf: float | None = None
+    periods: int = 252
+    annualize: bool = True
+    compound: bool = True
+    smart: bool = False  # PSR over the autocorrelation-penalized Sharpe
+    threshold: float = 0.0  # omega
+    cutoff: float = 0.95  # tail ratio
+    q_win: float = 0.99
+    q_loss: float = 0.01
+    exact: bool = True
+    accuracy: int = 10000
+    var_z: float = z_score()
 
 
-def geometric_sum_penalty(coef: float, n: int) -> float:
-    """Driver-side autocorrelation penalty (reference ``stats.py:1292-1315``).
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
 
-    penalty = sqrt(1 + 2·Σ_{x=1}^{n−1} ((n−x)/n)·coef^x). The reference loops
-    O(n) in Python; we use the closed-form geometric sums so the driver cost
-    is O(1) regardless of row count:
-        Σ c^x = c(1−c^m)/(1−c);  Σ x·c^x = c(1−(m+1)c^m + m c^{m+1})/(1−c)^2
-    """
-    if n < 2 or math.isnan(coef):
+
+# ---------------------------------------------------------------------------
+# leaves: name -> aggregate over the operand ``u`` (the returns, or the
+# excess returns for an ``x_`` name) and the spec's other columns
+
+
+def _diff(s: Spec, u: Column) -> Column:
+    return u - F.lit(float(s.threshold)) if s.threshold else u
+
+
+_LEAVES: dict[str, Callable[[Spec, Column], Column]] = {
+    "n": lambda s, u: F.count(u),
+    "nonzero": lambda s, u: F.sum((u != 0).cast("long")),
+    "wins": lambda s, u: F.sum((u > 0).cast("long")),
+    "losses": lambda s, u: F.sum((u < 0).cast("long")),
+    "sum": lambda s, u: F.sum(u),
+    "mean": lambda s, u: F.mean(u),
+    "std": lambda s, u: F.stddev_samp(u),
+    "skewness": lambda s, u: F.skewness(u),
+    "kurtosis": lambda s, u: F.kurtosis(u),
+    "best": lambda s, u: F.max(u),
+    "worst": lambda s, u: F.min(u),
+    "growth": lambda s, u: F.product(u + 1),
+    "gains": lambda s, u: F.sum(when_pl(u >= 0, u, F.lit(0.0))),
+    "pains": lambda s, u: F.sum(when_pl(u < 0, u, F.lit(0.0))),
+    "down2": lambda s, u: F.mean(F.pow(when_pl(u < 0, u, F.lit(0.0)), 2)),
+    "up_mean": lambda s, u: F.mean(when_pl(u > 0, u, None)),
+    "down_mean": lambda s, u: F.mean(when_pl(u < 0, u, None)),
+    "nonneg_mean": lambda s, u: F.mean(when_pl(u >= 0, u, None)),
+    "nonzero_mean": lambda s, u: F.mean(when_pl(u != 0, u, None)),
+    "omega_up": lambda s, u: F.sum(F.greatest(_diff(s, u), F.lit(0.0))),
+    "omega_down": lambda s, u: F.sum(F.greatest(-_diff(s, u), F.lit(0.0))),
+    "p_hi": lambda s, u: percentile(u, s.cutoff, s.exact, s.accuracy),
+    "p_lo": lambda s, u: percentile(u, 1 - s.cutoff, s.exact, s.accuracy),
+    "p_win": lambda s, u: percentile(u, s.q_win, s.exact, s.accuracy),
+    "p_loss": lambda s, u: percentile(u, s.q_loss, s.exact, s.accuracy),
+    "maxdd": lambda s, u: F.min(_col(s.dd)),
+    "dd_sumsq": lambda s, u: F.sum(F.pow(_col(s.dd), 2)),
+    "dd_mean": lambda s, u: F.mean(_col(s.dd)),
+    "dd_std": lambda s, u: F.stddev_samp(_col(s.dd)),
+    "covb": lambda s, u: F.covar_samp(u, _col(s.b)),
+    "varb": lambda s, u: F.var_samp(_col(s.b)),
+    "b_mean": lambda s, u: F.mean(_col(s.b)),
+    "act_mean": lambda s, u: F.mean(u - _col(s.b)),
+    "act_std": lambda s, u: F.stddev_samp(u - _col(s.b)),
+    "corrb": lambda s, u: F.corr(u, _col(s.b)),
+    "acorr": lambda s, u: F.corr(u, _col(s.prev)),
+}
+
+
+def _resolve(name: str, s: Spec) -> str:
+    """The leaf a formula's name reads: without rf the excess returns are
+    the returns themselves."""
+    return name[2:] if name.startswith("x_") and not s.rf else name
+
+
+def _leaf(name: str, s: Spec) -> Column:
+    """Aggregate Column of the resolved leaf ``name``."""
+    u = _col(s.v)
+    if name.startswith("x_"):
+        name, u = name[2:], to_excess_returns(u, s.rf)
+    return _LEAVES[name](s, u)
+
+
+# ---------------------------------------------------------------------------
+# op sets
+
+
+def _fdiv(num: float, den: float) -> float:
+    """``fdiv`` on doubles: x/0 is ±inf, 0/0 and NaN/0 are NaN."""
+    if den != 0:
+        return num / den
+    if math.isnan(num) or num == 0:
         return math.nan
+    return math.inf if num > 0 else -math.inf
+
+
+def _pow(base: float, exp: float) -> float:
+    """Spark's pow (``java.lang.Math.pow``) on doubles. It differs from
+    ``math.pow``, which returns 1 for ``pow(1, nan)`` and ``pow(±1, ±inf)``
+    and raises on a zero base with a negative exponent, a negative base
+    with a non-integer exponent, and overflow."""
+    exp = float(exp)
+    if math.isnan(exp) or (math.isnan(base) and exp != 0):
+        return math.nan
+    if math.isinf(exp) and abs(base) == 1:
+        return math.nan
+    try:
+        return math.pow(base, exp)
+    except (ValueError, OverflowError):
+        pass
+    if base < 0 and not exp.is_integer():
+        return math.nan
+    # a pole (zero base, negative exponent) or an overflow: infinite, negative
+    # for a negative (or -0.0) base under an odd exponent
+    odd = exp.is_integer() and math.fmod(exp, 2) != 0
+    return -math.inf if odd and math.copysign(1, base) < 0 else math.inf
+
+
+def _sqrt(x: float) -> float:
+    """Spark's sqrt: NaN for a negative radicand instead of raising."""
+    return math.sqrt(x) if x >= 0 else math.nan
+
+
+def _lit(x: Column | float) -> Column:
+    return x if isinstance(x, Column) else F.lit(x)
+
+
+FLOAT = SimpleNamespace(
+    div=_fdiv,
+    pow=_pow,
+    sqrt=_sqrt,
+    abs=abs,
+    where=lambda cond, then, otherwise: then() if cond else otherwise(),
+    cdf=_NORMAL.cdf,
+)
+COLUMN = SimpleNamespace(
+    div=lambda num, den: fdiv(_lit(num), _lit(den)),
+    pow=F.pow,
+    sqrt=F.sqrt,
+    abs=F.abs,
+    where=lambda cond, then, otherwise: F.when(cond, then()).otherwise(otherwise()),
+)
+# leaves(): evaluates both branches so it sees every leaf a formula reads
+_RECORD = SimpleNamespace(
+    **{**vars(FLOAT), "where": lambda cond, then, otherwise: (then(), otherwise())[0]}
+)
+
+
+# ---------------------------------------------------------------------------
+# formulas: (ops, leaves, spec) -> value; reference line numbers are
+# alphastats/stats.py
+
+
+def _leaf_formula(name: str):
+    return lambda o, L, s: L[name]
+
+
+def _annualized(x, s: Spec):
+    return x * s.periods**0.5 if s.annualize else x
+
+
+def _comp(o, L, s):
+    """∏(1+r) − 1 (:49-50)."""
+    return L["growth"] - 1
+
+
+def _cagr(o, L, s):
+    """Annualized growth over excess returns (:53-89)."""
+    total = (L["x_growth"] - 1) + 1 if s.compound else L["x_sum"] + 1
+    return o.pow(total, o.div(1.0, L["n"] / float(s.periods))) - 1
+
+
+def _sharpe(o, L, s):
+    """mean / std of excess returns (:142-175)."""
+    return _annualized(o.div(L["x_mean"], L["x_std"]), s)
+
+
+def _sortino(o, L, s):
+    """mean / sqrt(mean(min(r,0)²)); the denominator mean is over every
+    non-null row, not only the negatives (:196-232)."""
+    return _annualized(o.div(L["x_mean"], o.sqrt(L["x_down2"])), s)
+
+
+def _volatility(o, L, s):
+    """Sample standard deviation (:349-377)."""
+    return _annualized(L["std"], s)
+
+
+def _win_rate(o, L, s):
+    """count(r>0) / count(r≠0) (:973-983)."""
+    return o.div(L["wins"], L["nonzero"])
+
+
+def _payoff_ratio(o, L, s):
+    """avg win / |avg loss| (:994-1000)."""
+    return o.div(L["up_mean"], o.abs(L["down_mean"]))
+
+
+def _profit_factor(o, L, s):
+    """Σ(r≥0) / |Σ(r<0)| (:1011-1017)."""
+    return o.div(L["gains"], o.abs(L["pains"]))
+
+
+def _tail_ratio(o, L, s):
+    """|q_cutoff| / |q_{1−cutoff}| (:1082-1092)."""
+    return o.div(o.abs(L["p_hi"]), o.abs(L["p_lo"]))
+
+
+def _cpc_index(o, L, s):
+    """Profit factor × payoff ratio × win rate (:590-632)."""
+    avg_win = o.div(L["gains"], L["wins"])
+    avg_loss = o.div(o.abs(L["pains"]), L["losses"])
+    return _profit_factor(o, L, s) * o.div(avg_win, avg_loss) * _win_rate(o, L, s)
+
+
+def _skew(o, L, s):
+    """Bias-corrected (pandas G1) skewness: Spark's ``skewness`` is the
+    population g1 from a stable streaming central-moment update; G1 =
+    sqrt(n(n−1))/(n−2)·g1 (:859-869)."""
+    n = L["n"] * 1.0  # as a double: n·(n−1) overflows a long
+    return o.div(o.sqrt(n * (n - 1)), n - 2) * L["skewness"]
+
+
+def _kurtosis(o, L, s):
+    """Bias-corrected excess kurtosis G2 = ((n−1)/((n−2)(n−3)))·((n+1)·g2 + 6)
+    over Spark's population excess g2 (:880-891)."""
+    n = L["n"] * 1.0
+    return o.div(n - 1, (n - 2) * (n - 3)) * ((n + 1) * L["kurtosis"] + 6)
+
+
+def _kelly_criterion(o, L, s):
+    """((W·p) − (1−p)) / W, W the payoff ratio, p the win rate (:1147-1158)."""
+    w, p = _payoff_ratio(o, L, s), _win_rate(o, L, s)
+    return o.div((w * p) - (1 - p), w)
+
+
+def _risk_of_ruin(o, L, s):
+    """((1−p)/(1+p))^n (:1169-1178)."""
+    p = _win_rate(o, L, s)
+    return o.pow(o.div(1 - p, 1 + p), L["n"])
+
+
+def _ulcer_index(o, L, s):
+    """sqrt(Σ dd² / (n−1)) (:1533-1538)."""
+    return o.sqrt(o.div(L["dd_sumsq"], L["n"] - 1))
+
+
+def _recovery_factor(o, L, s):
+    """|Σr − rf| / |max drawdown| (:1514-1522)."""
+    return o.div(o.abs(L["sum"] - (s.rf or 0.0)), o.abs(L["maxdd"]))
+
+
+def _beta(o, L, s):
+    """cov(r, b) / var(b) (:419-471)."""
+    return o.div(L["covb"], L["varb"])
+
+
+def _autocorr_penalty(o, L, s):
+    """sqrt(1 + 2·Σ_{x=1}^{n−1} ((n−x)/n)·c^x), c the |lag-1
+    autocorrelation| (:1292-1331). The reference loops O(n); this is the
+    closed form of the geometric sums, O(1):
+        Σ c^x = c(1−c^m)/(1−c);  Σ x·c^x = c(1−(m+1)c^m + m c^{m+1})/(1−c)²
+    NaN where the autocorrelation is undefined: a NULL coefficient fails
+    ``c >= 0`` in Spark, and a NaN one propagates through the sums."""
+    c, n = o.abs(L["acorr"]), L["n"] * 1.0  # n ≥ 3 wherever c is defined
     m = n - 1
-    if coef == 1.0:
-        corr = m - (m * (m + 1) / 2) / n
-    else:
-        cm = coef**m
-        s1 = coef * (1 - cm) / (1 - coef)
-        s2 = coef * (1 - (m + 1) * cm + m * cm * coef) / ((1 - coef) ** 2)
-        corr = s1 - s2 / n
-    return math.sqrt(1 + 2 * corr)
+    cm = o.pow(c, m)
+
+    def geometric():
+        s1 = c * (1 - cm) / (1 - c)
+        s2 = c * (1 - (m + 1) * cm + m * cm * c) / o.pow(1 - c, 2)
+        return s1 - s2 / n
+
+    corr = o.where(c == 1.0, lambda: m - (m * (m + 1) / 2) / n, geometric)
+    return o.where(c >= 0, lambda: o.sqrt(1 + 2 * corr), lambda: math.nan)
+
+
+def _serenity_index(o, L, s):
+    """(Σr − rf) / (ulcer × pitfall), pitfall = −CVaR(drawdowns)/σ(r); the
+    drawdown CVaR (``ddcvar``) is a second-pass value (:1549-1567)."""
+    std = L["std"]
+    pitfall = o.where(std != 0, lambda: -L["ddcvar"] / std, lambda: math.nan)
+    denom = _ulcer_index(o, L, s) * pitfall
+    return o.where(denom != 0, lambda: (L["sum"] - (s.rf or 0.0)) / denom, lambda: math.nan)
+
+
+def _probabilistic_sharpe_ratio(o, L, s):
+    """Φ((SR − rf)/σ_SR) over the per-period Sharpe (:255-323); NaN where
+    σ_SR is undefined (n ≤ 1, a non-positive radicand). Driver only."""
+    base = o.div(L["mean"], L["std"])
+    if s.smart:
+        base = base / _autocorr_penalty(o, L, s)
+    n = L["n"]
+    radicand = o.div(
+        1 + (0.5 * o.pow(base, 2)) - (_skew(o, L, s) * base)
+        + (((_kurtosis(o, L, s) - 3) / 4) * o.pow(base, 2)),
+        n - 1,
+    )
+    ok = (n > 1) & (radicand > 0)
+    p = o.where(
+        ok, lambda: o.cdf((base - (s.rf or 0.0)) / o.sqrt(radicand)), lambda: math.nan
+    )
+    return p * 252**0.5 if s.annualize else p
+
+
+FORMULAS: dict[str, Callable[[Any, Any, Spec], Any]] = {
+    "n_obs": _leaf_formula("n"),
+    "comp": _comp,
+    "cagr": _cagr,
+    "sharpe": _sharpe,
+    "sortino": _sortino,
+    "adjusted_sortino": lambda o, L, s: _sortino(o, L, s) / _SQRT2,
+    "volatility": _volatility,
+    "exposure": lambda o, L, s: o.div(L["nonzero"], L["n"]),
+    "omega": lambda o, L, s: o.div(L["omega_up"], L["omega_down"]),
+    "expected_return": lambda o, L, s: o.pow(L["growth"], o.div(1.0, L["n"])) - 1,
+    "best": _leaf_formula("best"),
+    "worst": _leaf_formula("worst"),
+    "skew": _skew,
+    "kurtosis": _kurtosis,
+    "avg_return": _leaf_formula("nonzero_mean"),
+    "avg_win": _leaf_formula("up_mean"),
+    "avg_loss": _leaf_formula("down_mean"),
+    "win_rate": _win_rate,
+    "payoff_ratio": _payoff_ratio,
+    "profit_factor": _profit_factor,
+    "gain_to_pain_ratio": lambda o, L, s: o.div(L["x_sum"], o.abs(L["x_pains"])),
+    "common_sense_ratio": lambda o, L, s: _profit_factor(o, L, s) * _tail_ratio(o, L, s),
+    "tail_ratio": _tail_ratio,
+    "outlier_win_ratio": lambda o, L, s: o.div(L["p_win"], L["nonneg_mean"]),
+    "outlier_loss_ratio": lambda o, L, s: o.div(L["p_loss"], L["down_mean"]),
+    "cpc_index": _cpc_index,
+    "kelly_criterion": _kelly_criterion,
+    "risk_of_ruin": _risk_of_ruin,
+    "value_at_risk": lambda o, L, s: L["mean"] + s.var_z * L["std"],
+    "max_drawdown": _leaf_formula("maxdd"),
+    "ulcer_index": _ulcer_index,
+    "recovery_factor": _recovery_factor,
+    "calmar": lambda o, L, s: o.div(_cagr(o, L, s), o.abs(L["maxdd"])),
+    "drawdown_var": lambda o, L, s: L["dd_mean"] + _Z_DD * L["dd_std"],
+    "serenity_index": _serenity_index,
+    "beta": _beta,
+    "alpha": lambda o, L, s: (L["mean"] - _beta(o, L, s) * L["b_mean"]) * s.periods,
+    "information_ratio": lambda o, L, s: _annualized(o.div(L["act_mean"], L["act_std"]), s),
+    "correlation": _leaf_formula("corrb"),
+    "r_squared": lambda o, L, s: o.pow(L["corrb"], 2),
+    "treynor_ratio": lambda o, L, s: o.div((L["growth"] - 1) - (s.rf or 0.0), _beta(o, L, s)),
+    "autocorr": lambda o, L, s: o.abs(L["acorr"]),
+    "autocorr_penalty": _autocorr_penalty,
+    # the penalty is ≥ 1 or NaN: plain division
+    "smart_sharpe": lambda o, L, s: _sharpe(o, L, s) / _autocorr_penalty(o, L, s),
+    "smart_sortino": lambda o, L, s: _sortino(o, L, s) / _autocorr_penalty(o, L, s),
+    "smart_adjusted_sortino": lambda o, L, s: (
+        _sortino(o, L, s) / _autocorr_penalty(o, L, s) / _SQRT2
+    ),
+    "probabilistic_sharpe_ratio": _probabilistic_sharpe_ratio,
+}
+
+
+# ---------------------------------------------------------------------------
+# evaluators
+
+
+class _Leaves:
+    """What a formula indexes: ``L[name]`` calls ``get(name)``."""
+
+    def __init__(self, get):
+        self.get = get
+
+    def __getitem__(self, name):
+        return self.get(name)
+
+
+class _Null(Exception):
+    """A formula read a NULL leaf."""
+
+
+def evaluate(name: str, values: Mapping[str, Any], spec: Spec = Spec()) -> float | None:
+    """Formula ``name`` over collected leaf values (keyed by resolved leaf
+    name, plus any second-pass values it reads): None when it reads a None
+    leaf, as the in-plan expression would be NULL."""
+
+    def get(leaf):
+        v = values[_resolve(leaf, spec)]
+        if v is None:
+            raise _Null
+        return float(v)
+
+    try:
+        return FORMULAS[name](FLOAT, _Leaves(get), spec)
+    except _Null:
+        return None
+
+
+def leaves(names, spec: Spec) -> dict[str, Column]:
+    """The aggregate Columns the formulas ``names`` read, keyed by resolved
+    leaf name. Values a formula reads that are not leaves (a second-pass
+    ``ddcvar``) are left to the caller."""
+    seen: dict[str, None] = {}
+
+    def record(leaf):
+        seen[_resolve(leaf, spec)] = None
+        return 0.5  # no formula's denominator vanishes at 0.5
+
+    for name in names:
+        FORMULAS[name](_RECORD, _Leaves(record), spec)
+    return {
+        leaf: _leaf(leaf, spec)
+        for leaf in seen
+        if (leaf[2:] if leaf.startswith("x_") else leaf) in _LEAVES
+    }
+
+
+def _as_col(x) -> Column:
+    return x if isinstance(x, Column) else F.lit(x)
+
+
+def column(name: str, v: Column | str, **params: Any) -> Column:
+    """Formula ``name`` over ``v`` as ONE aggregate Column, its leaves
+    inlined (streaming windows, calendar buckets, ad-hoc ``agg`` calls)."""
+    spec = Spec(v=v, **params)
+    inline = _Leaves(lambda leaf: _leaf(_resolve(leaf, spec), spec))
+    return _as_col(FORMULAS[name](COLUMN, inline, spec))
+
+
+def project(
+    frame: DataFrame, outputs: Mapping[str, tuple[str, Spec]], keys=()
+) -> DataFrame:
+    """``outputs`` (column -> (formula, spec)) over ``frame`` grouped by
+    ``keys``: ONE aggregation of the distinct leaves, then ONE select of
+    the formulas over the named leaf columns. Lazy; each aggregate stays a
+    primitive, however nested the ratio."""
+    aliases: dict[tuple[int, str], str] = {}
+    aggs: list[Column] = []
+
+    def reader(spec: Spec) -> _Leaves:
+        def get(leaf):
+            key = (id(spec), _resolve(leaf, spec))
+            if key not in aliases:
+                aliases[key] = f"__leaf{len(aggs)}"
+                aggs.append(_leaf(key[1], spec).alias(aliases[key]))
+            return F.col(aliases[key])
+
+        return _Leaves(get)
+
+    cols = [
+        _as_col(FORMULAS[name](COLUMN, reader(spec), spec)).alias(out)
+        for out, (name, spec) in outputs.items()
+    ]
+    return frame.groupBy(*keys).agg(*aggs).select(*keys, *cols)

@@ -186,7 +186,7 @@ def _psr_x_sql(sr: str = "sr", sk: str = "sk", ku: str = "ku", n: str = "n") -> 
     """PSR test statistic (reference ``alphastats/stats.py:255-323``):
     (SR − SR*)/σ_SR with SR* = 0, σ_SR = √((1 + ½SR² − γ₃SR + ((γ₄−3)/4)SR²)/(n−1)).
     γ₄ here is the bias-corrected *excess* kurtosis (DuckDB KURTOSIS ==
-    Spark expressions.kurtosis), and the reference subtracts 3 from it
+    the expressions kurtosis formula), and the reference subtracts 3 from it
     again — mirrored verbatim."""
     return (
         f"({sr}) / SQRT((1 + 0.5*({sr})*({sr}) - ({sk})*({sr}) "
@@ -226,8 +226,8 @@ def _report_col_ctes(t: str, col: str) -> str:
     the report renders for column ``col`` of the joined frame ``jf``.
     Every scalar is aliased ``{t}_*`` so two column blocks cross-join
     safely into one 1-row frame. Computes the same values as
-    reports._column_leaves with reports._derive_column, reports._calendar_agg
-    and islands.drawdown_episode_stats."""
+    reports._column_leaves with the expressions formulas,
+    reports._calendar_agg and islands.drawdown_episode_stats."""
     z95 = repr(_Z95)
     return f""",
 w_{t} AS (SELECT d, {col} AS r, EXP(SUM(LN(1 + {col})) OVER (ORDER BY d)) AS w FROM jf),
@@ -1252,7 +1252,7 @@ FROM kjoined GROUP BY asset""")
 
     # Autocorr penalty: DuckDB evaluates the reference's O(n) lag-power sum
     # term-by-term via generate_series; the Spark side uses the closed-form
-    # geometric sums (expressions.geometric_sum_penalty) — same value.
+    # geometric sums (the expressions.autocorr_penalty formula) — same value.
     _PENALTY_CTE = """,
 pairs AS (SELECT r AS a, LEAD(r) OVER (ORDER BY d) AS b FROM rets),
 acoef AS (SELECT ABS(CORR(a, b)) AS coef FROM pairs WHERE b IS NOT NULL),
@@ -2405,8 +2405,8 @@ SELECT asset, CAST(d AS VARCHAR) AS d, ROUND(dd, {ROUND}) AS dd FROM kdds""",
             load_returns(spark, sf_dir),
             "30 days",
             metrics={
-                "comp": X.comp,
-                "volatility": X.volatility,
+                "comp": lambda c: X.column("comp", c),
+                "volatility": lambda c: X.column("volatility", c),
                 "n_obs": lambda c: F.count(c).cast("long"),
             },
         )
@@ -5463,7 +5463,7 @@ FROM c""")
             row = back.agg(
                 F.count("r").alias("n"),
                 F.round(F.sum("r"), ROUND).alias("sum_r"),
-                F.round(X.sharpe(F.col("r"), None, 252, True), ROUND).alias("sharpe"),
+                F.round(X.column("sharpe", "r"), ROUND).alias("sharpe"),
             ).collect()[0]
         finally:
             shutil.rmtree(d, ignore_errors=True)
@@ -5533,7 +5533,7 @@ FROM documents GROUP BY source""")
             row = back.where(F.col("__year") == 1995).agg(
                 F.count("r").alias("n"),
                 F.round(F.sum("r"), ROUND).alias("sum_r"),
-                F.round(X.sharpe(F.col("r"), None, 252, True), ROUND).alias("sharpe"),
+                F.round(X.column("sharpe", "r"), ROUND).alias("sharpe"),
             ).collect()[0]
         finally:
             shutil.rmtree(d, ignore_errors=True)

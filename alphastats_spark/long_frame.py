@@ -5,15 +5,19 @@ model and is right for a handful of strategies — but its plan grows one
 expression set per column, which caps out in the hundreds (codegen size,
 driver planning time). The long frame ``(key, date, r)`` is the shape a
 100 TB store actually uses, and its plan is O(1) in the number of assets:
-ONE aggregation with ~30 expressions grouped by key, ONE keyed drawdown
+ONE aggregation of ~35 primitive leaves grouped by key, ONE keyed drawdown
 enrichment (:mod:`operators.keyed`), ONE episodes pass — whether there are
 two assets or two million.
 
-``metrics_by_key`` computes the full scalar metric surface per key in 3
-jobs (enrichment+main agg, CVaR threshold join pass, episodes join):
+``metrics_by_key`` computes the full scalar metric surface per key from
+three joined branches — main aggregation, CVaR threshold join, episodes —
+over one persisted keyed enrichment (a traced ``perfbench`` tearsheet run
+at seed 1 counts 22 Spark jobs for the call):
 
-* single-pass metrics: the exact same Column builders the wide API uses
-  (:mod:`expressions`) — results match ``stats.*`` per asset bit-for-bit;
+* single-pass metrics: the formula table the wide API uses
+  (:mod:`expressions`), projected flat — one grouped aggregation of the
+  primitive leaves, one select of the formulas — so results match
+  ``stats.*`` per asset;
 * drawdown metrics ride the keyed prefix machinery;
 * CVaR's conditional mean uses a per-key threshold JOINED back (the
   literal-injection trick is per-frame, not per-key) — co-partitioned on
@@ -33,6 +37,17 @@ from alphastats_spark._utils import (
 )
 from alphastats_spark.exceptions import NoTemporalColumnError
 from alphastats_spark.operators import joins, keyed
+
+
+# metrics_by_key's single-pass columns, in output order
+_KEY_METRICS = (
+    "n_obs", "comp", "cagr", "sharpe", "sortino", "volatility", "exposure", "omega",
+    "expected_return", "best", "worst", "skew", "kurtosis", "avg_return", "avg_win",
+    "avg_loss", "win_rate", "payoff_ratio", "profit_factor", "gain_to_pain_ratio",
+    "common_sense_ratio", "tail_ratio", "outlier_win_ratio", "outlier_loss_ratio",
+    "kelly_criterion", "risk_of_ruin", "value_at_risk", "max_drawdown", "ulcer_index",
+    "recovery_factor",
+)
 
 
 def metrics_by_key(
@@ -55,7 +70,6 @@ def metrics_by_key(
         raise NoTemporalColumnError
     c = F.col(value_col)
     keys = [key_col]
-
     base = df.select(key_col, temporal, value_col)
     base = keyed.with_order_keyed(base, temporal)
     # peak positions ride along in the same prefix pass: the episode stats
@@ -68,58 +82,24 @@ def metrics_by_key(
     # returned lazily, so the cache must OUTLIVE this function — it fills on
     # the caller's first action and is evicted LRU (MEMORY_AND_DISK) or via
     # spark.catalog.clearCache(). An unpersist here would drop it before any
-    # action ever ran (round-2 advisor finding). The cached projection is
-    # narrow: (key, date, value, __dd) only.
+    # action ever ran. The cached projection is narrow: (key, date, value,
+    # __dd) only.
     base.persist()
-    dd = F.col("__dd")
 
-    main = base.groupBy(key_col).agg(
-        F.count(c).alias("n_obs"),
-        X.comp(c).alias("comp"),
-        X.cagr(c, rf=rf, periods=periods).alias("cagr"),
-        X.sharpe(c, rf, periods, True).alias("sharpe"),
-        X.sortino(c, rf, periods, True).alias("sortino"),
-        X.volatility(c, periods, True).alias("volatility"),
-        X.exposure(c).alias("exposure"),
-        X.omega(c).alias("omega"),
-        X.expected_return(c).alias("expected_return"),
-        F.max(c).alias("best"),
-        F.min(c).alias("worst"),
-        X.skew(c).alias("skew"),
-        X.kurtosis(c).alias("kurtosis"),
-        X.avg_return(c).alias("avg_return"),
-        X.avg_win(c).alias("avg_win"),
-        X.avg_loss(c).alias("avg_loss"),
-        X.win_rate(c).alias("win_rate"),
-        X.payoff_ratio(c).alias("payoff_ratio"),
-        X.profit_factor(c).alias("profit_factor"),
-        X.gain_to_pain_ratio(c, rf).alias("gain_to_pain_ratio"),
-        X.common_sense_ratio(c).alias("common_sense_ratio"),
-        X.tail_ratio(c).alias("tail_ratio"),
-        X.outlier_win_ratio(c).alias("outlier_win_ratio"),
-        X.outlier_loss_ratio(c).alias("outlier_loss_ratio"),
-        X.kelly_criterion(c).alias("kelly_criterion"),
-        X.risk_of_ruin(c).alias("risk_of_ruin"),
-        X.value_at_risk(c).alias("value_at_risk"),
-        F.min(dd).alias("max_drawdown"),
-        F.sqrt(X.fdiv(F.sum(F.pow(dd, 2)), F.count(c) - 1)).alias("ulcer_index"),
-        X.fdiv(F.abs(F.sum(c) - F.lit(float(rf))), F.abs(F.min(dd))).alias(
-            "recovery_factor"
-        ),
-    )
+    spec = X.Spec(v=c, dd="__dd", rf=rf, periods=periods)
+    main = X.project(base, {name: (name, spec) for name in _KEY_METRICS}, keys)
 
     # CVaR: per-key parametric VaR threshold joined back (no per-key literal
     # injection possible), then the conditional mean below it per key.
-    thresholds = base.groupBy(key_col).agg(
-        X.value_at_risk(c).alias("__var_t")
-    )
+    thresholds = X.project(base, {"__var_t": ("value_at_risk", spec)}, keys)
+    # An undefined threshold (one row) is NaN, as in stats.cvar.
+    t = F.first("__var_t")
     cvar = (
         base.join(thresholds, key_col)
         .groupBy(key_col)
         .agg(
-            F.coalesce(
-                F.mean(X.when_pl(c < F.col("__var_t"), c, None)),
-                F.first("__var_t"),
+            F.when(t.isNull() | F.isnan(t), X.NAN()).otherwise(
+                F.coalesce(F.mean(X.when_pl(c < F.col("__var_t"), c, None)), t)
             ).alias("cvar")
         )
     )
@@ -127,14 +107,16 @@ def metrics_by_key(
     episodes = keyed.episode_stats_keyed(
         base, keys, "__dd", length_mode="days", temporal_name=temporal,
         pos_col="__dd__pos",
-    ).select(
-        key_col,
-        F.col("longest_days").alias("longest_drawdown_days"),
-        F.col("avg_days").alias("avg_drawdown_days"),
-        F.col("avg_dd").alias("avg_drawdown"),
     )
-
-    return main.join(cvar, key_col, "left").join(episodes, key_col, "left")
+    # a key that never draws down has no episode row; its stats are 0, as
+    # the wide API's
+    return main.join(cvar, key_col, "left").join(episodes, key_col, "left").select(
+        *main.columns,
+        "cvar",
+        F.coalesce("longest_days", F.lit(0)).alias("longest_drawdown_days"),
+        F.coalesce("avg_days", F.lit(0.0)).alias("avg_drawdown_days"),
+        F.coalesce("avg_dd", F.lit(0.0)).alias("avg_drawdown"),
+    )
 
 
 def smart_ratios_by_key(
@@ -146,10 +128,10 @@ def smart_ratios_by_key(
     periods: int = 252,
 ) -> DataFrame:
     """Per-key sharpe/sortino plus their autocorrelation-penalized "smart"
-    variants — penalty computed IN-PLAN (:func:`expressions.
-    geometric_sum_penalty_col`), so a million keys never round-trip the
-    driver (the wide-frame path evaluates the closed form per column on
-    the driver — fine for dozens of columns, not for millions of keys).
+    variants — the penalty formula is projected IN-PLAN, so a million keys
+    never round-trip the driver (the wide-frame path evaluates the same
+    formula per column on the driver — fine for dozens of columns, not for
+    millions of keys).
 
     Pairing matches the reference: at each non-null row the "previous"
     value is the previous non-null value within the key (ffill-shift), via
@@ -166,22 +148,12 @@ def smart_ratios_by_key(
     )
     prev = F.when(c.isNotNull(), F.last(c, ignorenulls=True).over(w))
     enriched = df.select(key_col, temporal, value_col).withColumn("__prev", prev)
-
-    penalty = X.geometric_sum_penalty_col(
-        F.abs(F.corr(c, F.col("__prev"))), F.count(c)
+    spec = X.Spec(v=c, prev="__prev", rf=rf, periods=periods)
+    names = (
+        "n_obs", "autocorr", "autocorr_penalty", "sharpe", "sortino", "smart_sharpe",
+        "smart_sortino", "smart_adjusted_sortino",
     )
-    sharpe_ = X.sharpe(c, rf, periods, True)
-    sortino_ = X.sortino(c, rf, periods, True)
-    return enriched.groupBy(key_col).agg(
-        F.count(c).alias("n_obs"),
-        F.abs(F.corr(c, F.col("__prev"))).alias("autocorr"),
-        penalty.alias("autocorr_penalty"),
-        sharpe_.alias("sharpe"),
-        sortino_.alias("sortino"),
-        (sharpe_ / penalty).alias("smart_sharpe"),
-        (sortino_ / penalty).alias("smart_sortino"),
-        (sortino_ / penalty / F.lit(2.0**0.5)).alias("smart_adjusted_sortino"),
-    )
+    return X.project(enriched, {name: (name, spec) for name in names}, [key_col])
 
 
 def with_benchmark(
@@ -225,18 +197,11 @@ def benchmark_metrics_by_key(
     ratio, correlation, R², Treynor) in ONE grouped aggregation over the
     benchmark-attached long frame."""
     joined = with_benchmark(df, benchmark, key_col, temporal)
-    c = F.col(value_col)
-    b = F.col(BENCHMARK_RETURNS_COLNAME)
-    beta = X.fdiv(F.covar_samp(c, b), F.var_samp(b))
-    active = c - b
-    return joined.groupBy(key_col).agg(
-        ((F.mean(c) - beta * F.mean(b)) * periods).alias("alpha"),
-        beta.alias("beta"),
-        X.fdiv(F.mean(active), F.stddev_samp(active)).alias("information_ratio"),
-        F.corr(c, b).alias("correlation"),
-        F.pow(F.corr(c, b), 2).alias("r_squared"),
-        X.fdiv(X.comp(c) - F.lit(rf), beta).alias("treynor_ratio"),
+    spec = X.Spec(
+        v=value_col, b=BENCHMARK_RETURNS_COLNAME, rf=rf, periods=periods, annualize=False
     )
+    names = ("alpha", "beta", "information_ratio", "correlation", "r_squared", "treynor_ratio")
+    return X.project(joined, {name: (name, spec) for name in names}, [key_col])
 
 
 def correlation_matrix(

@@ -26,10 +26,11 @@ enrichment's prefix passes):
 5. one gaps-and-islands pass for drawdown episode rows.
 
 Spark aggregates only those leaves; every ratio (sharpe, sortino, Kelly,
-CPC, risk of ruin, beta, …) is derived on the driver from the collected
-row with ``_fdiv``/``_pow``, which reproduce ``expressions.fdiv`` and
-Spark's ``pow`` bit for bit. Nested in-plan ratios made the main pass's
-analysis and optimization cost more than its execution.
+CPC, risk of ruin, beta, …) is the :mod:`expressions` formula evaluated
+on the driver over the collected row, with the float op set that
+reproduces ``expressions.fdiv`` and Spark's ``pow`` bit for bit. Nested
+in-plan ratios made the main pass's analysis and optimization cost more
+than its execution.
 
 Report-only semantics preserved from the reference: NaN→null→**0** fill on
 the series (``reports.py:376-378`` — unlike the raw stats API which keeps
@@ -42,10 +43,10 @@ per-period rf subtraction (``reports.py:470-476``), alpha annualized with
 from __future__ import annotations
 
 import calendar as _calendar
+import dataclasses
 import datetime as dt
 import math
 from concurrent.futures import ThreadPoolExecutor
-from statistics import NormalDist
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -60,7 +61,15 @@ from alphastats_spark._utils import (
 )
 from alphastats_spark.operators import islands, joins, ordered
 
-_NORMAL = NormalDist()
+# Columns per main aggregation pass: a single pass over a WIDE frame
+# explodes Janino codegen superlinearly (~50 leaf aggregates per column incl.
+# exact-percentile object aggregates, plus 4 window/prefix expressions per
+# column in the drawdown machinery): measured driver OOM at 30 columns on a
+# 4 GB heap, and minutes of compile time just below that. Groups of this
+# many columns bound every generated method, at the cost of
+# ceil(cols/chunk) scans of the CACHED base frame — versus the reference's
+# O(rows × cols) collects.
+_AGG_CHUNK_COLUMNS = 8
 
 
 # ---------------------------------------------------------------------------
@@ -156,18 +165,10 @@ def metrics(
         )
 
         # ---- enrichment + aggregation, chunked over asset-column groups ------
-        # A single pass over a WIDE frame explodes Janino codegen superlinearly
-        # (~50 leaf aggregates per column incl. exact-percentile object
-        # aggregates, plus 4 window/prefix expressions per column in the
-        # drawdown machinery): measured driver OOM at 30 columns on a 4 GB
-        # heap, and minutes of compile time just below that. Processing groups
-        # of ``agg_chunk_columns`` (default 8) bounds every generated method,
-        # at the cost of ceil(cols/chunk) scans of the CACHED base frame —
-        # versus the reference's O(rows × cols) collects. The benchmark column
-        # rides along in every group so benchmark-relative aggregates stay
-        # single-pass.
-        chunk = max(1, int(kwargs.get("agg_chunk_columns", 8)))
-        main: dict[str, Any] = {}
+        # (_AGG_CHUNK_COLUMNS per group). The benchmark column rides along in
+        # every group so benchmark-relative aggregates stay single-pass.
+        chunk = _AGG_CHUNK_COLUMNS
+        vals: dict[str, dict[str, Any]] = {c: {} for c in output_names}
         episodes: dict[str, dict[str, float]] = {}
 
         # Independent report passes run as CONCURRENT Spark jobs (submitted
@@ -260,24 +261,25 @@ def metrics(
                 {c: f"__dd_{c}" for c in group},
                 {c: f"__dd_{c}__pos" for c in group},
             )
-            values = _agg_leaves(rdf, leaves)
+            for (name, c), v in _agg_leaves(rdf, leaves).items():
+                vals[c][name] = v
             for c in group:
-                main.update(
-                    _derive_column(values, c, rf, compounded, periods_per_year, windows)
-                )
+                vals[c]["ddvar"] = X.evaluate("drawdown_var", vals[c])
+                if full:
+                    vals[c]["var"] = X.evaluate("value_at_risk", vals[c])
 
             # dependent pass: the leaves whose SQL needs main-pass values
             s2_leaves: dict = {}
             for c in group:
-                s2_leaves.update(_stage2_leaves(main, c, full, benchmark_name))
-                main.update(dict.fromkeys((f"ddcvar_{c}", f"acorr_{c}", f"corrb_{c}")))
+                s2_leaves.update(_stage2_leaves(vals, c, full, benchmark_name))
+                vals[c].update(dict.fromkeys(("ddcvar", "acorr", "corrb")))
                 if full:
-                    main[f"cvar_{c}"] = main[f"var_{c}"]
+                    vals[c]["cvar"] = vals[c]["var"]
             if s2_leaves:
                 for (name, c), v in _agg_leaves(rdf, s2_leaves).items():
                     # a threshold with nothing below it is its own tail mean
                     threshold = _CVAR_THRESHOLD.get(name)
-                    main[f"{name}_{c}"] = main[f"{threshold}_{c}"] if v is None and threshold else v
+                    vals[c][name] = vals[c][threshold] if v is None and threshold else v
             episodes.update(eps_fut.result())
             rdf.unpersist()
             _persisted.remove(rdf)
@@ -311,11 +313,25 @@ def metrics(
                     values[c] = fn(c)
         return values
 
-    def g(name: str, c: str) -> float:
-        v = main[f"{name}_{c}"]
+    # Evaluation specs: the report's rf enters the excess-return ratios,
+    # CAGR, PSR, serenity and Treynor; calmar, all-time and recovery
+    # factor take none (the reference calls them with their defaults),
+    # and alpha annualizes with 252 regardless of periods_per_year
+    # (reference reports.py:509 calls stats.greeks with its default).
+    spec = X.Spec(rf=rf, periods=periods_per_year, compound=compounded)
+    no_rf = dataclasses.replace(spec, rf=None)
+    per_period = dataclasses.replace(spec, annualize=False)  # PSR, IR
+
+    def ev(name: str, c: str, s: X.Spec = spec) -> float:
+        v = X.evaluate(name, vals[c], s)
+        return math.nan if v is None else v
+
+    def leaf(name: str, c: str) -> float:
+        v = vals[c][name]
         return math.nan if v is None else float(v)
 
-    n_by_col = {c: int(g("n", c)) for c in output_names}
+    def metric_row(name: str, multiplier=1, s: X.Spec = spec) -> dict[str, Any]:
+        return per_col(lambda c: ev(name, c, s) * multiplier)
 
     if temporal and meta is not None:
         add("Start Period", per_col(lambda c: _format_date(meta[f"start_{c}"])))
@@ -324,109 +340,81 @@ def metrics(
         add("Start Period", dict.fromkeys(output_names, "-"))
         add("End Period", dict.fromkeys(output_names, "-"))
     add("Risk-Free Rate", dict.fromkeys(output_names, rf * pct))
-    add("Time in Market", per_col(lambda c: g("exposure", c) * pct))
+    add("Time in Market", metric_row("exposure", pct))
     add_sep()
 
     if compounded:
-        add("Cumulative Return", per_col(lambda c: g("comp", c) * pct))
+        add("Cumulative Return", metric_row("comp", pct))
     else:
-        add("Total Return", per_col(lambda c: g("sum", c) * pct))
-    add("CAGR﹪", per_col(lambda c: _cagr_value(main, c, periods_per_year) * pct))
+        add("Total Return", per_col(lambda c: leaf("sum", c) * pct))
+    add("CAGR﹪", metric_row("cagr", pct))
     add_sep()
 
-    add("Sharpe", per_col(lambda c: g("sharpe", c)))
-
-    def _psr(c: str, base: float) -> float:
-        # guards mirror the Spark expression path (F.sqrt of a negative
-        # radicand -> NaN, fdiv by 0 -> inf): a high per-period SR or
-        # strong positive skew can push the radicand negative, and a
-        # 1-row frame divides by n-1=0 - neither may abort the report
-        n = n_by_col[c]
-        if n is None or n <= 1:
-            return math.nan
-        skew_v, kurt_v = g("skew", c), g("kurt", c)
-        radicand = (
-            1 + (0.5 * base**2) - (skew_v * base) + (((kurt_v - 3) / 4) * base**2)
-        ) / (n - 1)
-        if not radicand > 0:  # negative, zero or nan
-            return math.nan
-        return _NORMAL.cdf((base - rf) / math.sqrt(radicand))
-
-    add("Prob. Sharpe Ratio", per_col(lambda c: _psr(c, g("sr0", c)) * pct))
-    penalties = {}
+    add("Sharpe", metric_row("sharpe"))
+    add("Prob. Sharpe Ratio", metric_row("probabilistic_sharpe_ratio", pct, per_period))
     if full:
-        for c in output_names:
-            coef = main[f"acorr_{c}"]
-            coef = math.nan if coef is None else abs(float(coef))
-            penalties[c] = X.geometric_sum_penalty(coef, n_by_col[c])
-        add("Smart Sharpe", per_col(lambda c: g("sharpe", c) / penalties[c]))
-    add("Sortino", per_col(lambda c: g("sortino", c)))
+        add("Smart Sharpe", metric_row("smart_sharpe"))
+    add("Sortino", metric_row("sortino"))
     if full:
-        add("Smart Sortino", per_col(lambda c: g("sortino", c) / penalties[c]))
-    add("Sortino/√2", per_col(lambda c: g("sortino", c) / math.sqrt(2)))
+        add("Smart Sortino", metric_row("smart_sortino"))
+    add("Sortino/√2", metric_row("adjusted_sortino"))
     if full:
-        add("Smart Sortino/√2", per_col(lambda c: g("sortino", c) / penalties[c] / math.sqrt(2)))
-    add("Omega", per_col(lambda c: g("omega", c)))
+        add("Smart Sortino/√2", metric_row("smart_adjusted_sortino"))
+    add("Omega", metric_row("omega"))
     add_sep()
 
-    add("Max Drawdown", per_col(lambda c: g("maxdd", c) * pct))
+    add("Max Drawdown", metric_row("max_drawdown", pct))
     add("Longest DD Days", per_col(lambda c: episodes[c]["longest_days"]))
 
     if full:
         add_sep()
-        add("Volatility (ann.)", per_col(lambda c: g("vol", c) * pct))
+        add("Volatility (ann.)", metric_row("volatility", pct))
         if has_bench:
-            add("R^2", bench_row(lambda c: g("corrb", c) ** 2))
-            add("Information Ratio", bench_row(lambda c: g("ir", c)))
-        add(
-            "Calmar",
-            per_col(
-                lambda c: _calmar_value(main, c, compounded, periods_per_year)
-            ),
-        )
+            add("R^2", bench_row(lambda c: ev("r_squared", c)))
+            add(
+                "Information Ratio",
+                bench_row(lambda c: ev("information_ratio", c, per_period)),
+            )
+        add("Calmar", metric_row("calmar", 1, no_rf))
         # the bias-corrected skew/kurtosis, the same values PSR reads
-        add("Skew", per_col(lambda c: g("skew", c)))
-        add("Kurtosis", per_col(lambda c: g("kurt", c)))
-        add("Expected Daily", per_col(lambda c: g("geo", c) * pct))
+        add("Skew", metric_row("skew"))
+        add("Kurtosis", metric_row("kurtosis"))
+        add("Expected Daily", metric_row("expected_return", pct))
         add("Expected Monthly", _cal_row(cal, "month", "geo", output_names, pct))
         add("Expected Yearly", _cal_row(cal, "year", "geo", output_names, pct))
-        add("Kelly Criterion", per_col(lambda c: g("kelly", c) * pct))
-        add("Risk of Ruin", per_col(lambda c: g("ror", c)))
-        add("Daily Value-at-Risk", per_col(lambda c: g("var", c) * pct))
-        add(
-            "Expected Shortfall (cVaR)",
-            per_col(lambda c: g("cvar", c) * pct),
-        )
-        add("Max Consecutive Wins", per_col(lambda c: int(g("cwin", c))))
-        add("Max Consecutive Losses", per_col(lambda c: int(g("closs", c))))
+        add("Kelly Criterion", metric_row("kelly_criterion", pct))
+        add("Risk of Ruin", metric_row("risk_of_ruin"))
+        add("Daily Value-at-Risk", metric_row("value_at_risk", pct))
+        add("Expected Shortfall (cVaR)", per_col(lambda c: leaf("cvar", c) * pct))
+        add("Max Consecutive Wins", per_col(lambda c: int(leaf("cwin", c))))
+        add("Max Consecutive Losses", per_col(lambda c: int(leaf("closs", c))))
 
     add_sep()
-    add("Gain/Pain Ratio", per_col(lambda c: g("g2p", c)))
+    add("Gain/Pain Ratio", metric_row("gain_to_pain_ratio"))
     add("Gain/Pain (1M)", _cal_row(cal, "month", "g2p_sum", output_names, 1))
     add_sep()
-    add("Payoff Ratio", per_col(lambda c: g("payoff", c)))
-    add("Profit Factor", per_col(lambda c: g("pf", c)))
-    add("Common Sense Ratio", per_col(lambda c: g("csr", c)))
-    add("CPC Index", per_col(lambda c: g("cpc", c)))
-    add("Tail Ratio", per_col(lambda c: g("tail", c)))
-    add("Outlier Win Ratio", per_col(lambda c: g("outw", c)))
-    add("Outlier Loss Ratio", per_col(lambda c: g("outl", c)))
+    add("Payoff Ratio", metric_row("payoff_ratio"))
+    add("Profit Factor", metric_row("profit_factor"))
+    add("Common Sense Ratio", metric_row("common_sense_ratio"))
+    add("CPC Index", metric_row("cpc_index"))
+    add("Tail Ratio", metric_row("tail_ratio"))
+    add("Outlier Win Ratio", metric_row("outlier_win_ratio"))
+    add("Outlier Loss Ratio", metric_row("outlier_loss_ratio"))
     add_sep()
+
+    window_spec = X.Spec(periods=periods_per_year)
 
     def window_row(key: str, annualized: bool = False) -> dict[str, Any]:
         # an EMPTY prepared frame (e.g. a disjoint-date benchmark under
         # match_dates=True) has no window aggregates at all - emit "-"
         # rows rather than KeyError deep in assembly
-        if not temporal or f"w_{key}_{output_names[0]}" not in main:
+        if not temporal or f"wg_{key}" not in vals[output_names[0]]:
             return dict.fromkeys(output_names, "-")
         values = {}
         for c in output_names:
-            compv = g(f"w_{key}", c)
-            if annualized:
-                years = g(f"wn_{key}", c) / periods_per_year
-                values[c] = (_pow(1 + compv, _fdiv(1.0, years)) - 1) * pct
-            else:
-                values[c] = compv * pct
+            window = {"growth": vals[c][f"wg_{key}"], "n": vals[c].get(f"wn_{key}")}
+            v = X.evaluate("cagr" if annualized else "comp", window, window_spec)
+            values[c] = (math.nan if v is None else v) * pct
         return values
 
     add("MTD", window_row("mtd"))
@@ -437,18 +425,12 @@ def metrics(
     add("3Y (ann.)", window_row("3y", annualized=True))
     add("5Y (ann.)", window_row("5y", annualized=True))
     add("10Y (ann.)", window_row("10y", annualized=True))
-    alltime_key = "comp" if compounded else "sum"
-    add(
-        "All-time (ann.)",
-        per_col(
-            lambda c: _cagr_value(main, c, periods_per_year, alltime_key) * pct
-        ),
-    )
+    add("All-time (ann.)", metric_row("cagr", pct, no_rf))
 
     if full:
         add_sep()
-        add("Best Day", per_col(lambda c: g("best", c) * pct))
-        add("Worst Day", per_col(lambda c: g("worst", c) * pct))
+        add("Best Day", metric_row("best", pct))
+        add("Worst Day", metric_row("worst", pct))
         add("Best Month", _cal_row(cal, "month", "best", output_names, pct))
         add("Worst Month", _cal_row(cal, "month", "worst", output_names, pct))
         add("Best Year", _cal_row(cal, "year", "best", output_names, pct))
@@ -457,32 +439,25 @@ def metrics(
     add_sep()
     add("Avg. Drawdown", per_col(lambda c: episodes[c]["avg_dd"] * pct))
     add("Avg. Drawdown Days", per_col(lambda c: episodes[c]["avg_days"]))
-    add("Recovery Factor", per_col(lambda c: g("recov", c)))
-    add("Ulcer Index", per_col(lambda c: g("ulcer", c)))
-    add(
-        "Serenity Index",
-        per_col(lambda c: _serenity_value(main, c, rf)),
-    )
+    add("Recovery Factor", metric_row("recovery_factor", 1, no_rf))
+    add("Ulcer Index", metric_row("ulcer_index"))
+    add("Serenity Index", metric_row("serenity_index"))
 
     if full:
         add_sep()
         add("Avg. Up Month", _cal_row(cal, "month", "avg_win", output_names, pct))
         add("Avg. Down Month", _cal_row(cal, "month", "avg_loss", output_names, pct))
-        add("Win Days", per_col(lambda c: g("winrate", c) * pct))
+        add("Win Days", metric_row("win_rate", pct))
         add("Win Month", _cal_row(cal, "month", "winrate", output_names, pct))
         add("Win Quarter", _cal_row(cal, "quarter", "winrate", output_names, pct))
         add("Win Year", _cal_row(cal, "year", "winrate", output_names, pct))
         if has_bench:
             add_sep()
-            add("Beta", bench_row(lambda c: g("beta", c)))
-            # alpha annualized with 252 regardless of periods_per_year —
-            # reference reports.py:509 calls stats.greeks with its default.
-            add("Alpha", bench_row(lambda c: (g("mean", c) - g("beta", c) * g("mean", benchmark_name)) * 252))
-            add("Correlation", bench_row(lambda c: g("corrb", c) * pct))
-            add(
-                "Treynor Ratio",
-                bench_row(lambda c: _fdiv(g("comp", c) - rf, g("beta", c)) * pct),
-            )
+            add("Beta", bench_row(lambda c: ev("beta", c)))
+            alpha = dataclasses.replace(spec, periods=252)
+            add("Alpha", bench_row(lambda c: ev("alpha", c, alpha)))
+            add("Correlation", bench_row(lambda c: ev("correlation", c) * pct))
+            add("Treynor Ratio", bench_row(lambda c: ev("treynor_ratio", c) * pct))
 
     if numeric:
         return _build_numeric_df(rows, output_names)
@@ -581,70 +556,46 @@ def _dbl(x: float) -> str:
     return f"({x!r}D)"
 
 
-# Percentile points and VaR z-scores of expressions.tail_ratio,
-# outlier_*_ratio, value_at_risk and the serenity drawdown VaR: ``1 - 0.95``
-# is 0.050000000000000044, and the leaves must aggregate the same doubles.
-_P_HI, _P_LO, _P_WIN, _P_LOSS = 0.95, 1 - 0.95, 0.99, 0.01
-_Z_VAR = _NORMAL.inv_cdf(1 - 0.95)
-_Z_DDVAR = _NORMAL.inv_cdf(0.05)
+# the formulas each column's main pass aggregates the leaves of
+_MAIN_FORMULAS = (
+    "exposure", "comp", "cagr", "sharpe", "sortino", "omega", "max_drawdown",
+    "drawdown_var", "ulcer_index", "recovery_factor", "serenity_index",
+    "probabilistic_sharpe_ratio", "expected_return", "gain_to_pain_ratio",
+    "payoff_ratio", "profit_factor", "common_sense_ratio", "cpc_index", "tail_ratio",
+    "outlier_win_ratio", "outlier_loss_ratio",
+)
+_FULL_FORMULAS = (
+    "volatility", "kelly_criterion", "risk_of_ruin", "value_at_risk", "best", "worst",
+)
 
 
 def _column_leaves(c, rf, compounded, full, windows) -> dict:
     """Primitive aggregates of column ``c`` for the main pass, keyed
-    ``(leaf, c)``: SQL text, or a Column where Spark SQL has no function
-    (``product``). The report fills nulls before any pass, so the Polars
-    null-propagating when/then of ``expressions`` is a plain CASE here."""
-    q, dd = _q(c), _q(f"__dd_{c}")
-    x = f"({q} - {_dbl(float(rf))})" if rf else q  # excess return
-    sql = {
-        "n": f"count({q})",
-        "nonzero": f"sum(CAST({q} <> 0 AS BIGINT))",
-        "wins": f"sum(CAST({q} > 0 AS BIGINT))",
-        "losses": f"sum(CAST({q} < 0 AS BIGINT))",
-        "sum": f"sum({q})",
-        "mean": f"avg({q})",
-        "std": f"stddev_samp({q})",
-        "skewness": f"skewness({q})",
-        "kurtosis": f"kurtosis({q})",
-        "gains": f"sum(CASE WHEN {q} >= 0 THEN {q} ELSE 0.0D END)",
-        "pains": f"sum(CASE WHEN {q} < 0 THEN {q} ELSE 0.0D END)",
-        "up_mean": f"avg(CASE WHEN {q} > 0 THEN {q} END)",
-        "down_mean": f"avg(CASE WHEN {q} < 0 THEN {q} END)",
-        "nonneg_mean": f"avg(CASE WHEN {q} >= 0 THEN {q} END)",
-        "omega_up": f"sum(greatest({q}, 0.0D))",
-        "omega_down": f"sum(greatest(-{q}, 0.0D))",
-        "p_hi": f"percentile({q}, {_dbl(_P_HI)})",
-        "p_lo": f"percentile({q}, {_dbl(_P_LO)})",
-        "p_win": f"percentile({q}, {_dbl(_P_WIN)})",
-        "p_loss": f"percentile({q}, {_dbl(_P_LOSS)})",
-        "x_sum": f"sum({x})",
-        "x_mean": f"avg({x})",
-        "x_std": f"stddev_samp({x})",
-        "x_pains": f"sum(CASE WHEN {x} < 0 THEN {x} ELSE 0.0D END)",
-        "x_down2": f"avg(pow(CASE WHEN {x} < 0 THEN {x} ELSE 0.0D END, 2))",
-        "maxdd": f"min({dd})",
-        "dd_sumsq": f"sum(pow({dd}, 2))",
-        "dd_mean": f"avg({dd})",
-        "dd_std": f"stddev_samp({dd})",
+    ``(leaf, c)``: the leaves of the report's formulas (Columns), plus the
+    report's own SQL leaves — the lag and streak bounds of full mode and
+    the trailing-window products."""
+    q = _q(c)
+    spec = X.Spec(v=F.col(q), dd=F.col(_q(f"__dd_{c}")), rf=rf, compound=compounded)
+    names = _MAIN_FORMULAS + (_FULL_FORMULAS if full else ())
+    found = {
+        **X.leaves(names, spec),
+        # calmar and all-time CAGR take no rf
+        **X.leaves(("calmar",), dataclasses.replace(spec, rf=None)),
     }
+    leaves: dict = {(k, c): v for k, v in found.items()}
     if full:
         idx, prev = _q("__idx"), _q(f"__prev_{c}")
-        sql.update(
-            best=f"max({q})",
-            worst=f"min({q})",
-            lag_hi=f"max(CASE WHEN {prev} IS NOT NULL THEN {q} END)",
-            lag_lo=f"min(CASE WHEN {prev} IS NOT NULL THEN {q} END)",
-            prev_hi=f"max({prev})",
-            prev_lo=f"min({prev})",
-            cwin=f"coalesce(max(CASE WHEN {q} > 0 THEN {idx} - "
+        sql = {
+            "lag_hi": f"max(CASE WHEN {prev} IS NOT NULL THEN {q} END)",
+            "lag_lo": f"min(CASE WHEN {prev} IS NOT NULL THEN {q} END)",
+            "prev_hi": f"max({prev})",
+            "prev_lo": f"min({prev})",
+            "cwin": f"coalesce(max(CASE WHEN {q} > 0 THEN {idx} - "
             f"coalesce({_q(f'__lbw_{c}')}, 0) ELSE 0 END), 0)",
-            closs=f"coalesce(max(CASE WHEN {q} < 0 THEN {idx} - "
+            "closs": f"coalesce(max(CASE WHEN {q} < 0 THEN {idx} - "
             f"coalesce({_q(f'__lbl_{c}')}, 0) ELSE 0 END), 0)",
-        )
-    leaves = {(k, c): v for k, v in sql.items()}
-    leaves[("growth", c)] = F.product(F.expr(f"{q} + 1"))
-    if compounded and rf:
-        leaves[("x_growth", c)] = F.product(F.expr(f"{x} + 1"))
+        }
+        leaves.update({(k, c): v for k, v in sql.items()})
     ts = _q(ordered.ORDER_COL)
     for key, (kind, bound) in (windows or {}).items():
         if kind == "ym":
@@ -660,232 +611,87 @@ def _column_leaves(c, rf, compounded, full, windows) -> dict:
 
 
 def _bench_leaves(c, bench_name) -> dict:
-    q, b = _q(c), _q(bench_name)
-    return {
-        ("covb", c): f"covar_samp({q}, {b})",
-        ("varb", c): f"var_samp({b})",
-        ("act_mean", c): f"avg({q} - {b})",
-        ("act_std", c): f"stddev_samp({q} - {b})",
-    }
+    spec = X.Spec(v=F.col(_q(c)), b=F.col(_q(bench_name)))
+    names = ("alpha", "beta", "information_ratio", "treynor_ratio")
+    return {(k, c): v for k, v in X.leaves(names, spec).items()}
 
 
 # stage-2 leaf -> the main-pass threshold it falls back to
 _CVAR_THRESHOLD = {"ddcvar": "ddvar", "cvar": "var"}
 
 
-def _stage2_leaves(main, c, full, bench_name) -> dict:
-    """Leaves whose SQL needs main-pass values. CVaR and the drawdown CVaR
-    are tail means below a VaR threshold injected as a literal. The
-    correlations are aggregated only where both sides vary: under ANSI
-    division Spark's ``corr`` raises on a zero-variance input rather than
-    returning NULL, so a skipped one stays NULL."""
+def _stage2_leaves(vals, c, full, bench_name) -> dict:
+    """Leaves whose SQL needs main-pass values (``vals``: column -> its
+    collected values). CVaR and the drawdown CVaR are tail means below a
+    VaR threshold injected as a literal. The correlations are aggregated
+    only where both sides vary: under ANSI division Spark's ``corr`` raises
+    on a zero-variance input rather than returning NULL, so a skipped one
+    stays NULL."""
 
     def known(v):
         return v is not None and not math.isnan(v)
 
-    def varies(hi, lo):
-        return known(main[hi]) and known(main[lo]) and main[hi] > main[lo]
+    def varies(col, hi, lo):
+        v = vals[col]
+        return known(v[hi]) and known(v[lo]) and v[hi] > v[lo]
 
     q = _q(c)
     leaves = {}
-    thresholds = {"ddcvar": (f"__dd_{c}", main[f"ddvar_{c}"])}
+    thresholds = {"ddcvar": (f"__dd_{c}", vals[c]["ddvar"])}
     if full:
-        thresholds["cvar"] = (c, main[f"var_{c}"])
+        thresholds["cvar"] = (c, vals[c]["var"])
     for name, (col, t) in thresholds.items():
         if known(t):
             leaves[(name, c)] = f"avg(CASE WHEN {_q(col)} < {_dbl(t)} THEN {_q(col)} END)"
-    if full and varies(f"lag_hi_{c}", f"lag_lo_{c}") and varies(f"prev_hi_{c}", f"prev_lo_{c}"):
-        leaves[("acorr", c)] = f"corr({q}, {_q(f'__prev_{c}')})"
+    if full and varies(c, "lag_hi", "lag_lo") and varies(c, "prev_hi", "prev_lo"):
+        spec = X.Spec(v=F.col(q), prev=F.col(_q(f"__prev_{c}")))
+        leaves[("acorr", c)] = X.leaves(("autocorr",), spec)["acorr"]
     if (
         full and bench_name and c != bench_name
-        and varies(f"best_{c}", f"worst_{c}")
-        and varies(f"best_{bench_name}", f"worst_{bench_name}")
+        and varies(c, "best", "worst")
+        and varies(bench_name, "best", "worst")
     ):
-        leaves[("corrb", c)] = f"corr({q}, {_q(bench_name)})"
+        spec = X.Spec(v=F.col(q), b=F.col(_q(bench_name)))
+        leaves[("corrb", c)] = X.leaves(("correlation",), spec)["corrb"]
     return leaves
 
 
 def _agg_leaves(frame: DataFrame, leaves: dict) -> dict:
     """One aggregation job over ``leaves`` (key -> SQL text or Column);
-    returns key -> collected value. Leaves with the same SQL text (the
-    excess-return leaves when rf is 0, say) are aggregated once."""
-    aliases: dict = {}
-    cols, by_text = [], {}
-    for key, expr in leaves.items():
-        if isinstance(expr, str):
-            if expr not in by_text:
-                by_text[expr] = f"_l{len(cols)}"
-                cols.append(F.expr(expr).alias(by_text[expr]))
-            aliases[key] = by_text[expr]
-        else:
-            aliases[key] = f"_l{len(cols)}"
-            cols.append(expr.alias(aliases[key]))
+    returns key -> collected value."""
+    aliases = {key: f"_l{i}" for i, key in enumerate(leaves)}
+    cols = [
+        (F.expr(expr) if isinstance(expr, str) else expr).alias(aliases[key])
+        for key, expr in leaves.items()
+    ]
     row = frame.agg(*cols).first()
     return {key: row[alias] for key, alias in aliases.items()}
-
-
-# ---------------------------------------------------------------------------
-# driver-side derivation
-#
-# Every ratio is derived here from the collected leaves instead of inside
-# the Spark plan: expressions.fdiv copies its numerator into 5 CASE
-# branches and its denominator into 3, so ratios of ratios (Kelly, CPC,
-# risk of ruin) grow multiplicatively, and analysing and optimizing those
-# trees cost more than aggregating the frame. Each formula below is the
-# expressions.* formula with the same floating-point operations in the same
-# order, so it returns the same double. Every operation in them is
-# null-intolerant, so SQL NULL propagates through a formula as a whole: it
-# is NULL exactly when one of its leaves is (see _derive).
-
-
-def _fdiv(num: float, den: float) -> float:
-    """expressions.fdiv on doubles: x/0 is ±inf, 0/0 and NaN/0 are NaN."""
-    if den != 0:
-        return num / den
-    if math.isnan(num) or num == 0:
-        return math.nan
-    return math.inf if num > 0 else -math.inf
-
-
-def _pow(base: float, exp: float) -> float:
-    """Spark's pow (``java.lang.Math.pow``) on doubles. It differs from
-    ``math.pow``, which returns 1 for ``pow(1, nan)`` and ``pow(±1, ±inf)``
-    and raises on a zero base with a negative exponent, a negative base
-    with a non-integer exponent, and overflow."""
-    if math.isnan(exp) or (math.isnan(base) and exp != 0):
-        return math.nan
-    if math.isinf(exp) and abs(base) == 1:
-        return math.nan
-    try:
-        return math.pow(base, exp)
-    except (ValueError, OverflowError):
-        pass
-    if base < 0 and not exp.is_integer():
-        return math.nan
-    # a pole (zero base, negative exponent) or an overflow: infinite, negative
-    # for a negative (or -0.0) base under an odd exponent
-    odd = exp.is_integer() and math.fmod(exp, 2) != 0
-    return -math.inf if odd and math.copysign(1, base) < 0 else math.inf
-
-
-def _sqrt(x: float) -> float:
-    """Spark's sqrt: NaN for a negative radicand instead of raising."""
-    return math.sqrt(x) if x >= 0 else math.nan
-
-
-def _derive(values: dict, c, formulas: dict) -> dict:
-    """Column ``c``'s leaves, plus each formula ``name: (fn, *leaf_names)``
-    evaluated over them, keyed ``{name}_{c}``. A formula is None (SQL NULL)
-    when any of its leaves is, as the in-plan expression would be."""
-    out = {f"{name}_{col}": v for (name, col), v in values.items() if col == c}
-    for name, (fn, *names) in formulas.items():
-        args = [values[(leaf, c)] for leaf in names]
-        none = any(a is None for a in args)
-        out[f"{name}_{c}"] = None if none else fn(*(float(a) for a in args))
-    return out
-
-
-def _derive_column(values: dict, c, rf, compounded, ppy, windows) -> dict:
-    """The report's per-column scalars, keyed ``{metric}_{c}``, from the main
-    pass's leaves (``_column_leaves`` and ``_bench_leaves``)."""
-    root = ppy**0.5
-
-    def payoff(up_mean, down_mean):
-        return _fdiv(up_mean, abs(down_mean))
-
-    def profit_factor(gains, pains):
-        return _fdiv(gains, abs(pains))
-
-    def tail(p_hi, p_lo):
-        return _fdiv(abs(p_hi), abs(p_lo))
-
-    def skew(n, skewness):
-        return _fdiv(_sqrt(n * (n - 1)), n - 2) * skewness
-
-    def kurt(n, kurtosis):
-        return _fdiv(n - 1, (n - 2) * (n - 3)) * ((n + 1) * kurtosis + 6)
-
-    def cpc(gains, pains, wins, losses, nonzero):
-        avg_win = _fdiv(gains, wins)
-        avg_loss = _fdiv(abs(pains), losses)
-        return profit_factor(gains, pains) * _fdiv(avg_win, avg_loss) * _fdiv(wins, nonzero)
-
-    def kelly(up_mean, down_mean, wins, nonzero):
-        w, p = payoff(up_mean, down_mean), _fdiv(wins, nonzero)
-        return _fdiv((w * p) - (1 - p), w)
-
-    def risk_of_ruin(wins, nonzero, n):
-        p = _fdiv(wins, nonzero)
-        return _pow(_fdiv(1 - p, 1 + p), n)
-
-    formulas = {
-        "exposure": (_fdiv, "nonzero", "n"),
-        "comp": (lambda g: g - 1, "growth"),
-        "sharpe": (lambda m, s: _fdiv(m, s) * root, "x_mean", "x_std"),
-        "sr0": (_fdiv, "mean", "std"),
-        "skew": (skew, "n", "skewness"),
-        "kurt": (kurt, "n", "kurtosis"),
-        "sortino": (lambda m, d2: _fdiv(m, _sqrt(d2)) * root, "x_mean", "x_down2"),
-        "omega": (_fdiv, "omega_up", "omega_down"),
-        "g2p": (lambda s, p: _fdiv(s, abs(p)), "x_sum", "x_pains"),
-        "payoff": (payoff, "up_mean", "down_mean"),
-        "pf": (profit_factor, "gains", "pains"),
-        "csr": (
-            lambda g, p, hi, lo: profit_factor(g, p) * tail(hi, lo),
-            "gains", "pains", "p_hi", "p_lo",
-        ),
-        "cpc": (cpc, "gains", "pains", "wins", "losses", "nonzero"),
-        "tail": (tail, "p_hi", "p_lo"),
-        "outw": (_fdiv, "p_win", "nonneg_mean"),
-        "outl": (_fdiv, "p_loss", "down_mean"),
-        "recov": (lambda s, m: _fdiv(abs(s), abs(m)), "sum", "maxdd"),
-        "ulcer": (lambda ss, n: _sqrt(_fdiv(ss, n - 1)), "dd_sumsq", "n"),
-        "ddvar": (lambda m, s: m + _Z_DDVAR * s, "dd_mean", "dd_std"),
-        "geo": (lambda g, n: _pow(g, _fdiv(1.0, n)) - 1, "growth", "n"),
-    }
-    if compounded:
-        formulas["cagrbase"] = (lambda g: g - 1, "x_growth" if rf else "growth")
-    else:
-        formulas["cagrbase"] = (lambda s: s, "x_sum")
-    if ("best", c) in values:  # full mode
-        formulas.update(
-            vol=(lambda s: s * root, "std"),
-            kelly=(kelly, "up_mean", "down_mean", "wins", "nonzero"),
-            ror=(risk_of_ruin, "wins", "nonzero", "n"),
-            var=(lambda m, s: m + _Z_VAR * s, "mean", "std"),
-            winrate=(_fdiv, "wins", "nonzero"),
-        )
-    if ("covb", c) in values:
-        formulas.update(
-            beta=(_fdiv, "covb", "varb"),
-            ir=(_fdiv, "act_mean", "act_std"),
-        )
-    for key in windows or {}:
-        formulas[f"w_{key}"] = (lambda g: g - 1, f"wg_{key}")
-    return _derive(values, c, formulas)
 
 
 # ---------------------------------------------------------------------------
 # calendar pass
 
 
+# calendar row -> formula over the per-period compounded returns
+_CAL_FORMULAS = {
+    "geo": "expected_return", "winrate": "win_rate", "best": "best", "worst": "worst",
+    "avg_win": "avg_win", "avg_loss": "avg_loss",
+}
+
+
+def _calendar_specs(c, rf) -> tuple[X.Spec, X.Spec]:
+    """Specs over one column's per-period compounded (``cmp_``) and summed
+    (``sm_``, for gain/pain) returns."""
+    return X.Spec(v=F.col(_q(f"cmp_{c}"))), X.Spec(v=F.col(_q(f"sm_{c}")), rf=rf)
+
+
 def _calendar_leaves(c, rf) -> dict:
-    """Leaves over one column's per-period compounded (``cmp_``) and summed
-    (``sm_``) returns."""
-    p, sm = _q(f"cmp_{c}"), _q(f"sm_{c}")
-    x = f"({sm} - {_dbl(float(rf))})" if rf else sm
-    return {
-        ("growth", c): F.product(F.expr(f"{p} + 1")),
-        ("n", c): f"count({p})",
-        ("best", c): f"max({p})",
-        ("worst", c): f"min({p})",
-        ("avg_win", c): f"avg(CASE WHEN {p} > 0 THEN {p} END)",
-        ("avg_loss", c): f"avg(CASE WHEN {p} < 0 THEN {p} END)",
-        ("wins", c): f"sum(CAST({p} > 0 AS BIGINT))",
-        ("nonzero", c): f"sum(CAST({p} <> 0 AS BIGINT))",
-        ("x_sum", c): f"sum({x})",
-        ("x_pains", c): f"sum(CASE WHEN {x} < 0 THEN {x} ELSE 0.0D END)",
-    }
+    """Leaves keyed ``(leaf, c)``, ``sm_``-prefixed over the summed returns."""
+    cmp_spec, sm_spec = _calendar_specs(c, rf)
+    leaves = {(k, c): v for k, v in X.leaves(_CAL_FORMULAS.values(), cmp_spec).items()}
+    for k, v in X.leaves(("gain_to_pain_ratio",), sm_spec).items():
+        leaves[(f"sm_{k}", c)] = v
+    return leaves
 
 
 def _calendar_agg(filled, temporal, output_names, granularity, rf):
@@ -898,21 +704,21 @@ def _calendar_agg(filled, temporal, output_names, granularity, rf):
         keys = [F.year(ts).alias("__y")]
     per_col = []
     for c in output_names:
-        per_col.append(X.comp(F.col(c)).alias(f"cmp_{c}"))
-        per_col.append(F.sum(F.col(c)).alias(f"sm_{c}"))
+        per_col.append(X.column("comp", F.col(_q(c))).alias(f"cmp_{c}"))
+        per_col.append(F.sum(F.col(_q(c))).alias(f"sm_{c}"))
     bucketed = filled.groupBy(*keys).agg(*per_col)
     leaves: dict = {}
     for c in output_names:
         leaves.update(_calendar_leaves(c, rf))
     values = _agg_leaves(bucketed, leaves)
-    formulas = {
-        "geo": (lambda g, n: _pow(g, _fdiv(1.0, n)) - 1, "growth", "n"),
-        "winrate": (_fdiv, "wins", "nonzero"),
-        "g2p_sum": (lambda s, p: _fdiv(s, abs(p)), "x_sum", "x_pains"),
-    }
     out: dict = {}
     for c in output_names:
-        out.update(_derive(values, c, formulas))
+        cmp_spec, sm_spec = _calendar_specs(c, rf)
+        cmp_vals = {k: v for (k, col), v in values.items() if col == c}
+        sm_vals = {k[3:]: v for k, v in cmp_vals.items() if k.startswith("sm_")}
+        for row, name in _CAL_FORMULAS.items():
+            out[f"{row}_{c}"] = X.evaluate(name, cmp_vals, cmp_spec)
+        out[f"g2p_sum_{c}"] = X.evaluate("gain_to_pain_ratio", sm_vals, sm_spec)
     return out
 
 
@@ -925,39 +731,6 @@ def _cal_row(cal, granularity, key, output_names, multiplier):
         v = row[f"{key}_{c}"]
         out[c] = math.nan if v is None else float(v) * multiplier
     return out
-
-
-# ---------------------------------------------------------------------------
-# driver-side scalar assembly
-
-
-def _cagr_value(main, c, ppy, key: str = "cagrbase") -> float:
-    """expressions.cagr on the collected total: ``pow(total, 1 / years) - 1``."""
-    base = main[f"{key}_{c}"]
-    if base is None:
-        return math.nan
-    return _pow(float(base) + 1, _fdiv(1.0, main[f"n_{c}"] / ppy)) - 1
-
-
-def _calmar_value(main, c, compounded, ppy) -> float:
-    maxdd = main[f"maxdd_{c}"]
-    if maxdd is None:
-        return math.nan
-    return _fdiv(_cagr_value(main, c, ppy, "comp" if compounded else "sum"), abs(maxdd))
-
-
-def _serenity_value(main, c, rf) -> float:
-    dd_cvar = main[f"ddcvar_{c}"]
-    if dd_cvar is None:
-        return math.nan
-    std = main[f"std_{c}"]
-    ulcer = main[f"ulcer_{c}"]
-    total = main[f"sum_{c}"]
-    if std is None or ulcer is None or total is None or not std:
-        return math.nan
-    pitfall = -float(dd_cvar) / float(std)
-    denom = float(ulcer) * pitfall
-    return (float(total) - rf) / denom if denom else math.nan
 
 
 # ---------------------------------------------------------------------------

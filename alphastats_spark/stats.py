@@ -6,9 +6,12 @@ same ~80 QuantStats-compatible metrics, column-wise over every numeric
 column, NaN→null on ingest, Polars null-skipping aggregation — but the
 execution strategy is Catalyst's:
 
-* every scalar metric is a single ``df.agg`` over Column expressions from
-  :mod:`alphastats_spark.expressions` (one job, whole-stage codegen,
-  map-side partial aggregation);
+* every scalar metric is a formula of
+  :mod:`alphastats_spark.expressions`: one ``df.agg`` of its primitive
+  leaves, then one select of the formula over them (one job, whole-stage
+  codegen, map-side partial aggregation); the few that need a value the
+  Spark pass cannot give (PSR's normal CDF, the autocorrelation penalty's
+  second pass) evaluate the same formula over the collected leaves;
 * order-dependent metrics (drawdowns, streaks, episodes) ride the
   distributed prefix machinery in :mod:`alphastats_spark.operators.ordered`
   instead of the reference's driver loops;
@@ -23,10 +26,9 @@ scalar out), mirroring the reference's Series/DataFrame overloads.
 from __future__ import annotations
 
 import math
-from statistics import NormalDist
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from alphastats_spark import expressions as X
@@ -35,13 +37,10 @@ from alphastats_spark._utils import (
     get_temporal_column_name,
     numeric_column_names,
     prepare_benchmark,
-    to_excess_returns,
     to_returns_df,
 )
 from alphastats_spark.exceptions import NoTemporalColumnError
 from alphastats_spark.operators import islands, joins, ordered
-
-_NORMAL = NormalDist()
 
 __all__ = [
     "comp", "cagr", "max_drawdown", "sharpe", "sortino",
@@ -72,11 +71,32 @@ __all__ = [
 # result helpers
 
 
-def _agg_result(df: DataFrame, cols: list[str], expr_fn, scalar_mode: bool):
-    res = df.agg(*[expr_fn(F.col(c)).alias(c) for c in cols])
-    if scalar_mode:
-        return _first_scalar(res, cols[0])
-    return res
+def _project(df: DataFrame, name: str, scalar_mode: bool, cols: list[str] | None = None,
+             **params):
+    """Formula ``name`` per column: one flat aggregation of its leaves."""
+    cols = cols or numeric_column_names(df)
+    res = X.project(df, {c: (name, X.Spec(v=c, **params)) for c in cols})
+    return _first_scalar(res, cols[0]) if scalar_mode else res
+
+
+def _metric(returns, name: str, **params):
+    df, scalar_mode = to_returns_df(returns)
+    return _project(df, name, scalar_mode, **params)
+
+
+def _leaf_values(df: DataFrame, names, specs: dict[str, X.Spec]) -> dict[str, dict]:
+    """One aggregation job collecting, per column, the leaves the formulas
+    ``names`` read under that column's spec."""
+    aliases, cols = {}, []
+    for c, spec in specs.items():
+        for leaf, col in X.leaves(names, spec).items():
+            aliases[(c, leaf)] = f"__leaf{len(cols)}"
+            cols.append(col.alias(aliases[(c, leaf)]))
+    row = df.agg(*cols).first()
+    out: dict[str, dict] = {c: {} for c in specs}
+    for (c, leaf), alias in aliases.items():
+        out[c][leaf] = row[alias]
+    return out
 
 
 def _first_scalar(res: DataFrame, col: str):
@@ -109,8 +129,7 @@ def _nan_if_none(v: Any) -> float:
 
 def comp(returns):
     """Total compounded return ∏(1+r)−1 (reference ``stats.py:29-50``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(df, numeric_column_names(df), X.comp, scalar_mode)
+    return _metric(returns, "comp")
 
 
 def cagr(returns, rf: float | None = None, compound: bool = True, periods: int = 252):
@@ -122,106 +141,69 @@ def cagr(returns, rf: float | None = None, compound: bool = True, periods: int =
     df, scalar_mode = to_returns_df(returns)
     if get_temporal_column_name(df) is None:
         raise NoTemporalColumnError
-    return _agg_result(
-        df,
-        numeric_column_names(df),
-        lambda c: X.cagr(c, rf=rf, compound=compound, periods=periods),
-        scalar_mode,
-    )
+    return _project(df, "cagr", scalar_mode, rf=rf, compound=compound, periods=periods)
 
 
 def sharpe(returns, rf: float | None = None, periods: int = 252, annualize: bool = True):
     """Sharpe ratio (reference ``stats.py:142-175``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(
-        df,
-        numeric_column_names(df),
-        lambda c: X.sharpe(c, rf, periods, annualize),
-        scalar_mode,
-    )
+    return _metric(returns, "sharpe", rf=rf, periods=periods, annualize=annualize)
 
 
 def sortino(returns, rf: float | None = None, periods: int = 252, annualize: bool = True):
     """Sortino ratio (reference ``stats.py:196-232``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(
-        df,
-        numeric_column_names(df),
-        lambda c: X.sortino(c, rf, periods, annualize),
-        scalar_mode,
-    )
+    return _metric(returns, "sortino", rf=rf, periods=periods, annualize=annualize)
 
 
 def volatility(returns, periods: int = 252, annualize: bool = True):
     """Annualized sample standard deviation (reference ``stats.py:349-377``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(
-        df,
-        numeric_column_names(df),
-        lambda c: X.volatility(c, periods, annualize),
-        scalar_mode,
-    )
+    return _metric(returns, "volatility", periods=periods, annualize=annualize)
 
 
 def cpc_index(returns):
     """Profit factor × payoff ratio × win rate (reference ``stats.py:590-632``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(df, numeric_column_names(df), X.cpc_index, scalar_mode)
+    return _metric(returns, "cpc_index")
 
 
 def exposure(returns):
     """Time in market (reference ``stats.py:643-668``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(df, numeric_column_names(df), X.exposure, scalar_mode)
+    return _metric(returns, "exposure")
 
 
 def omega(returns, threshold: float = 0.0):
     """Omega ratio (reference ``stats.py:679-711``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(
-        df, numeric_column_names(df), lambda c: X.omega(c, threshold), scalar_mode
-    )
+    return _metric(returns, "omega", threshold=threshold)
 
 
 def skew(returns):
     """Bias-corrected skewness (reference ``stats.py:859-869``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(df, numeric_column_names(df), X.skew, scalar_mode)
+    return _metric(returns, "skew")
 
 
 def kurtosis(returns):
     """Bias-corrected excess kurtosis (reference ``stats.py:880-891``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(df, numeric_column_names(df), X.kurtosis, scalar_mode)
+    return _metric(returns, "kurtosis")
 
 
 def payoff_ratio(returns):
     """avg win / |avg loss| (reference ``stats.py:994-1000``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(df, numeric_column_names(df), X.payoff_ratio, scalar_mode)
+    return _metric(returns, "payoff_ratio")
 
 
 def profit_factor(returns):
     """Σ wins / |Σ losses| (reference ``stats.py:1011-1017``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(df, numeric_column_names(df), X.profit_factor, scalar_mode)
+    return _metric(returns, "profit_factor")
 
 
 def gain_to_pain_ratio(returns, rf: float = 0.0):
     """Σ(r−rf) / |Σ negative| (reference ``stats.py:1028-1035``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(
-        df, numeric_column_names(df), lambda c: X.gain_to_pain_ratio(c, rf), scalar_mode
-    )
+    return _metric(returns, "gain_to_pain_ratio", rf=rf)
 
 
 def gain_to_pain_ratio_1m(returns, rf: float = 0.0):
     """Gain/pain on summed monthly returns (reference ``stats.py:1038-1048``)."""
     df, scalar_mode = to_returns_df(returns)
     monthly, _ = _simple_returns(df, "month", compounded=False)
-    return _agg_result(
-        monthly, numeric_column_names(monthly), lambda c: X.gain_to_pain_ratio(c, rf), scalar_mode
-    )
+    return _project(monthly, "gain_to_pain_ratio", scalar_mode, rf=rf)
 
 
 gain_to_pain_ratio_monthly = gain_to_pain_ratio_1m
@@ -234,10 +216,7 @@ def common_sense_ratio(returns, exact: bool = True):
     (bounded-memory sketch) for extreme scale; default is the reference's
     exact linear interpolation.
     """
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(
-        df, numeric_column_names(df), lambda c: X.common_sense_ratio(c, exact), scalar_mode
-    )
+    return _metric(returns, "common_sense_ratio", exact=exact)
 
 
 def tail_ratio(returns, cutoff: float = 0.95, exact: bool = True):
@@ -246,44 +225,27 @@ def tail_ratio(returns, cutoff: float = 0.95, exact: bool = True):
     ``exact=False`` uses approx_percentile (mergeable KLL sketch) instead of
     the exact sort-based percentile — required at 100 TB scale.
     """
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(
-        df, numeric_column_names(df), lambda c: X.tail_ratio(c, cutoff, exact), scalar_mode
-    )
+    return _metric(returns, "tail_ratio", cutoff=cutoff, exact=exact)
 
 
 def outlier_win_ratio(returns, quantile: float = 0.99, exact: bool = True):
     """q99 / mean(r≥0) (reference ``stats.py:1105-1114``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(
-        df,
-        numeric_column_names(df),
-        lambda c: X.outlier_win_ratio(c, quantile, exact),
-        scalar_mode,
-    )
+    return _metric(returns, "outlier_win_ratio", q_win=quantile, exact=exact)
 
 
 def outlier_loss_ratio(returns, quantile: float = 0.01, exact: bool = True):
     """q01 / mean(r<0) (reference ``stats.py:1127-1136``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(
-        df,
-        numeric_column_names(df),
-        lambda c: X.outlier_loss_ratio(c, quantile, exact),
-        scalar_mode,
-    )
+    return _metric(returns, "outlier_loss_ratio", q_loss=quantile, exact=exact)
 
 
 def kelly_criterion(returns):
     """Kelly allocation fraction (reference ``stats.py:1147-1158``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(df, numeric_column_names(df), X.kelly_criterion, scalar_mode)
+    return _metric(returns, "kelly_criterion")
 
 
 def risk_of_ruin(returns):
     """((1−p)/(1+p))^n (reference ``stats.py:1169-1178``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(df, numeric_column_names(df), X.risk_of_ruin, scalar_mode)
+    return _metric(returns, "risk_of_ruin")
 
 
 ror = risk_of_ruin
@@ -291,13 +253,7 @@ ror = risk_of_ruin
 
 def value_at_risk(returns, sigma: float = 1.0, confidence: float = 0.95):
     """Variance-covariance VaR (reference ``stats.py:1194-1205``)."""
-    df, scalar_mode = to_returns_df(returns)
-    return _agg_result(
-        df,
-        numeric_column_names(df),
-        lambda c: X.value_at_risk(c, sigma, confidence),
-        scalar_mode,
-    )
+    return _metric(returns, "value_at_risk", var_z=X.z_score(sigma, confidence))
 
 
 var = value_at_risk
@@ -314,7 +270,7 @@ def conditional_value_at_risk(returns, sigma: float = 1.0, confidence: float = 0
     df, scalar_mode = to_returns_df(returns)
     cols = numeric_column_names(df)
     vars_ = _scalar_map(
-        df.agg(*[X.value_at_risk(F.col(c), sigma, confidence).alias(c) for c in cols]), cols
+        _project(df, "value_at_risk", False, cols, var_z=X.z_score(sigma, confidence)), cols
     )
     aggs = []
     for c in cols:
@@ -338,12 +294,7 @@ def recovery_factor(returns, rf: float = 0.0):
     cols = numeric_column_names(df)
     df = ordered.with_order(df, _temporal_or_none(df))
     df = ordered.add_drawdown_columns(df, {f"__dd_{c}": c for c in cols})
-    aggs = [
-        X.fdiv(X.recovery_factor_parts(F.col(c), rf), F.abs(F.min(F.col(f"__dd_{c}")))).alias(c)
-        for c in cols
-    ]
-    res = df.agg(*aggs)
-    return _first_scalar(res, cols[0]) if scalar_mode else res
+    return _drawdown_metric(df, cols, "recovery_factor", scalar_mode, rf=rf)
 
 
 def ulcer_index(returns):
@@ -352,11 +303,11 @@ def ulcer_index(returns):
     cols = numeric_column_names(df)
     df = ordered.with_order(df, _temporal_or_none(df))
     df = ordered.add_drawdown_columns(df, {f"__dd_{c}": c for c in cols})
-    aggs = [
-        F.sqrt(X.fdiv(F.sum(F.pow(F.col(f"__dd_{c}"), 2)), F.count(F.col(c)) - 1)).alias(c)
-        for c in cols
-    ]
-    res = df.agg(*aggs)
+    return _drawdown_metric(df, cols, "ulcer_index", scalar_mode)
+
+
+def _drawdown_metric(df, cols, name, scalar_mode, **params):
+    res = X.project(df, {c: (name, X.Spec(v=c, dd=f"__dd_{c}", **params)) for c in cols})
     return _first_scalar(res, cols[0]) if scalar_mode else res
 
 
@@ -370,29 +321,13 @@ def serenity_index(returns, rf: float = 0.0):
     cols = numeric_column_names(df)
     df = ordered.with_order(df, _temporal_or_none(df))
     df = ordered.add_drawdown_columns(df, {f"__dd_{c}": c for c in cols})
-    z = _NORMAL.inv_cdf(0.05)
-
-    stage1 = df.agg(
-        *[
-            (F.mean(F.col(f"__dd_{c}")) + F.lit(z) * F.stddev_samp(F.col(f"__dd_{c}"))).alias(
-                f"ddvar_{c}"
-            )
-            for c in cols
-        ],
-        *[F.stddev_samp(F.col(c)).alias(f"std_{c}") for c in cols],
-        *[F.sum(F.col(c)).alias(f"sum_{c}") for c in cols],
-        *[
-            F.sqrt(
-                X.fdiv(F.sum(F.pow(F.col(f"__dd_{c}"), 2)), F.count(F.col(c)) - 1)
-            ).alias(f"ulcer_{c}")
-            for c in cols
-        ],
-    ).first()
+    specs = {c: X.Spec(v=c, dd=f"__dd_{c}", rf=rf) for c in cols}
+    stage1 = _leaf_values(df, ["drawdown_var", "serenity_index"], specs)
 
     aggs = []
     for c in cols:
-        ddv = stage1[f"ddvar_{c}"]
-        if ddv is None or (isinstance(ddv, float) and math.isnan(ddv)):
+        ddv = X.evaluate("drawdown_var", stage1[c], specs[c])
+        if ddv is None or math.isnan(ddv):
             aggs.append(F.lit(float("nan")).alias(c))
             continue
         dd = F.col(f"__dd_{c}")
@@ -400,15 +335,12 @@ def serenity_index(returns, rf: float = 0.0):
         aggs.append(cond_mean.alias(c))
     dd_cvars = _scalar_map(df.agg(*aggs), cols)
 
-    out: dict[str, float] = {}
-    for c in cols:
-        dd_cvar = _nan_if_none(dd_cvars[c])
-        std = _nan_if_none(stage1[f"std_{c}"])
-        total = _nan_if_none(stage1[f"sum_{c}"])
-        ulcer = _nan_if_none(stage1[f"ulcer_{c}"])
-        pitfall = -dd_cvar / std if std else math.nan
-        denom = ulcer * pitfall
-        out[c] = (total - rf) / denom if denom else math.nan
+    out = {
+        c: _nan_if_none(
+            X.evaluate("serenity_index", {**stage1[c], "ddcvar": dd_cvars[c]}, specs[c])
+        )
+        for c in cols
+    }
     if scalar_mode:
         return out[cols[0]]
     return _one_row_df(out)
@@ -470,8 +402,7 @@ def max_drawdown(returns):
     cols = numeric_column_names(df)
     df = ordered.with_order(df, _temporal_or_none(df))
     df = ordered.add_drawdown_columns(df, {f"__dd_{c}": c for c in cols})
-    res = df.agg(*[F.min(F.col(f"__dd_{c}")).alias(c) for c in cols])
-    return _first_scalar(res, cols[0]) if scalar_mode else res
+    return _drawdown_metric(df, cols, "max_drawdown", scalar_mode)
 
 
 def to_drawdowns(returns):
@@ -507,12 +438,7 @@ def calmar(returns, periods: int = 252):
     cols = numeric_column_names(df)
     df = ordered.with_order(df, _temporal_or_none(df))
     df = ordered.add_drawdown_columns(df, {f"__dd_{c}": c for c in cols})
-    aggs = [
-        X.fdiv(X.cagr(F.col(c), periods=periods), F.abs(F.min(F.col(f"__dd_{c}")))).alias(c)
-        for c in cols
-    ]
-    res = df.agg(*aggs)
-    return _first_scalar(res, cols[0]) if scalar_mode else res
+    return _drawdown_metric(df, cols, "calmar", scalar_mode, periods=periods)
 
 
 def consecutive_wins(returns, aggregate: str | None = None, compounded: bool = True):
@@ -582,8 +508,8 @@ def avg_drawdown(returns):
 # autocorrelation penalty & smart ratios
 
 
-def _autocorr_coefs(df: DataFrame, cols: list[str]) -> dict[str, tuple[float, int]]:
-    """|lag-1 autocorrelation| and non-null count per column, in ONE pass.
+def _autocorr_leaves(df: DataFrame, cols: list[str]) -> dict[str, dict]:
+    """Lag-1 autocorrelation and non-null count per column, in ONE pass.
 
     Matches the reference's pairing-after-dropping-nulls
     (``stats.py:1292-1312``): the 'previous' value at a non-null row is the
@@ -592,18 +518,11 @@ def _autocorr_coefs(df: DataFrame, cols: list[str]) -> dict[str, tuple[float, in
     """
     df = ordered.add_ffill_columns(df, {f"__ff_{c}": F.col(c) for c in cols})
     df = ordered.add_lag_columns(df, {f"__prev_{c}": f"__ff_{c}" for c in cols})
-    aggs = []
-    for c in cols:
-        pair_prev = F.when(F.col(c).isNotNull(), F.col(f"__prev_{c}"))
-        aggs.append(F.corr(F.col(c), pair_prev).alias(f"corr_{c}"))
-        aggs.append(F.count(F.col(c)).alias(f"n_{c}"))
-    row = df.agg(*aggs).first()
-    out = {}
-    for c in cols:
-        coef = row[f"corr_{c}"]
-        coef = math.nan if coef is None else abs(float(coef))
-        out[c] = (coef, int(row[f"n_{c}"]))
-    return out
+    specs = {
+        c: X.Spec(v=c, prev=F.when(F.col(c).isNotNull(), F.col(f"__prev_{c}")))
+        for c in cols
+    }
+    return _leaf_values(df, ["autocorr_penalty"], specs)
 
 
 def autocorr_penalty(returns):
@@ -615,8 +534,8 @@ def autocorr_penalty(returns):
     df, scalar_mode = to_returns_df(returns)
     cols = numeric_column_names(df)
     df = ordered.with_order(df, _temporal_or_none(df))
-    coefs = _autocorr_coefs(df, cols)
-    values = {c: X.geometric_sum_penalty(coef, n) for c, (coef, n) in coefs.items()}
+    coefs = _autocorr_leaves(df, cols)
+    values = {c: _nan_if_none(X.evaluate("autocorr_penalty", coefs[c])) for c in cols}
     if scalar_mode:
         return values[cols[0]]
     return _one_row_df(values)
@@ -624,24 +543,25 @@ def autocorr_penalty(returns):
 
 def smart_sharpe(returns, rf: float | None = None, periods: int = 252, annualize: bool = True):
     """Sharpe / autocorr penalty (reference ``stats.py:1334-1346``)."""
-    return _smart(returns, X.sharpe, rf, periods, annualize)
+    return _smart(returns, "smart_sharpe", "sharpe", rf, periods, annualize)
 
 
 def smart_sortino(returns, rf: float | None = None, periods: int = 252, annualize: bool = True):
     """Sortino / autocorr penalty (reference ``stats.py:1349-1361``)."""
-    return _smart(returns, X.sortino, rf, periods, annualize)
+    return _smart(returns, "smart_sortino", "sortino", rf, periods, annualize)
 
 
-def _smart(returns, expr_fn, rf, periods, annualize):
+def _smart(returns, name, base, rf, periods, annualize):
+    """Formula ``name`` over the ``base`` ratio's leaves (one pass over the
+    frame) and the autocorrelation leaves (one pass over the lagged frame)."""
     df, scalar_mode = to_returns_df(returns)
     cols = numeric_column_names(df)
     odf = ordered.with_order(df, _temporal_or_none(df))
-    coefs = _autocorr_coefs(odf, cols)
-    base = _scalar_map(
-        df.agg(*[expr_fn(F.col(c), rf, periods, annualize).alias(c) for c in cols]), cols
-    )
+    coefs = _autocorr_leaves(odf, cols)
+    specs = {c: X.Spec(v=c, rf=rf, periods=periods, annualize=annualize) for c in cols}
+    leaves = _leaf_values(df, [base], specs)
     values = {
-        c: _nan_if_none(base[c]) / X.geometric_sum_penalty(*coefs[c]) for c in cols
+        c: _nan_if_none(X.evaluate(name, {**leaves[c], **coefs[c]}, specs[c])) for c in cols
     }
     if scalar_mode:
         return values[cols[0]]
@@ -650,16 +570,9 @@ def _smart(returns, expr_fn, rf, periods, annualize):
 
 def adjusted_sortino(returns, rf=None, periods: int = 252, annualize: bool = True, smart: bool = False):
     """Sortino / √2 (reference ``stats.py:1364-1379``)."""
-    value = (
-        smart_sortino(returns, rf=rf, periods=periods, annualize=annualize)
-        if smart
-        else sortino(returns, rf=rf, periods=periods, annualize=annualize)
-    )
-    if isinstance(value, DataFrame):
-        return value.select(
-            *[(F.col(c) / math.sqrt(2)).alias(c) for c in numeric_column_names(value)]
-        )
-    return value / math.sqrt(2)
+    if smart:
+        return _smart(returns, "smart_adjusted_sortino", "sortino", rf, periods, annualize)
+    return _metric(returns, "adjusted_sortino", rf=rf, periods=periods, annualize=annualize)
 
 
 sortino_sqrt2 = adjusted_sortino
@@ -677,46 +590,24 @@ def probabilistic_sharpe_ratio(returns, rf: float = 0.0, periods: int = 252,
                                annualize: bool = False, smart: bool = False):
     """Probabilistic Sharpe Ratio (reference ``stats.py:255-323``).
 
-    One Spark pass aggregates SR, skew, kurtosis and n for every column; the
-    Φ(·) step is driver-side scalar math like the reference's
-    ``statistics.NormalDist``.
+    One Spark pass aggregates the leaves of SR, skew, kurtosis and n for
+    every column; the Φ(·) step is driver-side scalar math like the
+    reference's ``statistics.NormalDist``. NaN where the Sharpe ratio's
+    standard error is undefined (one row, a non-positive radicand).
     """
+    del periods  # the per-period Sharpe ratio does not annualize
     df, scalar_mode = to_returns_df(returns)
     cols = numeric_column_names(df)
-
-    aggs = []
-    for c in cols:
-        col = F.col(c)
-        aggs.append(X.sharpe(col, None, periods, False).alias(f"sr_{c}"))
-        aggs.append(X.skew(col).alias(f"skew_{c}"))
-        aggs.append(X.kurtosis(col).alias(f"kurt_{c}"))
-        aggs.append(F.count(col).alias(f"n_{c}"))
-    row = df.agg(*aggs).first()
-
-    penalties = None
+    leaves = _leaf_values(df, ["probabilistic_sharpe_ratio"], {c: X.Spec(v=c) for c in cols})
     if smart:
         odf = ordered.with_order(df, _temporal_or_none(df))
-        coefs = _autocorr_coefs(odf, cols)
-        penalties = {c: X.geometric_sum_penalty(*coefs[c]) for c in cols}
-
-    def _probability(base: float, skew_v: float, kurt_v: float, n: int) -> float:
-        sigma = math.sqrt(
-            (1 + (0.5 * base**2) - (skew_v * base) + (((kurt_v - 3) / 4) * base**2))
-            / (n - 1)
-        )
-        probability = _NORMAL.cdf((base - rf) / sigma)
-        if annualize:
-            return probability * (252**0.5)
-        return probability
-
-    values = {}
-    for c in cols:
-        base = _nan_if_none(row[f"sr_{c}"])
-        if smart and penalties is not None:
-            base = base / penalties[c]
-        values[c] = _probability(
-            base, _nan_if_none(row[f"skew_{c}"]), _nan_if_none(row[f"kurt_{c}"]), int(row[f"n_{c}"])
-        )
+        for c, coef in _autocorr_leaves(odf, cols).items():
+            leaves[c].update(coef)
+    spec = X.Spec(rf=rf, annualize=annualize, smart=smart)
+    values = {
+        c: _nan_if_none(X.evaluate("probabilistic_sharpe_ratio", leaves[c], spec))
+        for c in cols
+    }
     if scalar_mode:
         return values[cols[0]]
     return _one_row_df(values)
@@ -754,48 +645,38 @@ def _joined_with_benchmark(returns, benchmark) -> tuple[DataFrame, bool, list[st
 def greeks(returns, benchmark, periods: int = 252):
     """CAPM alpha & beta per asset as struct columns (reference ``stats.py:419-471``)."""
     joined, _, cols = _joined_with_benchmark(returns, benchmark)
-    bench = F.col(BENCHMARK_RETURNS_COLNAME)
-    exprs = []
-    for c in cols:
-        beta = X.fdiv(F.covar_samp(F.col(c), bench), F.var_samp(bench))
-        alpha = F.mean(F.col(c)) - beta * F.mean(bench)
-        exprs.append(
-            F.struct((alpha * periods).alias("alpha"), beta.alias("beta")).alias(c)
-        )
-    return joined.agg(*exprs)
+    specs = [X.Spec(v=c, b=BENCHMARK_RETURNS_COLNAME, periods=periods) for c in cols]
+    flat = X.project(joined, {
+        f"__{name}{i}": (name, spec)
+        for i, spec in enumerate(specs)
+        for name in ("alpha", "beta")
+    })
+    return flat.select(*[
+        F.struct(F.col(f"__alpha{i}").alias("alpha"), F.col(f"__beta{i}").alias("beta")).alias(c)
+        for i, c in enumerate(cols)
+    ])
+
+
+def _bench_metric(returns, benchmark, name, **params):
+    joined, scalar_mode, cols = _joined_with_benchmark(returns, benchmark)
+    return _project(joined, name, scalar_mode, cols, b=BENCHMARK_RETURNS_COLNAME, **params)
 
 
 def information_ratio(returns, benchmark, periods: int = 252, annualize: bool = False):
     """mean(active) / std(active) (reference ``stats.py:527-579``)."""
-    joined, scalar_mode, cols = _joined_with_benchmark(returns, benchmark)
-    bench = F.col(BENCHMARK_RETURNS_COLNAME)
-    exprs = []
-    for c in cols:
-        active = F.col(c) - bench
-        ir = X.fdiv(F.mean(active), F.stddev_samp(active))
-        if annualize:
-            ir = ir * F.lit(periods**0.5)
-        exprs.append(ir.alias(c))
-    res = joined.agg(*exprs)
-    return _first_scalar(res, cols[0]) if scalar_mode else res
+    return _bench_metric(
+        returns, benchmark, "information_ratio", periods=periods, annualize=annualize
+    )
 
 
 def correlation(returns, benchmark):
     """Pearson correlation vs benchmark (reference ``stats.py:1429-1443``)."""
-    joined, scalar_mode, cols = _joined_with_benchmark(returns, benchmark)
-    bench = F.col(BENCHMARK_RETURNS_COLNAME)
-    res = joined.agg(*[F.corr(F.col(c), bench).alias(c) for c in cols])
-    return _first_scalar(res, cols[0]) if scalar_mode else res
+    return _bench_metric(returns, benchmark, "correlation")
 
 
 def r_squared(returns, benchmark):
     """Squared correlation (reference ``stats.py:1456-1464``)."""
-    corr = correlation(returns, benchmark)
-    if isinstance(corr, DataFrame):
-        return corr.select(
-            *[F.pow(F.col(c), 2).alias(c) for c in numeric_column_names(corr)]
-        )
-    return None if corr is None else corr**2
+    return _bench_metric(returns, benchmark, "r_squared")
 
 
 r2 = r_squared
@@ -803,14 +684,7 @@ r2 = r_squared
 
 def treynor_ratio(returns, benchmark, rf: float = 0.0):
     """(comp − rf) / beta (reference ``stats.py:1486-1503``)."""
-    joined, scalar_mode, cols = _joined_with_benchmark(returns, benchmark)
-    bench = F.col(BENCHMARK_RETURNS_COLNAME)
-    exprs = []
-    for c in cols:
-        beta = X.fdiv(F.covar_samp(F.col(c), bench), F.var_samp(bench))
-        exprs.append(X.fdiv(X.comp(F.col(c)) - F.lit(rf), beta).alias(c))
-    res = joined.agg(*exprs)
-    return _first_scalar(res, cols[0]) if scalar_mode else res
+    return _bench_metric(returns, benchmark, "treynor_ratio", rf=rf)
 
 
 # ---------------------------------------------------------------------------
@@ -862,7 +736,7 @@ def _simple_returns(
         return df.select(*cols), []
 
     per_col = [
-        (X.comp(F.col(c)) if compounded else F.sum(F.col(c))).alias(c) for c in cols
+        (X.column("comp", c) if compounded else F.sum(F.col(c))).alias(c) for c in cols
     ]
     out = df.groupBy(*groups).agg(
         F.min(ts).alias(_GROUP_ORDER_COL), *per_col
@@ -878,15 +752,15 @@ def _with_order_for(df: DataFrame, order_cols: list[str]) -> DataFrame:
     return ordered.with_order(df, temporal)
 
 
-def _aggregate_metric(returns, aggregate, compounded, expr_fn):
+def _aggregate_metric(returns, aggregate, compounded, name):
     df, scalar_mode = to_returns_df(returns)
     base, _ = _simple_returns(df, aggregate, compounded)
-    return _agg_result(base, numeric_column_names(base), expr_fn, scalar_mode)
+    return _project(base, name, scalar_mode)
 
 
 def expected_return(returns, aggregate: str | None = None, compounded: bool = True):
     """Geometric mean return (reference ``stats.py:799-807``)."""
-    return _aggregate_metric(returns, aggregate, compounded, X.expected_return)
+    return _aggregate_metric(returns, aggregate, compounded, "expected_return")
 
 
 geometric_mean = expected_return
@@ -894,32 +768,32 @@ geometric_mean = expected_return
 
 def best(returns, aggregate: str | None = None, compounded: bool = True):
     """Best period return (reference ``stats.py:823-829``)."""
-    return _aggregate_metric(returns, aggregate, compounded, F.max)
+    return _aggregate_metric(returns, aggregate, compounded, "best")
 
 
 def worst(returns, aggregate: str | None = None, compounded: bool = True):
     """Worst period return (reference ``stats.py:842-848``)."""
-    return _aggregate_metric(returns, aggregate, compounded, F.min)
+    return _aggregate_metric(returns, aggregate, compounded, "worst")
 
 
 def avg_return(returns, aggregate: str | None = None, compounded: bool = True):
     """Mean of non-zero returns (reference ``stats.py:906-914``)."""
-    return _aggregate_metric(returns, aggregate, compounded, X.avg_return)
+    return _aggregate_metric(returns, aggregate, compounded, "avg_return")
 
 
 def avg_win(returns, aggregate: str | None = None, compounded: bool = True):
     """Mean positive return (reference ``stats.py:927-935``)."""
-    return _aggregate_metric(returns, aggregate, compounded, X.avg_win)
+    return _aggregate_metric(returns, aggregate, compounded, "avg_win")
 
 
 def avg_loss(returns, aggregate: str | None = None, compounded: bool = True):
     """Mean negative return (reference ``stats.py:950-958``)."""
-    return _aggregate_metric(returns, aggregate, compounded, X.avg_loss)
+    return _aggregate_metric(returns, aggregate, compounded, "avg_loss")
 
 
 def win_rate(returns, aggregate: str | None = None, compounded: bool = True):
     """Positive / non-zero ratio (reference ``stats.py:973-983``)."""
-    return _aggregate_metric(returns, aggregate, compounded, X.win_rate)
+    return _aggregate_metric(returns, aggregate, compounded, "win_rate")
 
 
 def _date_filtered(df: DataFrame, period: str, span: int | None = None) -> DataFrame:
@@ -952,18 +826,13 @@ def _date_filtered(df: DataFrame, period: str, span: int | None = None) -> DataF
 def _period_comp(returns, period: str, span: int | None = None):
     df, scalar_mode = to_returns_df(returns)
     filtered = _date_filtered(df, period, span)
-    return _agg_result(filtered, numeric_column_names(filtered), X.comp, scalar_mode)
+    return _project(filtered, "comp", scalar_mode)
 
 
 def _period_cagr(returns, period: str, span: int | None = None, periods: int = 252):
     df, scalar_mode = to_returns_df(returns)
     filtered = _date_filtered(df, period, span)
-    return _agg_result(
-        filtered,
-        numeric_column_names(filtered),
-        lambda c: X.cagr(c, periods=periods),
-        scalar_mode,
-    )
+    return _project(filtered, "cagr", scalar_mode, periods=periods)
 
 
 def mtd(returns):

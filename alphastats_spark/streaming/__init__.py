@@ -1,7 +1,7 @@
 """Structured Streaming surface: rolling metrics and stateful drawdowns.
 
 The reference is batch-only (SURVEY §2.7) — this module is part of the
-beyond-reference scale surface: the same metric expression builders
+beyond-reference scale surface: the same metric formulas
 (``alphastats_spark.expressions``) applied to event-time windows of a
 returns stream, plus a stateful cumulative-drawdown operator built on
 ``applyInPandasWithState``.

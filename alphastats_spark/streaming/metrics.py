@@ -3,9 +3,10 @@
 Two operators:
 
 * ``rolling_metrics`` — event-time windowed aggregation of the core metric
-  set. The metric expressions are the exact same Column builders the batch
-  API uses (``alphastats_spark.expressions``), so batch and streaming
-  results agree by construction; the set is restricted to metrics whose
+  set. Each metric is the formula the batch API evaluates
+  (``alphastats_spark.expressions``), inlined as one aggregate Column, so
+  batch and streaming results agree by construction; the set is
+  restricted to metrics whose
   aggregation state is bounded (sums/counts/moments — no exact percentiles,
   which would buffer every row in the state store).
 * ``streaming_drawdowns`` — per-key cumulative wealth / peak / drawdown via
@@ -22,6 +23,7 @@ from __future__ import annotations
 
 import math
 from collections.abc import Callable, Iterable
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -45,17 +47,11 @@ HOT_LIST_COLLECT_LIMIT = 500_000
 
 # Streaming-safe subset: constant-size aggregation state per window.
 STREAM_METRICS: dict[str, Callable[[Column], Column]] = {
-    "comp": X.comp,
-    "sharpe": lambda c: X.mean_std_ratio(c, None, 252, True),
-    "sortino": X.sortino,
-    "volatility": X.volatility,
-    "win_rate": X.win_rate,
-    "avg_return": X.avg_return,
-    "profit_factor": X.profit_factor,
-    "omega": X.omega,
-    "exposure": X.exposure,
-    "value_at_risk": X.value_at_risk,
-    "n_obs": lambda c: F.count(c).cast("long"),
+    name: partial(X.column, name)
+    for name in (
+        "comp", "sharpe", "sortino", "volatility", "win_rate", "avg_return",
+        "profit_factor", "omega", "exposure", "value_at_risk", "n_obs",
+    )
 }
 
 

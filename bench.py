@@ -112,7 +112,7 @@ def main() -> None:
     warm = harness.load_returns(spark, sf_dir).limit(500)
     warm = ordered.with_order(warm, "d")
     warm = ordered.add_drawdown_columns(warm, {"dd": "r"})
-    warm.agg(F.min("dd"), X.sharpe(F.col("r"), None, 252, True), X.tail_ratio(F.col("r"))).collect()
+    warm.agg(F.min("dd"), X.column("sharpe", "r"), X.column("tail_ratio", "r")).collect()
     # ... and the episode machinery's stack/groupBy codegen (q_episodes'
     # first run otherwise pays ~1.5s of JIT that shows up as spread)
     stats.longest_drawdown_days(harness.load_returns(spark, sf_dir).limit(500)).collect()
@@ -120,19 +120,14 @@ def main() -> None:
 
     def q_snapshot():
         rets = harness.load_returns(spark, sf_dir)
-        c = F.col("r")
-        return rets.agg(
-            X.comp(c).alias("total_return"),
-            X.cagr(c).alias("cagr"),
-            X.sharpe(c, None, 252, True).alias("sharpe"),
-            X.sortino(c, None, 252, True).alias("sortino"),
-            X.volatility(c, 252, True).alias("volatility"),
-            X.win_rate(c).alias("win_rate"),
-            X.profit_factor(c).alias("profit_factor"),
-            X.tail_ratio(c).alias("tail_ratio"),
-            X.kelly_criterion(c).alias("kelly"),
-            X.skew(c).alias("skew"),
-        ).collect()
+        spec = X.Spec(v="r")
+        outputs = {
+            "total_return": "comp", "cagr": "cagr", "sharpe": "sharpe", "sortino": "sortino",
+            "volatility": "volatility", "win_rate": "win_rate",
+            "profit_factor": "profit_factor", "tail_ratio": "tail_ratio",
+            "kelly": "kelly_criterion", "skew": "skew",
+        }
+        return X.project(rets, {out: (name, spec) for out, name in outputs.items()}).collect()
 
     def q_drawdowns():
         rets = harness.load_returns(spark, sf_dir).persist()
@@ -157,7 +152,7 @@ def main() -> None:
         rets = harness.load_returns(spark, sf_dir)
         monthly, _ = stats._simple_returns(rets, "month", True)
         return monthly.agg(
-            X.expected_return(F.col("r")), F.max("r"), F.min("r")
+            X.column("expected_return", "r"), F.max("r"), F.min("r")
         ).collect()
 
     def q_report():

@@ -179,3 +179,58 @@ def test_correlation_matrix(spark):
     assert out[("a", "c")]["corr"] == pytest.approx(-1.0)
     assert out[("a", "b")]["n_obs"] == 10
     assert out[("a", "d")]["n_obs"] == 4  # pairwise-complete on overlap only
+
+
+def _same_cell(got, want) -> bool:
+    """NULL, NaN and ±inf exactly; finite values within rel=1e-12 (the
+    groupBy shuffle may reorder a key's sums)."""
+    if got is None or want is None:
+        return got is None and want is None
+    if isinstance(want, float) and (math.isnan(want) or math.isinf(want)):
+        return repr(float(got)) == repr(want)
+    return got == pytest.approx(want, rel=1e-12)
+
+
+def test_metrics_by_key_matches_wide_api_on_edge_series(spark):
+    """Every metrics_by_key column with a stats.* counterpart equals that
+    function on the key's series for the report's edge series: all
+    positive, all zero, constant, a -100% day, below -100%, and 1-, 2- and
+    3-row keys."""
+    from test_reports import EDGE_FRAMES
+
+    d0 = dt.date(2023, 1, 2)
+    groups = [EDGE_FRAMES[g] for g in ("five_rows", "one_row", "two_rows", "three_rows")]
+    rows = [
+        (k, d0 + dt.timedelta(days=i), float(v))
+        for group in groups
+        for k, vals in group.items()
+        for i, v in enumerate(vals)
+    ]
+    long_df = spark.createDataFrame(rows, "asset string, d date, r double")
+    out = {r["asset"]: r.asDict() for r in metrics_by_key(long_df).collect()}
+    assert set(out) == {k for group in groups for k in group}
+
+    # one wide frame per series length: one call per function covers it
+    wides = []
+    for group in groups:
+        names = list(group)
+        wide_rows = [
+            (d0 + dt.timedelta(days=i), *(group[k][i] for k in names))
+            for i in range(len(group[names[0]]))
+        ]
+        schema = "d date, " + ", ".join(f"{k} double" for k in names)
+        wides.append(spark.createDataFrame(wide_rows, schema))
+
+    # one call at a time: concurrent stats calls on one frame have been
+    # seen to return a wrong value (a 0 longest drawdown)
+    wants = {
+        name: {k: v for wide in wides for k, v in fn(wide).first().asDict().items()}
+        for name, fn in PARITY_FNS.items()
+    }
+    wrong = [
+        f"{key} {name}: keyed {out[key][name]!r} != wide {want[key]!r}"
+        for name, want in wants.items()
+        for key in out
+        if not _same_cell(out[key][name], want[key])
+    ]
+    assert not wrong, "\n".join(wrong)

@@ -2,11 +2,13 @@
 
 * Every round artifact (``*_rNN*.json``) cited by a committed evidence
   document exists in the repository.
-* Every attribute the scripts, ``bench.py`` and the benchmark
-  (``perfbench/*.py``, read only) read off an imported ``alphastats_spark``
+* Every attribute the scripts, ``bench.py``, ``__spark_entry__.py``, the
+  benchmark (``perfbench/*.py``, read only) and the package itself
+  (``alphastats_spark/**/*.py``) read off an imported ``alphastats_spark``
   module exists, so a library deletion or rename fails here instead of
-  leaving a broken probe script or benchmark behind (no linter is
-  installed, so this walks their ASTs with the standard library).
+  leaving a broken probe script, benchmark or lazily-run query behind (no
+  linter is installed, so this walks their ASTs with the standard
+  library).
 """
 
 from __future__ import annotations
@@ -40,8 +42,9 @@ def test_cited_artifacts_exist():
 def _script_files() -> list[Path]:
     return (
         sorted(ROOT.glob("scripts/*.py"))
-        + [ROOT / "bench.py"]
+        + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
         + sorted(ROOT.glob("perfbench/*.py"))
+        + sorted(ROOT.glob("alphastats_spark/**/*.py"))
     )
 
 

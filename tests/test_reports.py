@@ -400,8 +400,8 @@ def _same_double(got, want, ulps):
 def test_report_cells_equal_stats_functions(spark, group, monkeypatch):
     """Every report cell with a stats.* counterpart is that function's
     double; where the function raises because the value is undefined (a
-    zero-variance correlation under ANSI division, a negative PSR
-    radicand) the cell is NaN. The benchmark-relative rows come from a
+    zero-variance correlation under ANSI division) the cell is NaN. The
+    benchmark-relative rows come from a
     second report: joining the benchmark reshuffles the frame, which
     changes the multiplication order of the calendar passes' products."""
     series = EDGE_FRAMES[group]
@@ -446,12 +446,11 @@ def test_report_aggregates_are_leaves(spark):
     c, bench = "asset", "bench"
     windows = reports._window_bounds(dt.date(2023, 6, 30))
     main = {
-        f"{k}_{col}": v
-        for col in (c, bench)
-        for k, v in {
+        col: {
             "ddvar": -0.05, "var": -0.02, "best": 0.03, "worst": -0.02,
             "lag_hi": 0.03, "lag_lo": -0.02, "prev_hi": 0.03, "prev_lo": -0.02,
-        }.items()
+        }
+        for col in (c, bench)
     }
     leaves = {
         **reports._column_leaves(c, 0.001, True, True, windows),
@@ -469,7 +468,7 @@ def test_report_aggregates_are_leaves(spark):
 
 
 def test_driver_fdiv_and_pow_match_spark(spark):
-    """The driver-side pair reproduces expressions.fdiv and Spark's pow on
+    """The float op set's pair reproduces expressions.fdiv and Spark's pow on
     zero (both signs), NaN, ±inf, negative bases and overflow: the same
     special value, and finite results within the 1 ulp by which the JVM's
     and libm's pow may round."""
@@ -493,9 +492,82 @@ def test_driver_fdiv_and_pow_match_spark(spark):
         (b, e, name, want, mine)
         for (b, e), row in zip(pairs, got)
         for name, want, mine in (
-            ("pow", row["pow"], reports._pow(b, e)),
-            ("fdiv", row["fdiv"], reports._fdiv(b, e)),
+            ("pow", row["pow"], X.FLOAT.pow(b, e)),
+            ("fdiv", row["fdiv"], X.FLOAT.div(b, e)),
         )
         if not same(want, mine)
     ]
     assert not wrong, wrong
+
+
+def _aggregate_lengths(df) -> dict[str, int]:
+    """Length of every aggregate expression in ``df``'s analyzed plan,
+    keyed by its first 60 characters."""
+    out: dict[str, int] = {}
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Aggregate":
+            exprs = node.aggregateExpressions()
+            for i in range(exprs.size()):
+                text = exprs.apply(i).toString()
+                out[text[:60]] = max(out.get(text[:60], 0), len(text))
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def test_flat_projections_aggregate_leaves(spark):
+    """The flat stats.* and long_frame.*_by_key paths aggregate primitive
+    leaves only: no aggregate in their analyzed plans exceeds 400
+    characters. As nested Columns, Kelly alone ran to 11,861 characters."""
+    from alphastats_spark import long_frame
+
+    n = 40
+    dates = [dt.date(2023, 1, 2) + dt.timedelta(days=i) for i in range(n)]
+    wide = spark.createDataFrame(
+        [(d, DAILY[i % 10], DAILY[(i + 3) % 10]) for i, d in enumerate(dates)],
+        "d date, a double, b double",
+    )
+    bench = spark.createDataFrame(
+        [(d, BENCH[i % 10]) for i, d in enumerate(dates)], "d date, bench double"
+    )
+    long_df = spark.createDataFrame(
+        [(k, d, DAILY[(i + j) % 10]) for j, k in enumerate("xy") for i, d in enumerate(dates)],
+        "asset string, d date, r double",
+    )
+    plans = {
+        "metrics_by_key": long_frame.metrics_by_key(long_df),
+        "smart_ratios_by_key": long_frame.smart_ratios_by_key(long_df),
+        "benchmark_metrics_by_key": long_frame.benchmark_metrics_by_key(long_df, bench),
+        "kelly_criterion": stats.kelly_criterion(wide),
+        "cpc_index": stats.cpc_index(wide),
+        "risk_of_ruin": stats.risk_of_ruin(wide),
+        "greeks": stats.greeks(wide, bench),
+        "treynor_ratio": stats.treynor_ratio(wide, bench),
+    }
+    too_long = {}
+    for name, df in plans.items():
+        lengths = _aggregate_lengths(df)
+        assert lengths, name
+        too_long.update({(name, k): v for k, v in lengths.items() if v > 400})
+    assert not too_long, too_long
+
+
+@pytest.mark.parametrize("smart", [False, True])
+def test_psr_is_nan_where_undefined(spark, smart):
+    """PSR's standard error is undefined on one row (n − 1 = 0), on two
+    (a zero skew denominator) and under a negative radicand (strong
+    positive skew at a high per-period Sharpe ratio): NaN, not an
+    exception, as in the report."""
+    series = {
+        "one_row": [0.01],
+        "two_rows": [0.01, -0.02],
+        "negative_radicand": [0.1, 0.12, 0.1, 0.11, 0.6],
+    }
+    for name, values in series.items():
+        dates = [dt.date(2023, 1, 2) + dt.timedelta(days=i) for i in range(len(values))]
+        df = spark.createDataFrame(list(zip(dates, values)), "d date, r double")
+        got = stats.probabilistic_sharpe_ratio(df, smart=smart).first()["r"]
+        assert math.isnan(got), (name, got)
+        assert math.isnan(stats.psr(values, smart=smart)), name

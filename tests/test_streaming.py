@@ -1,6 +1,6 @@
 """Streaming surface tests.
 
-Strategy: ``rolling_metrics`` shares its Column builders with the batch
+Strategy: ``rolling_metrics`` shares its metric formulas with the batch
 API, so the semantics test runs it in BATCH mode against hand-sliced
 windows; a separate test runs the same plan through a real micro-batch
 stream (file source → memory sink) and asserts stream == batch. The
