@@ -139,7 +139,6 @@ class Spec:
     q_win: float = 0.99
     q_loss: float = 0.01
     exact: bool = True
-    accuracy: int = 10000
     var_z: float = z_score()
 
 
@@ -178,10 +177,10 @@ _LEAVES: dict[str, Callable[[Spec, Column], Column]] = {
     "nonzero_mean": lambda s, u: F.mean(when_pl(u != 0, u, None)),
     "omega_up": lambda s, u: F.sum(F.greatest(_diff(s, u), F.lit(0.0))),
     "omega_down": lambda s, u: F.sum(F.greatest(-_diff(s, u), F.lit(0.0))),
-    "p_hi": lambda s, u: percentile(u, s.cutoff, s.exact, s.accuracy),
-    "p_lo": lambda s, u: percentile(u, 1 - s.cutoff, s.exact, s.accuracy),
-    "p_win": lambda s, u: percentile(u, s.q_win, s.exact, s.accuracy),
-    "p_loss": lambda s, u: percentile(u, s.q_loss, s.exact, s.accuracy),
+    "p_hi": lambda s, u: percentile(u, s.cutoff, s.exact),
+    "p_lo": lambda s, u: percentile(u, 1 - s.cutoff, s.exact),
+    "p_win": lambda s, u: percentile(u, s.q_win, s.exact),
+    "p_loss": lambda s, u: percentile(u, s.q_loss, s.exact),
     "maxdd": lambda s, u: F.min(_col(s.dd)),
     "dd_sumsq": lambda s, u: F.sum(F.pow(_col(s.dd), 2)),
     "dd_mean": lambda s, u: F.mean(_col(s.dd)),
@@ -268,10 +267,6 @@ COLUMN = SimpleNamespace(
     sqrt=F.sqrt,
     abs=F.abs,
     where=lambda cond, then, otherwise: F.when(cond, then()).otherwise(otherwise()),
-)
-# leaves(): evaluates both branches so it sees every leaf a formula reads
-_RECORD = SimpleNamespace(
-    **{**vars(FLOAT), "where": lambda cond, then, otherwise: (then(), otherwise())[0]}
 )
 
 
@@ -500,6 +495,27 @@ class _Leaves:
         return self.get(name)
 
 
+class _Probe:
+    """The value :func:`leaves` gives every leaf: any arithmetic, comparison
+    or op on a probe returns the probe, so a formula runs to its end
+    whatever its denominators, through both branches of each ``where``,
+    without building a Column."""
+
+    def _same(self, *_):
+        return self
+
+    __add__ = __radd__ = __sub__ = __rsub__ = __mul__ = __rmul__ = _same
+    __truediv__ = __rtruediv__ = __pow__ = __rpow__ = __neg__ = __abs__ = _same
+    __lt__ = __le__ = __gt__ = __ge__ = __eq__ = __ne__ = __and__ = __rand__ = _same
+
+
+_PROBE = _Probe()
+_PROBE_OPS = SimpleNamespace(
+    **dict.fromkeys(("div", "pow", "sqrt", "abs", "cdf"), _PROBE._same),
+    where=lambda cond, then, otherwise: _PROBE._same(then(), otherwise()),
+)
+
+
 class _Null(Exception):
     """A formula read a NULL leaf."""
 
@@ -529,10 +545,10 @@ def leaves(names, spec: Spec) -> dict[str, Column]:
 
     def record(leaf):
         seen[_resolve(leaf, spec)] = None
-        return 0.5  # no formula's denominator vanishes at 0.5
+        return _PROBE
 
     for name in names:
-        FORMULAS[name](_RECORD, _Leaves(record), spec)
+        FORMULAS[name](_PROBE_OPS, _Leaves(record), spec)
     return {
         leaf: _leaf(leaf, spec)
         for leaf in seen
@@ -540,16 +556,26 @@ def leaves(names, spec: Spec) -> dict[str, Column]:
     }
 
 
-def _as_col(x) -> Column:
-    return x if isinstance(x, Column) else F.lit(x)
-
-
 def column(name: str, v: Column | str, **params: Any) -> Column:
     """Formula ``name`` over ``v`` as ONE aggregate Column, its leaves
     inlined (streaming windows, calendar buckets, ad-hoc ``agg`` calls)."""
     spec = Spec(v=v, **params)
     inline = _Leaves(lambda leaf: _leaf(_resolve(leaf, spec), spec))
-    return _as_col(FORMULAS[name](COLUMN, inline, spec))
+    return _lit(FORMULAS[name](COLUMN, inline, spec))
+
+
+def _aliased(aggs: Mapping[Any, Column]) -> tuple[dict[Any, str], list[Column]]:
+    """Each key's result column name, and the aggregates aliased to them."""
+    names = {key: f"__leaf{i}" for i, key in enumerate(aggs)}
+    return names, [agg.alias(names[key]) for key, agg in aggs.items()]
+
+
+def collect(frame: DataFrame, aggs: Mapping[Any, Column]) -> dict[Any, Any]:
+    """ONE aggregation job over ``aggs`` (key -> aggregate Column); returns
+    key -> collected value."""
+    names, cols = _aliased(aggs)
+    row = frame.agg(*cols).first()
+    return {key: row[name] for key, name in names.items()}
 
 
 def project(
@@ -559,21 +585,19 @@ def project(
     ``keys``: ONE aggregation of the distinct leaves, then ONE select of
     the formulas over the named leaf columns. Lazy; each aggregate stays a
     primitive, however nested the ratio."""
-    aliases: dict[tuple[int, str], str] = {}
-    aggs: list[Column] = []
+    specs = {id(spec): spec for _, spec in outputs.values()}
+    found = {
+        (key, leaf): agg
+        for key, spec in specs.items()
+        for leaf, agg in leaves([n for n, s in outputs.values() if s is spec], spec).items()
+    }
+    names, aggs = _aliased(found)
 
     def reader(spec: Spec) -> _Leaves:
-        def get(leaf):
-            key = (id(spec), _resolve(leaf, spec))
-            if key not in aliases:
-                aliases[key] = f"__leaf{len(aggs)}"
-                aggs.append(_leaf(key[1], spec).alias(aliases[key]))
-            return F.col(aliases[key])
-
-        return _Leaves(get)
+        return _Leaves(lambda leaf: F.col(names[(id(spec), _resolve(leaf, spec))]))
 
     cols = [
-        _as_col(FORMULAS[name](COLUMN, reader(spec), spec)).alias(out)
+        _lit(FORMULAS[name](COLUMN, reader(spec), spec)).alias(out)
         for out, (name, spec) in outputs.items()
     ]
     return frame.groupBy(*keys).agg(*aggs).select(*keys, *cols)

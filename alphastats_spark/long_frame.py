@@ -111,7 +111,8 @@ def metrics_by_key(
     # a key that never draws down has no episode row; its stats are 0, as
     # the wide API's
     return main.join(cvar, key_col, "left").join(episodes, key_col, "left").select(
-        *main.columns,
+        key_col,
+        *_KEY_METRICS,
         "cvar",
         F.coalesce("longest_days", F.lit(0)).alias("longest_drawdown_days"),
         F.coalesce("avg_days", F.lit(0.0)).alias("avg_drawdown_days"),

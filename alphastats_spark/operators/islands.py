@@ -31,10 +31,10 @@ def longest_streaks(df: DataFrame, cols: list[str], winning: bool) -> dict[str, 
 
     Each prefix pass persists its own windowed frame (single-execution —
     see ``ordered.add_prefix_columns``); since this function fully
-    materializes its result, those caches are released before returning.
+    materializes its result, those caches are released before returning —
+    only this thread's: a concurrent call's caches may still be in use.
     """
-    mark = ordered.pass_cache_mark()
-    try:
+    with ordered.pass_cache_scope():
         df = ordered.add_row_index(df, "__idx")
 
         brk_exprs = {}
@@ -58,8 +58,6 @@ def longest_streaks(df: DataFrame, cols: list[str], winning: bool) -> dict[str, 
             aggs.append(F.coalesce(F.max(streak), F.lit(0)).alias(c))
         row = df.agg(*aggs).first()
         return {c: int(row[c]) for c in cols}
-    finally:
-        ordered.release_pass_caches(mark)
 
 
 def drawdown_episode_stats(
@@ -95,16 +93,14 @@ def drawdown_episode_stats(
     both its branches read one materialization (see
     ``ordered.add_prefix_columns`` for why ReuseExchange cannot be relied
     on).
-    Fully materializes its result, so any pass caches created here are
-    released before returning (a caller that passed precomputed
+    Fully materializes its result, so the pass caches this thread creates
+    here are released before returning (a concurrent call's are left to
+    it; a caller that passed precomputed
     ``dd_cols``/``pos_cols`` created its caches outside this scope — those
     are untouched).
     """
-    mark = ordered.pass_cache_mark()
-    try:
+    with ordered.pass_cache_scope():
         return _episode_stats(df, cols, temporal_name, dd_cols, pos_cols)
-    finally:
-        ordered.release_pass_caches(mark)
 
 
 def _episode_stats(

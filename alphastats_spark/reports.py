@@ -261,7 +261,7 @@ def metrics(
                 {c: f"__dd_{c}" for c in group},
                 {c: f"__dd_{c}__pos" for c in group},
             )
-            for (name, c), v in _agg_leaves(rdf, leaves).items():
+            for (name, c), v in X.collect(rdf, leaves).items():
                 vals[c][name] = v
             for c in group:
                 vals[c]["ddvar"] = X.evaluate("drawdown_var", vals[c])
@@ -276,7 +276,7 @@ def metrics(
                 if full:
                     vals[c]["cvar"] = vals[c]["var"]
             if s2_leaves:
-                for (name, c), v in _agg_leaves(rdf, s2_leaves).items():
+                for (name, c), v in X.collect(rdf, s2_leaves).items():
                     # a threshold with nothing below it is its own tail mean
                     threshold = _CVAR_THRESHOLD.get(name)
                     vals[c][name] = vals[c][threshold] if v is None and threshold else v
@@ -595,7 +595,7 @@ def _column_leaves(c, rf, compounded, full, windows) -> dict:
             "closs": f"coalesce(max(CASE WHEN {q} < 0 THEN {idx} - "
             f"coalesce({_q(f'__lbl_{c}')}, 0) ELSE 0 END), 0)",
         }
-        leaves.update({(k, c): v for k, v in sql.items()})
+        leaves.update({(k, c): F.expr(v) for k, v in sql.items()})
     ts = _q(ordered.ORDER_COL)
     for key, (kind, bound) in (windows or {}).items():
         if kind == "ym":
@@ -606,7 +606,7 @@ def _column_leaves(c, rf, compounded, full, windows) -> dict:
             cond = f"CAST({ts} AS DATE) >= DATE'{bound.isoformat()}'"
         leaves[(f"wg_{key}", c)] = F.product(F.expr(f"CASE WHEN {cond} THEN {q} + 1 END"))
         if key in ("3y", "5y", "10y"):
-            leaves[(f"wn_{key}", c)] = f"count(CASE WHEN {cond} THEN {q} END)"
+            leaves[(f"wn_{key}", c)] = F.expr(f"count(CASE WHEN {cond} THEN {q} END)")
     return leaves
 
 
@@ -642,7 +642,7 @@ def _stage2_leaves(vals, c, full, bench_name) -> dict:
         thresholds["cvar"] = (c, vals[c]["var"])
     for name, (col, t) in thresholds.items():
         if known(t):
-            leaves[(name, c)] = f"avg(CASE WHEN {_q(col)} < {_dbl(t)} THEN {_q(col)} END)"
+            leaves[(name, c)] = F.expr(f"avg(CASE WHEN {_q(col)} < {_dbl(t)} THEN {_q(col)} END)")
     if full and varies(c, "lag_hi", "lag_lo") and varies(c, "prev_hi", "prev_lo"):
         spec = X.Spec(v=F.col(q), prev=F.col(_q(f"__prev_{c}")))
         leaves[("acorr", c)] = X.leaves(("autocorr",), spec)["acorr"]
@@ -654,18 +654,6 @@ def _stage2_leaves(vals, c, full, bench_name) -> dict:
         spec = X.Spec(v=F.col(q), b=F.col(_q(bench_name)))
         leaves[("corrb", c)] = X.leaves(("correlation",), spec)["corrb"]
     return leaves
-
-
-def _agg_leaves(frame: DataFrame, leaves: dict) -> dict:
-    """One aggregation job over ``leaves`` (key -> SQL text or Column);
-    returns key -> collected value."""
-    aliases = {key: f"_l{i}" for i, key in enumerate(leaves)}
-    cols = [
-        (F.expr(expr) if isinstance(expr, str) else expr).alias(aliases[key])
-        for key, expr in leaves.items()
-    ]
-    row = frame.agg(*cols).first()
-    return {key: row[alias] for key, alias in aliases.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -710,7 +698,7 @@ def _calendar_agg(filled, temporal, output_names, granularity, rf):
     leaves: dict = {}
     for c in output_names:
         leaves.update(_calendar_leaves(c, rf))
-    values = _agg_leaves(bucketed, leaves)
+    values = X.collect(bucketed, leaves)
     out: dict = {}
     for c in output_names:
         cmp_spec, sm_spec = _calendar_specs(c, rf)

@@ -87,15 +87,12 @@ def _metric(returns, name: str, **params):
 def _leaf_values(df: DataFrame, names, specs: dict[str, X.Spec]) -> dict[str, dict]:
     """One aggregation job collecting, per column, the leaves the formulas
     ``names`` read under that column's spec."""
-    aliases, cols = {}, []
-    for c, spec in specs.items():
-        for leaf, col in X.leaves(names, spec).items():
-            aliases[(c, leaf)] = f"__leaf{len(cols)}"
-            cols.append(col.alias(aliases[(c, leaf)]))
-    row = df.agg(*cols).first()
+    aggs = {
+        (c, leaf): agg for c, spec in specs.items() for leaf, agg in X.leaves(names, spec).items()
+    }
     out: dict[str, dict] = {c: {} for c in specs}
-    for (c, leaf), alias in aliases.items():
-        out[c][leaf] = row[alias]
+    for (c, leaf), v in X.collect(df, aggs).items():
+        out[c][leaf] = v
     return out
 
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pytest
@@ -16,6 +17,7 @@ from pyspark.sql import functions as F
 
 from alphastats_spark import stats
 from alphastats_spark.long_frame import metrics_by_key
+from alphastats_spark.operators import ordered
 
 
 @pytest.fixture(scope="module")
@@ -221,12 +223,16 @@ def test_metrics_by_key_matches_wide_api_on_edge_series(spark):
         schema = "d date, " + ", ".join(f"{k} double" for k in names)
         wides.append(spark.createDataFrame(wide_rows, schema))
 
-    # one call at a time: concurrent stats calls on one frame have been
-    # seen to return a wrong value (a 0 longest drawdown)
-    wants = {
-        name: {k: v for wide in wides for k, v in fn(wide).first().asDict().items()}
-        for name, fn in PARITY_FNS.items()
-    }
+    def values(fn):
+        return {k: v for wide in wides for k, v in fn(wide).first().asDict().items()}
+
+    # tiny frames: each call is fixed per-job cost, so run them side by side
+    mark = ordered.pass_cache_mark()
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            wants = dict(zip(PARITY_FNS, pool.map(values, PARITY_FNS.values())))
+    finally:
+        ordered.release_pass_caches(mark)
     wrong = [
         f"{key} {name}: keyed {out[key][name]!r} != wide {want[key]!r}"
         for name, want in wants.items()

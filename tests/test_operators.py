@@ -523,3 +523,38 @@ def test_registry_stress_releases_every_cache_exactly_once(monkeypatch):
     ordered.release_pass_caches(mark)
     assert ordered.pass_cache_mark() == 0
     assert sorted({c.released for m in caches for c in m}) == [1]
+
+
+def test_islands_leave_concurrent_callers_caches(spark, monkeypatch):
+    """The fully-materializing islands calls release only the pass caches
+    their own thread registered. A cache another thread registers meanwhile
+    may still be read by that thread's query: releasing it mid-read made a
+    concurrent stats.consecutive_wins return 0 for a 5-win series."""
+    import datetime as dt
+    import threading
+
+    from alphastats_spark.operators import islands, ordered
+
+    real = ordered.persist_tracked
+    concurrent = []
+
+    def persist_while_another_thread_registers(df):
+        cache = _FakeCache()
+        t = threading.Thread(target=ordered.track_pass_cache, args=(cache,))
+        t.start()
+        t.join(10)
+        concurrent.append(cache)
+        return real(df)
+
+    monkeypatch.setattr(ordered, "persist_tracked", persist_while_another_thread_registers)
+    rows = [(dt.date(2023, 1, 2 + i), r) for i, r in enumerate([0.01, 0.02, -0.01, 0.03])]
+    df = ordered.with_order(spark.createDataFrame(rows, "d date, r double"), "d")
+    mark = ordered.pass_cache_mark()
+    try:
+        assert islands.longest_streaks(df, ["r"], winning=True) == {"r": 2}
+        streaks = len(concurrent)
+        assert islands.drawdown_episode_stats(df, ["r"], "d")["r"]["longest_days"] == 1
+        assert 0 < streaks < len(concurrent)
+        assert [c.released for c in concurrent] == [0] * len(concurrent)
+    finally:
+        ordered.release_pass_caches(mark)
