@@ -1363,100 +1363,108 @@ def semdedup_drop_list(
     )
 
 
+# Pair graphs with at most this many pairs are clustered on the driver
+# (see duplicate_clusters). Measured on a 4-core VM, local[3], graphs of
+# 4-node chains: the driver path takes about half the time of min-label
+# propagation at 10k-100k pairs, breaks even near 300k-400k and loses at
+# 1M (11.5 s vs 8.7 s), and its Python heap grows ~0.5 KB per pair. The
+# bound sits well below the crossover and adds ~55 MB to the driver.
+DRIVER_CLUSTER_MAX_PAIRS = 100_000
+
+
 def duplicate_clusters(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iters: int = 30,
     stats: dict | None = None,
-    reliable_checkpoint: bool = False,
     assume_distinct_pairs: bool = False,
 ) -> DataFrame:
     """Connected components over near-dup pairs → (id, cluster_id).
 
-    The 100 TB dedup endgame: candidate pairs (from LSH bands, SimHash or
-    embedding buckets) define a graph; each component is one duplicate
-    cluster and ``cluster_id`` (the component's min id) picks the canonical
-    representative.
+    Candidate pairs (from LSH bands, SimHash or embedding buckets) define a
+    graph; each component is one duplicate cluster and ``cluster_id`` (the
+    component's min id) picks the canonical representative.
 
-    Distributed min-label propagation: every node repeatedly adopts the
-    smallest label among itself and its neighbors. Each iteration is one
-    shuffle (edges ⋈ labels, groupBy); the driver loop stops at fixpoint —
-    iterations needed = graph diameter, which for near-dup graphs is tiny.
-    Round 1 is fused to a single groupBy over the edge set (labels start
-    as the identity map, so the first round is just ``min(self,
-    min(neighbors))`` — no separate node-set pass, no join).
-    ``assume_distinct_pairs=True`` additionally skips the edge-set
-    ``distinct()`` (a full shuffle); pass it when the pair frame is known
-    duplicate-free with ``a != b`` (every pipeline ending in a
-    ``groupBy(id_a, id_b)`` qualifies). Propagation stays CORRECT under
-    duplicate edges either way — the distinct only bounds data volume for
-    duplicate-heavy callers.
-    Frames are persisted per-iteration and checkpoint-free: the lineage is
-    re-rooted by localCheckpoint every few rounds so plans don't grow
-    unboundedly on adversarial graphs.
+    The pair frame's two id columns are checkpointed once, as one eager
+    tracked ``localCheckpoint``, so the upstream pipeline (the LSH verify
+    tail) runs once whichever path follows. One bounded
+    ``limit(N + 1).collect()`` on the checkpoint then picks the path, with
+    N = :data:`DRIVER_CLUSTER_MAX_PAIRS`:
+
+    * **At most N pairs: union-find on the driver.** Roots are min ids, and
+      a component's minimum id is exactly the fixpoint of min-label
+      propagation, so the labels equal the distributed path's. They come
+      back as a local frame under a broadcast hint: a frame built from a
+      Python list carries no size statistic, so a join against it would
+      otherwise start as a sort-merge join. This path releases its
+      checkpoint before returning. Pair frames holding a null id take the
+      distributed path, whose null handling the union-find does not copy.
+    * **More than N pairs: distributed min-label propagation** over the
+      symmetrized checkpoint. Every node repeatedly adopts the smallest
+      label among itself and its neighbors; each round is one shuffle
+      (edges ⋈ labels, groupBy) and the loop stops at fixpoint, so rounds
+      = graph diameter. Round 1 is one groupBy over the edge set (labels
+      start as the identity map). Labels are persisted per round and
+      re-rooted by ``localCheckpoint`` every few rounds so plans stay
+      bounded; a graph that needs more than ``max_iters`` rounds raises.
+
+    ``assume_distinct_pairs=True`` skips the edge-set ``distinct()`` (a
+    full shuffle); pass it when the pair frame is known duplicate-free
+    with ``a != b`` (every pipeline ending in a ``groupBy(id_a, id_b)``
+    qualifies). Both paths stay correct under duplicate edges either way;
+    the distinct only bounds data volume and the ``n_edges`` count.
 
     ``stats`` (optional dict out-param) is the scale-probe hook: it is
     filled with ``n_edges`` (directed, after symmetrization/distinct),
-    ``n_nodes`` and ``iterations`` (label-propagation rounds actually
-    run). The edge/node counts read the frames the loop persists anyway;
-    leaving ``stats=None`` (the default) adds no extra traversal.
+    ``n_nodes`` and ``iterations`` (label-propagation rounds actually run;
+    0 on the driver path).
 
-    Fault-tolerance trade (cluster runs): the default lineage truncation
-    is an eager ``localCheckpoint`` — its blocks are NON-replicated and
-    the lineage is gone, so losing an executor mid-propagation makes the
-    job unrecoverable (a persist could recompute; this cannot). Fine on
-    local[*] (no executor to lose) and for restartable batch jobs; for
-    long multi-tenant cluster runs pass ``reliable_checkpoint=True`` to
-    use a RELIABLE checkpoint instead — replicated to the directory set
-    via ``sparkContext.setCheckpointDir`` (Spark raises if unset),
-    surviving executor loss at the cost of one write+read of the edge
-    set. On the default localCheckpoint path the truncated frames are
-    registered for explicit release (``ordered.local_checkpoint_tracked``),
-    so long-lived sessions reclaim the blocks with
-    ``release_pass_caches``/``pass_cache_scope`` rather than waiting on
-    driver GC; the ``reliable_checkpoint=True`` path instead calls
-    ``DataFrame.checkpoint`` directly — nothing is registered, and the
-    checkpoint FILES persist in the checkpoint directory until
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` (or an external
-    sweep) removes them.
+    The checkpoint's blocks are non-replicated and its lineage is gone, so
+    losing an executor while the distributed path runs is unrecoverable;
+    rerun the job. The distributed path's checkpoints and its returned
+    labels are registered for release by ``release_pass_caches`` /
+    ``pass_cache_scope``.
     """
+    from pyspark.sql import types as T
+
     from alphastats_spark.operators import ordered as _ordered
 
-    # EAGER lineage truncation, not a bare persist: the loop below nests
-    # the edge frame's LOGICAL plan ~2^5 times between re-roots (each
-    # labels plan references edges and the previous labels), and a persist
-    # caches data but not the plan — with a deep upstream tree (the full
-    # LSH verify pipeline) Catalyst's per-iteration planning blows driver
-    # heap before the first re-root ever runs. The checkpoint truncates
-    # the lineage so every nested reference is a scan node. See the
-    # docstring for the localCheckpoint fault-tolerance caveat and the
-    # reliable_checkpoint alternative; both forms are tracked for
-    # explicit block release.
-    edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).unionByName(
-        pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+    # An eager checkpoint of the two id columns, not a persist: it runs the
+    # upstream pipeline once for the size probe and both paths, and it cuts
+    # the lineage, so the propagation loop, which nests the edge plan in
+    # every round's labels plan, plans over a scan node instead of the
+    # whole verify pipeline.
+    mark = _ordered.pass_cache_mark()
+    ck = _ordered.local_checkpoint_tracked(
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")), eager=True
     )
-    # ``assume_distinct_pairs`` skips the edge-set distinct — a full
-    # shuffle of every edge. The internal pipelines (deduplicate,
-    # dedup_corpus) qualify by construction: lsh_verified_pairs ends in a
-    # groupBy(id_a, id_b), so the symmetrized union is already
-    # duplicate-free. Min-label propagation is CORRECT under duplicate
-    # edges either way (a repeated neighbor only repeats the same min) —
-    # the distinct is purely a data-volume optimization for callers with
-    # duplicate-heavy pair frames, so it stays the public default.
+    edges = ck.unionByName(ck.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    head = ck.limit(DRIVER_CLUSTER_MAX_PAIRS + 1).collect()
+    small = len(head) <= DRIVER_CLUSTER_MAX_PAIRS
+    if small and all(a is not None and b is not None for a, b in head):
+        labels = _min_id_components(head)
+        if stats is not None:
+            directed = [(a, b) for a, b in head] + [(b, a) for a, b in head]
+            stats["n_edges"] = len(directed if assume_distinct_pairs else set(directed))
+            stats["n_nodes"] = len(labels)
+            stats["iterations"] = 0
+        id_type = edges.schema["src"].dataType
+        schema = T.StructType(
+            [T.StructField("id", id_type), T.StructField("cluster_id", id_type)]
+        )
+        local = pairs.sparkSession.createDataFrame(list(labels.items()), schema)
+        _ordered.release_own_pass_caches(mark)
+        return F.broadcast(local)
+
     if not assume_distinct_pairs:
-        edges = edges.distinct()
-    if reliable_checkpoint:
-        edges = edges.checkpoint(eager=True)
-    else:
-        edges = _ordered.local_checkpoint_tracked(edges, eager=True)
-    # Iteration 1 fused: labels₀ is the identity map, so the first
-    # propagation round is just min(self, min-over-neighbors) — ONE
-    # groupBy over the edge set, no nodes.distinct() pass and no
-    # edges⋈labels / labels⋈neighbor_min joins. The node set is exactly
-    # groupBy(src) because symmetrization makes every node a src. The
-    # __chg flag keeps the same meaning (some neighbor beat the own
-    # label), so an empty or self-loop-only graph converges here.
+        # every round joins the edge set: shuffle the distinct once
+        edges = _ordered.persist_tracked(edges.distinct())
+    # Round 1 fused: labels₀ is the identity map, so the first round is
+    # min(self, min-over-neighbors), one groupBy over the edge set. The
+    # node set is exactly groupBy(src) because symmetrization makes every
+    # node a src. The __chg flag keeps the same meaning (some neighbor beat
+    # the own label), so a self-loop-only graph converges here.
     labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("nmin"))
@@ -1496,12 +1504,7 @@ def duplicate_clusters(
             )
         )
         if it % 5 == 4:  # re-root lineage so plans stay bounded
-            if reliable_checkpoint:
-                new_labels = new_labels.checkpoint(eager=False)
-            else:
-                new_labels = _ordered.local_checkpoint_tracked(
-                    new_labels, eager=False
-                )
+            new_labels = _ordered.local_checkpoint_tracked(new_labels, eager=False)
         new_labels = new_labels.persist()
         changed = new_labels.where(F.col("__chg")).limit(1).count()
         labels.unpersist()
@@ -1527,6 +1530,28 @@ def duplicate_clusters(
     # persist() here leaked one labels frame per deduplicate() call
     _ordered.track_pass_cache(labels)
     return labels.select("id", "cluster_id")
+
+
+def _min_id_components(pairs) -> dict:
+    """Union-find over ``(a, b)`` pairs, always linking the larger root
+    under the smaller: maps every node to its component's minimum id."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
 def lsh_verified_pairs(

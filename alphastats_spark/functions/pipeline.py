@@ -1379,7 +1379,7 @@ def curate_corpus(
     (same pattern as ``duplicate_clusters(stats=)``): each gating stage's
     wall seconds — everything between the previous stage's eager verdict
     checkpoint and this one's, so eager sub-actions inside a stage's
-    construction (``deduplicate``'s label-propagation loop, the
+    construction (``deduplicate``'s clustering, the
     decontamination band builds) are attributed to THEIR stage, not
     smeared into the caller's final action. The final split+pack stage is
     lazy (materializes with the caller's action), so it has no entry;

@@ -17,6 +17,7 @@ from __future__ import annotations
 import contextlib
 import math
 import os
+import threading
 from statistics import NormalDist
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -2231,6 +2232,13 @@ def _await_stream(sq, src: str) -> None:
         shutil.rmtree(src, ignore_errors=True)
 
 
+# Held for the whole of a _stream_parts scope: the setting it scopes is
+# session-global, so without the lock one thread's stream would plan with
+# the other's partition count and the later exit would restore a value
+# that is not the original. Re-entrant so a nested scope cannot deadlock.
+_STREAM_PARTS_LOCK = threading.RLock()
+
+
 @contextlib.contextmanager
 def _stream_parts(spark: SparkSession, src: str):
     """Scope ``spark.sql.shuffle.partitions`` — which fixes a streaming
@@ -2258,10 +2266,8 @@ def _stream_parts(spark: SparkSession, src: str):
     oracles are order-insensitive, so the count changes wall-clock only.
 
     Mutates the session-global ``spark.sql.shuffle.partitions`` for the
-    scope's duration — safe because gate operators run single-threaded
-    on the session (the registry executes queries sequentially);
-    concurrent gate execution on a shared session would need a lock
-    around this scope.
+    scope's duration, under a module lock: concurrent scopes on a shared
+    session run one after another.
     """
     env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
     if env is not None:
@@ -2287,12 +2293,13 @@ def _stream_parts(spark: SparkSession, src: str):
             spark.sparkContext.defaultParallelism,
             (byts + (64 << 10) - 1) // (64 << 10),
         ))
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    with _STREAM_PARTS_LOCK:
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def _add_streaming(add) -> None:
@@ -3968,9 +3975,10 @@ SELECT a.doc_id AS id_a, b.doc_id AS id_b,
 FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""")
 
-    # Connected components over the exact-Jaccard pair graph: iterative
-    # min-label propagation on Spark vs a recursive-CTE transitive closure
-    # in DuckDB — a full value oracle for an iterative distributed algorithm.
+    # Connected components over the exact-Jaccard pair graph vs a
+    # recursive-CTE transitive closure in DuckDB. The gate's pair graphs
+    # fall under dedup.DRIVER_CLUSTER_MAX_PAIRS, so this checks the driver
+    # union-find; tests pin the distributed path to the same labels.
     add("dedup_clusters",
         lambda spark, sf_dir: dedup.duplicate_clusters(
             dedup.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5),

@@ -124,6 +124,14 @@ def release_pass_caches(from_mark: int = 0) -> None:
     _release(lambda token, _owner: token >= start)
 
 
+def release_own_pass_caches(from_mark: _Mark) -> None:
+    """Unpersist the pass caches THE CALLING THREAD registered since
+    ``from_mark``; entries other threads registered meanwhile stay live."""
+    me = threading.get_ident()
+    start = from_mark.token
+    _release(lambda token, owner: owner == me and token >= start)
+
+
 @contextmanager
 def pass_cache_scope():
     """Scope pass-caches to a fully-materializing block::
@@ -149,12 +157,11 @@ def pass_cache_scope():
     materialize their result inside the block — a DataFrame returned out
     of the scope loses its caches' benefit (it stays CORRECT; the
     lineage simply recomputes)."""
-    me = threading.get_ident()
-    start = pass_cache_mark().token
+    mark = pass_cache_mark()
     try:
         yield
     finally:
-        _release(lambda token, owner: owner == me and token >= start)
+        release_own_pass_caches(mark)
 
 
 class _CheckpointHandle:

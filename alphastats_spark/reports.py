@@ -72,6 +72,11 @@ from alphastats_spark.operators import islands, joins, ordered
 _AGG_CHUNK_COLUMNS = 8
 
 
+def _in_cache_scope(fn, *args):
+    with ordered.pass_cache_scope():
+        return fn(*args)
+
+
 # ---------------------------------------------------------------------------
 # public entry point
 
@@ -140,6 +145,14 @@ def metrics(
     pool = ThreadPoolExecutor(max_workers=6)
     _persisted = [frame]
     _cache_mark = ordered.pass_cache_mark()
+
+    # Every pass fully materializes inside its task, so each pool task
+    # releases the caches it registered on exit, and the finally below
+    # releases only this thread's: the report never frees a cache that
+    # another thread registered meanwhile and still reads.
+    def submit(fn, *args):
+        return pool.submit(_in_cache_scope, fn, *args)
+
     try:
 
         # ---- job A: date metadata (pre-fill null pattern) --------------------
@@ -156,7 +169,7 @@ def metrics(
                 meta_aggs.append(
                     F.max(F.when(F.col(c).isNotNull(), F.col(temporal))).alias(f"end_{c}")
                 )
-        meta_fut = pool.submit(lambda: frame.agg(*meta_aggs).first()) if meta_aggs else None
+        meta_fut = submit(lambda: frame.agg(*meta_aggs).first()) if meta_aggs else None
 
         # ---- fill nulls with 0 (report-only policy) --------------------------
         filled = frame.select(
@@ -192,7 +205,7 @@ def metrics(
         cal_futs = {}
         if temporal:
             for granularity in ("month", "quarter", "year") if full else ("month",):
-                cal_futs[granularity] = pool.submit(calendar, granularity)
+                cal_futs[granularity] = submit(calendar, granularity)
 
         windows = None
         meta = None
@@ -237,7 +250,7 @@ def metrics(
             _persisted.append(rdf)
             # materialize the enrichment concurrently with the meta job; the
             # main agg and episode pass below then both read one cached copy
-            mat_fut = pool.submit(rdf.count)
+            mat_fut = submit(rdf.count)
 
             if meta_fut is not None and meta is None:
                 meta = meta_fut.result()
@@ -255,7 +268,7 @@ def metrics(
 
             # episodes never read the main aggregate — overlap it with the
             # main aggregation on the now-cached enrichment frame
-            eps_fut = pool.submit(
+            eps_fut = submit(
                 islands.drawdown_episode_stats,
                 rdf, group, None,
                 {c: f"__dd_{c}" for c in group},
@@ -290,7 +303,7 @@ def metrics(
         pool.shutdown(wait=True, cancel_futures=True)
         for _p in _persisted:
             _p.unpersist()
-        ordered.release_pass_caches(_cache_mark)
+        ordered.release_own_pass_caches(_cache_mark)
 
     # ---- assemble ----------------------------------------------------------
     rows: list[tuple[str, dict[str, Any]]] = []

@@ -796,9 +796,10 @@ def run_deep3_instrumented(spark, n_docs: int) -> dict:
     Stages mirror ``dedup.deduplicate(lineage=True)`` exactly, computed
     through the library's own building blocks so the counts describe the
     shipped plan: shingle explode → band table (pre-guard) → over-cap
-    buckets → guarded candidate self-join → Jaccard verify → label
-    propagation (iterations via the ``duplicate_clusters`` stats
-    out-param) → the lineage fold. Free temp-dir disk is snapshotted
+    buckets → guarded candidate self-join → Jaccard verify → clustering
+    (label-propagation rounds via the ``duplicate_clusters`` stats
+    out-param; 0 when the pair graph is small enough for the driver
+    union-find) → the lineage fold. Free temp-dir disk is snapshotted
     after each stage — the direct evidence for/against the disk ceiling.
     """
     import shutil as _sh

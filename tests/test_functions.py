@@ -310,8 +310,10 @@ class TestDedup:
         drops = [r for r in lin.collect() if r["reason"] == "near_dup_dropped"]
         assert len(drops) == 5  # exact unguarded join still finds the group
 
-    def test_duplicate_clusters_stats_out_param(self, spark):
-        # the scale-probe hook: edge/node counts and propagation rounds
+    def test_duplicate_clusters_stats_out_param(self, spark, monkeypatch):
+        # the scale-probe hook: edge/node counts and propagation rounds,
+        # pinned to the distributed path (the driver path runs no rounds)
+        monkeypatch.setattr(dedup, "DRIVER_CLUSTER_MAX_PAIRS", 0)
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (3, 4), (4, 5), (7, 8)],
             "id_a bigint, id_b bigint",
@@ -2789,13 +2791,15 @@ def test_read_index_meta_corrupt_raises(spark, tmp_path):
     assert dedup.read_index_meta(spark, str(tmp_path / "nope")) is None
 
 
-def test_duplicate_clusters_nonconvergence_raises(spark):
+def test_duplicate_clusters_nonconvergence_raises(spark, monkeypatch):
     """A chain whose diameter exceeds max_iters fails loudly instead of
-    returning non-fixpoint labels (silent under-deduplication)."""
+    returning non-fixpoint labels (silent under-deduplication). Pinned to
+    the distributed path: the driver path has no rounds to run out of."""
     import pytest as _pt
 
     from alphastats_spark.functions import dedup
 
+    monkeypatch.setattr(dedup, "DRIVER_CLUSTER_MAX_PAIRS", 0)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], "id_a bigint, id_b bigint"
     )
@@ -2803,6 +2807,97 @@ def test_duplicate_clusters_nonconvergence_raises(spark):
         dedup.duplicate_clusters(chain, max_iters=3)
     ok = dedup.duplicate_clusters(chain, max_iters=15)
     assert ok.select("cluster_id").distinct().count() == 1
+
+
+def _clusters_on_path(spark, monkeypatch, rows, max_pairs, **kw):
+    monkeypatch.setattr(dedup, "DRIVER_CLUSTER_MAX_PAIRS", max_pairs)
+    pairs = spark.createDataFrame(rows, "id_a bigint, id_b bigint")
+    stats: dict = {}
+    clusters = dedup.duplicate_clusters(pairs, stats=stats, **kw)
+    got = {(r["id"], r["cluster_id"]) for r in clusters.collect()}
+    return got, stats
+
+
+def _min_id_reference(rows):
+    """Each node's component minimum, by repeated relaxation over the pairs."""
+    label = {x: x for pair in rows for x in pair}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in rows:
+            m = min(label[a], label[b])
+            if label[a] != m or label[b] != m:
+                label[a] = label[b] = m
+                changed = True
+    return set(label.items())
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["random", "star", "duplicate_and_reversed", "null_ids"],
+)
+def test_duplicate_clusters_driver_and_distributed_paths_agree(spark, monkeypatch, case):
+    """Forcing the size rule each way (bound 0: distributed min-label
+    propagation; a large bound: union-find on the driver) gives the same
+    labels and the same edge/node counts; only the driver path reports 0
+    rounds."""
+    import random
+
+    if case == "random":
+        rng = random.Random(7)
+        # three seeded graphs in disjoint id ranges, self-loops allowed
+        rows = [
+            (base + rng.randrange(25), base + rng.randrange(25))
+            for base in (0, 100, 200)
+            for _ in range(20)
+        ]
+        distinct = False
+    elif case == "star":
+        rows = [(50, leaf) for leaf in range(51, 71)] + [(3, 9)]
+        distinct = True
+    elif case == "duplicate_and_reversed":
+        rows = [(1, 2), (2, 1), (1, 2), (2, 3), (5, 5), (6, 4), (4, 6)]
+        distinct = False
+    else:  # a null id sends the driver path to the distributed one
+        rows = [(1, 2), (2, 3), (7, None)]
+        distinct = True
+    small, small_stats = _clusters_on_path(
+        spark, monkeypatch, rows, 10_000, assume_distinct_pairs=distinct
+    )
+    big, big_stats = _clusters_on_path(
+        spark, monkeypatch, rows, 0, assume_distinct_pairs=distinct
+    )
+    assert big_stats["iterations"] >= 1
+    if case == "null_ids":
+        assert small == big and small_stats == big_stats
+        return
+    assert small == big == _min_id_reference(rows)
+    for key in ("n_edges", "n_nodes"):
+        assert small_stats[key] == big_stats[key]
+    assert small_stats["iterations"] == 0
+
+
+def test_duplicate_clusters_long_chain_on_driver_path(spark, monkeypatch):
+    """A 40-node chain has diameter 39, beyond the default max_iters=30 of
+    min-label propagation; under the size bound it clusters on the driver
+    with the default max_iters."""
+    rows = [(i + 1, i) for i in range(39)]
+    got, stats = _clusters_on_path(
+        spark, monkeypatch, rows, dedup.DRIVER_CLUSTER_MAX_PAIRS
+    )
+    assert got == {(i, 0) for i in range(40)}
+    assert stats == {"n_edges": 78, "n_nodes": 40, "iterations": 0}
+
+
+def test_duplicate_clusters_driver_path_keeps_type_and_broadcasts(spark):
+    """The driver path's labels take the pair columns' type and carry a
+    broadcast hint, so a join against them plans as a broadcast join."""
+    pairs = spark.createDataFrame([(1, 2), (3, 4)], "id_a int, id_b int")
+    clusters = dedup.duplicate_clusters(pairs)
+    assert [f.dataType.typeName() for f in clusters.schema.fields] == ["integer", "integer"]
+    docs = spark.range(6).select(F.col("id").cast("int").alias("id"))
+    plan = docs.join(clusters, "id", "left")._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
 
 
 def test_funnel_step_name_with_quote(spark):

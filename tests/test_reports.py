@@ -215,6 +215,35 @@ class TestFailureCleanup:
         after = int(spark.sparkContext._jsc.getPersistentRDDs().size())
         assert after == before
 
+    def test_keeps_caches_other_threads_register(self, daily_df, monkeypatch):
+        """A pass cache that an unrelated thread registers while a report
+        runs belongs to that thread: the report's cleanup must not free it."""
+        import threading
+
+        class Probe:
+            released = False
+
+            def unpersist(self, blocking=False):
+                self.released = True
+
+        probe = Probe()
+        calendar_agg = reports._calendar_agg
+
+        def calendar_with_outside_cache(*args):
+            outside = threading.Thread(target=ordered.track_pass_cache, args=(probe,))
+            outside.start()
+            outside.join()
+            return calendar_agg(*args)
+
+        monkeypatch.setattr(reports, "_calendar_agg", calendar_with_outside_cache)
+        mark = ordered.pass_cache_mark()
+        try:
+            reports.metrics(daily_df, display=False).collect()
+            assert not probe.released
+        finally:
+            ordered.release_pass_caches(mark)
+        assert probe.released
+
 
 class TestNumericReport:
     def test_numeric_basic_rows_and_values(self, spark):

@@ -788,6 +788,51 @@ def test_streaming_exact_dedup_duplicate_ids_one_batch(spark, tmp_path):
     ]
 
 
+def test_stream_parts_concurrent_scopes_do_not_interleave(spark, tmp_path):
+    """Two threads open _stream_parts scopes on one session: each scope
+    reads its own partition count, and the conf is restored after both.
+    The first thread holds its scope until the second has entered its own
+    or a timeout passes, so unserialised scopes would interleave here."""
+    import threading
+
+    from alphastats_spark import harness
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    small = tmp_path / "small"
+    small.mkdir()
+    (small / "part-0.parquet").write_bytes(b"x" * 1024)  # 2 partitions
+    mid = tmp_path / "mid"
+    mid.mkdir()
+    (mid / "part-0.parquet").write_bytes(b"x" * (150 << 10))  # 3 partitions
+    barrier = threading.Barrier(2, timeout=30)
+    second_entered = threading.Event()
+    first_read = threading.Event()
+    seen = {}
+
+    def first():
+        with harness._stream_parts(spark, str(small)):
+            barrier.wait()
+            second_entered.wait(timeout=1.0)
+            seen["first"] = spark.conf.get(key)
+            first_read.set()
+
+    def second():
+        barrier.wait()
+        with harness._stream_parts(spark, str(mid)):
+            second_entered.set()
+            first_read.wait(timeout=1.0)
+            seen["second"] = spark.conf.get(key)
+
+    threads = [threading.Thread(target=first), threading.Thread(target=second)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert seen == {"first": "2", "second": "3"}
+    assert spark.conf.get(key) == old
+
+
 def test_stream_parts_scope_derivation_and_restore(spark, tmp_path):
     """harness._stream_parts sizes the state-partition conf to the staged
     feed (>= 64 KiB per partition, floor 2, capped at defaultParallelism),
