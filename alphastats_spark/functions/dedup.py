@@ -1890,7 +1890,7 @@ def incremental_near_dups(
         .select(F.col("match_id"), hash_key60(F.col("shingle")).alias("__h60"))
     )
     # both band tables are consumed more than once downstream (bn: the
-    # probe distinct + the broadcast candidate join; bo: the mega-bucket
+    # band probe + the broadcast candidate join; bo: the mega-bucket
     # guard + the candidate join) — on this frame-to-frame path there is
     # no parquet scan whose pruning a persist could break, so persist both
     # rather than re-running the signature groupBys per consumer
@@ -1927,35 +1927,14 @@ def _verified_matches(
     one; without it (the stored index's raw shingle table) the hashing is
     a scan-side projection, so the index format is unchanged.
 
-    ``max_band_bucket`` is the corpus-side twin of the self-join's
-    mega-bucket guard: a boilerplate (band, sig) bucket holding D corpus
-    documents hands EVERY batch doc that probes it D candidate pairs, and
-    D grows with the corpus — the admit-time quadratic. The guard stays
-    O(batch): corpus bucket sizes are counted only over the buckets the
-    batch actually probes (a semi-join against the tiny broadcast batch
-    band table — for the materialized index that read is partition-pruned
-    exactly like the candidate join), never over the whole stored table.
+    The candidates come from :func:`_band_candidates`. The verify side is
+    not O(batch) on a stored index: the raw shingle table is hashed and
+    sized for every corpus document, although only candidates are ever
+    verified (:func:`admit_against_index` avoids this for small inputs).
     """
     from alphastats_spark.functions.text import hash_key60
 
-    probe = bn.select("band", "sig").distinct()
-    # deliberately NOT persisted here: the guard aggregate and the
-    # candidate join each read the probed subset through their OWN scan,
-    # so the stored band table keeps its dynamic partition pruning (pinned
-    # by tests/test_sources_plans.py::test_admit_against_index_band_dpp —
-    # a persist would wrap the scan in an InMemoryRelation and lose the
-    # runtime band filter). Two pruned O(probed-buckets) scans beat one
-    # unpruned cached one; the FRAME-to-frame caller (incremental_admit),
-    # which has no scan to prune, persists its computed band table before
-    # passing it in.
-    bo_probed = bo.join(F.broadcast(probe), ["band", "sig"], "semi")
-    bo_probed = _drop_hot_buckets(bo_probed, max_band_bucket)
-    cands = (
-        F.broadcast(bn)
-        .join(bo_probed, ["band", "sig"])
-        .select("new_id", "match_id")
-        .distinct()
-    )
+    cands = _band_candidates(bn, bo, max_band_bucket)
     hn = sh_n.select("new_id", F.col("__h60").alias("shingle"))
     ho = sh_o.select(
         "match_id",
@@ -1984,6 +1963,45 @@ def _verified_matches(
     )
 
 
+def _band_candidates(
+    bn: DataFrame, bo: DataFrame, max_band_bucket: int | None = MAX_BAND_BUCKET
+) -> DataFrame:
+    """Distinct ``(new_id, match_id)`` pairs whose documents share a full
+    (band, sig) bucket, with the batch band table ``bn`` broadcast.
+
+    ``max_band_bucket`` is the corpus-side twin of the self-join's
+    mega-bucket guard: a boilerplate (band, sig) bucket holding D corpus
+    documents hands EVERY batch doc that probes it D candidate pairs, and
+    D grows with the corpus — the admit-time quadratic. Corpus bucket
+    sizes are counted only over the buckets the batch probes (a semi-join
+    against the broadcast batch band table), so the hot list and the
+    candidate join stay O(batch).
+
+    The SCAN of a stored band table is not O(batch), though. Its
+    ``band`` partitioning prunes nothing for a non-empty batch: every
+    document has one row in every band, so the batch probes all
+    ``k / rows_per_band`` band values. Dynamic partition pruning appears
+    in the plan only when the batch side carries a selective predicate
+    (a filtered batch; an unfiltered parquet batch plans
+    ``PartitionFilters: [isnotnull(band)]``), and even then it keeps every
+    band directory. The guard and the candidate join each read the stored
+    table through their own scan rather than a persisted copy, so the
+    runtime band filter survives where it appears (pinned by
+    ``tests/test_sources_plans.py::test_admit_against_index_band_dpp``).
+    """
+    # no distinct: a semi-join ignores duplicate build keys, and this
+    # broadcast is never larger than bn's own, so a shuffle would buy nothing
+    probe = bn.select("band", "sig")
+    bo_probed = bo.join(F.broadcast(probe), ["band", "sig"], "semi")
+    bo_probed = _drop_hot_buckets(bo_probed, max_band_bucket)
+    return (
+        F.broadcast(bn)
+        .join(bo_probed, ["band", "sig"])
+        .select("new_id", "match_id")
+        .distinct()
+    )
+
+
 def incremental_admit(
     new_df: DataFrame,
     corpus_df: DataFrame,
@@ -2005,8 +2023,8 @@ def incremental_admit(
     exponent 1.16 over corpus size, SCALE_r06.json), so repeated ingest
     against a growing corpus is quadratic in total. The production shape
     is :func:`write_dedup_index` once + :func:`admit_against_index` per
-    batch — identical output contract, O(batch) per call, corpus never
-    re-tokenized."""
+    batch — identical output contract, only the batch tokenized per call,
+    corpus never re-tokenized."""
     matches = incremental_near_dups(
         new_df, corpus_df, id_col, text_col, threshold=threshold
     )
@@ -2042,14 +2060,20 @@ def _admit_rank(new_df: DataFrame, matches: DataFrame, id_col: str) -> DataFrame
     return (
         new_df.select(F.col(id_col))
         .join(best.withColumnRenamed("new_id", id_col), id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_matches", F.lit(0).cast("bigint")).alias("n_matches"),
-            F.coalesce(F.col("match_id"), F.lit(-1).cast(id_type)).alias("best_match_id"),
-            F.coalesce(F.col("jaccard"), F.lit(0.0)).alias("best_jaccard"),
-            (F.col("n_matches").isNull()).alias("admitted"),
-        )
+        .select(*_admission_cols(id_col, id_type))
     )
+
+
+def _admission_cols(id_col: str, match_type) -> list:
+    """The admission row over ``(id_col, n_matches, match_id, jaccard)``,
+    where the last three are null for a document without a match."""
+    return [
+        F.col(id_col),
+        F.coalesce("n_matches", F.lit(0).cast("bigint")).alias("n_matches"),
+        F.coalesce(F.col("match_id"), F.lit(-1).cast(match_type)).alias("best_match_id"),
+        F.coalesce(F.col("jaccard"), F.lit(0.0)).alias("best_jaccard"),
+        (F.col("n_matches").isNull()).alias("admitted"),
+    ]
 
 
 def benchmark_leakage(
@@ -2575,6 +2599,26 @@ def _resolve_index_params(meta, k, rows_per_band, n, allow_defaults=False):
     return tuple(resolved)
 
 
+# Admission batches whose band candidates with their batch ids, and the
+# shingle rows that verify them, each number at most this many are verified
+# and ranked on the driver (see admit_against_index). Timed with each path
+# forced (local[3] on a 4-core VM, 10k-document index, batches with 10%
+# planted copies; best warm run, one cold run at 100k; Python driver peak
+# RSS):
+#
+#   batch docs   shingle rows   driver path s   distributed s   driver RSS MB
+#        1,000         42k            3.3             9.2              152
+#        2,000         84k            4.3             8.3              159
+#        3,000        125k            5.3            10.5              166
+#        5,000        208k            7.8            14.4              181
+#       10,000        411k           16.4            23.2              216
+#      100,000  ~4M (est.)          127.9           118.7              706
+#
+# The paths cross between 0.4M and 4M rows. The bound sits at half the
+# largest measured win and adds ~35 MB to the driver.
+DRIVER_ADMIT_MAX_ROWS = 200_000
+
+
 def admit_against_index(
     new_df: DataFrame,
     index_path: str,
@@ -2588,8 +2632,21 @@ def admit_against_index(
     """:func:`incremental_admit` against a MATERIALIZED corpus index
     (:func:`write_dedup_index`): same output contract, but only the new
     batch is tokenized/hashed — the corpus band and shingle tables come
-    off parquet. The batch band table still broadcasts, so the stored
-    corpus tables never reshuffle beyond their band/shingle join keys.
+    off parquet. The batch band table broadcasts, so the stored band table
+    never reshuffles; its scan still reads every band partition (see
+    :func:`_band_candidates`).
+
+    The path is chosen by size, like a broadcast join. The band candidates
+    are collected, bounded by N = :data:`DRIVER_ADMIT_MAX_ROWS` rows, and
+    so are every batch id and the shingles of the candidate documents on
+    both sides. If both fit, the candidates are
+    verified and ranked on the driver (:func:`_admit_on_driver`): only the
+    candidate corpus documents' shingles are hashed, and the result is a
+    materialized local frame (no further job when collected) whose values,
+    types and nullability equal the distributed path's. This path releases
+    its own pass caches before returning. Otherwise the distributed
+    verify + rank plan is returned lazily, and it hashes and sizes the
+    whole stored shingle table.
 
     ``k``/``rows_per_band``/``n`` default to the parameters stored in
     the index's ``meta`` table (stored meta ALWAYS wins over module
@@ -2599,6 +2656,8 @@ def admit_against_index(
     admitted). An index with no meta, or whose meta records a signature
     family other than ``"affine31"``, raises and must be rebuilt (see
     :func:`_resolve_index_params`)."""
+    from pyspark.sql import types as T
+
     from alphastats_spark.operators import ordered
 
     from alphastats_spark.functions.text import hash_key60
@@ -2608,21 +2667,165 @@ def admit_against_index(
         read_index_meta(spark, index_path), k, rows_per_band, n
     )
     bo = spark.read.parquet(f"{index_path}/bands")
-    sh_o = spark.read.parquet(f"{index_path}/shingles")
+    # both tables are written from one frame, so the shingle table's schema
+    # is known and its read skips the schema-inference job
+    sh_o = spark.read.schema(
+        T.StructType([bo.schema["match_id"], T.StructField("shingle", T.StringType())])
+    ).parquet(f"{index_path}/shingles")
     # batch side persists the 60-bit key: one md5 per batch shingle for
     # signatures + verify join + sizes. The STORED corpus side stays raw —
     # the index format is unchanged and its hashing remains a scan-side
     # projection.
+    mark = ordered.pass_cache_mark()
     sh_n = ordered.persist_tracked(
         _exploded_shingles(new_df, id_col, text_col, n, out_id="new_id")
         .select(F.col("new_id"), hash_key60(F.col("shingle")).alias("__h60"))
     )
-    bn = _band_table(
+    # persisted: the band probe and the broadcast candidate join both read
+    # it, and the signature aggregate should run once
+    bn = ordered.persist_tracked(_band_table(
         _sigs_over_shingles(sh_n, "new_id", k, base60_col="__h60"),
         "new_id", k, rows_per_band,
-    )
+    ))
+    local = _admit_on_driver(new_df, id_col, _band_candidates(bn, bo), sh_n, sh_o, threshold)
+    if local is not None:
+        ordered.release_own_pass_caches(mark)
+        return local
     matches = _verified_matches(bn, bo, sh_n, sh_o, threshold)
     return _admit_rank(new_df, matches, id_col)
+
+
+def _admit_on_driver(
+    new_df: DataFrame,
+    id_col: str,
+    cands: DataFrame,
+    sh_n: DataFrame,
+    sh_o: DataFrame,
+    threshold: float,
+) -> DataFrame | None:
+    """The small-input half of :func:`admit_against_index`: verify and
+    rank the band candidates on the driver, or return None when the
+    candidates, or the rows needed to verify them, exceed
+    :data:`DRIVER_ADMIT_MAX_ROWS`.
+
+    Two bounded collects through Arrow. The first is every batch id
+    left-joined to its candidate match ids. It is the query that scans the
+    stored band table, and the join to the batch is what lets a selective
+    batch predicate reach that scan as a dynamic partition filter (the
+    predicate is inferred onto the candidate side). The second is a tagged
+    union of the candidate batch documents' hashed shingles (tag 1) and
+    the candidate corpus documents' shingles (tag 2), semi-joined to the
+    candidate ids before they are hashed. The values are the SQL path's:
+    ``common`` is the multiset intersection (the verify join pairs every
+    equal hash), sizes are row counts, a null id never matches, and
+    ``jaccard`` is Spark's own ``round(c / s, 7)``, folded over a local
+    relation rather than computed with Python's rounding."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from alphastats_spark.functions.text import hash_key60
+
+    cap = DRIVER_ADMIT_MAX_ROWS
+    spark = new_df.sparkSession
+    id_type = new_df.schema[id_col].dataType
+    match_type = cands.schema["match_id"].dataType
+
+    def local(columns, schema: T.StructType) -> DataFrame:
+        # built through Arrow, so it plans as a LocalRelation
+        return spark.createDataFrame(pa.table(
+            [pa.array(c, to_arrow_type(f.dataType)) for c, f in zip(columns, schema)],
+            names=schema.names,
+        ), schema)
+
+    found = (
+        new_df.select(F.col(id_col).alias("new_id"))
+        .join(F.broadcast(cands.where(F.col("match_id").isNotNull())), "new_id", "left")
+        .limit(cap + 1)
+        .toArrow()
+    )
+    if found.num_rows > cap:
+        return None
+    found_rows = list(zip(found["new_id"].to_pylist(), found["match_id"].to_pylist()))
+    # a batch row comes back once per candidate of its id (once, with a
+    # null match, without one), so the rows holding its id's first
+    # candidate are exactly the batch rows
+    first: dict = {}
+    for a, b in found_rows:
+        first.setdefault(a, b)
+    batch_ids = [a for a, b in found_rows if b == first[a]]
+    pairs = list(dict.fromkeys((a, b) for a, b in found_rows if b is not None))
+
+    def ids(values, name: str, dtype) -> DataFrame:
+        # one broadcast semi-join filters by any number of ids (an isin
+        # list costs a JVM call per value)
+        return F.broadcast(local([list(set(values))], T.StructType([T.StructField(name, dtype)])))
+
+    grams: tuple = ({}, {})  # per side: doc id -> {hash: rows}
+    if pairs:
+        rows = (
+            sh_n.join(ids((a for a, _ in pairs), "new_id", id_type), "new_id", "semi")
+            .select(F.lit(1).alias("tag"), "new_id",
+                    F.lit(None).cast(match_type).alias("match_id"), F.col("__h60").alias("h"))
+            .unionAll(
+                sh_o.join(ids((b for _, b in pairs), "match_id", match_type), "match_id", "semi")
+                .select(F.lit(2), F.lit(None).cast(id_type), "match_id",
+                        hash_key60(F.col("shingle")))
+            )
+            .limit(cap + 1)
+            .toArrow()
+        )
+        if rows.num_rows > cap:
+            return None
+        cols = (rows[c].to_pylist() for c in ("tag", "new_id", "match_id", "h"))
+        for tag, a, b, h in zip(*cols):
+            counts = grams[tag - 1].setdefault(a if tag == 1 else b, {})
+            counts[h] = counts.get(h, 0) + 1
+    verified = []
+    for a, b in pairs:
+        ga, gb = grams[0][a], grams[1].get(b, {})
+        common = sum(c * gb.get(h, 0) for h, c in ga.items())
+        if common:
+            verified.append((a, b, common, sum(ga.values()), sum(gb.values())))
+
+    best: dict = {}  # new id -> [n_matches, best match id, its jaccard]
+    if verified:
+        scored = (
+            local(
+                [range(len(verified)), *list(zip(*verified))[2:]],
+                T.StructType([T.StructField(c, T.LongType())
+                              for c in ("i", "common", "size_a", "size_b")]),
+            )
+            .select(
+                "i",
+                F.round(
+                    F.col("common") / (F.col("size_a") + F.col("size_b") - F.col("common")), 7
+                ).alias("jaccard"),
+            )
+            .where(F.col("jaccard") >= threshold)
+            .collect()
+        )
+        for i, jac in scored:
+            a, b = verified[i][:2]
+            cur = best.get(a)
+            if cur is None:
+                best[a] = [1, b, jac]
+            else:
+                cur[0] += 1
+                # highest jaccard, ties to the lowest match id
+                if jac > cur[2] or (jac == cur[2] and b < cur[1]):
+                    cur[1:] = [b, jac]
+
+    got = [best.get(a) for a in batch_ids]
+    return local(
+        [batch_ids, *([g and g[j] for g in got] for j in range(3))],
+        T.StructType([
+            new_df.schema[id_col],
+            T.StructField("n_matches", T.LongType()),
+            T.StructField("match_id", match_type),
+            T.StructField("jaccard", T.DoubleType()),
+        ]),
+    ).select(*_admission_cols(id_col, match_type))
 
 
 #: Default document-frequency cap for the containment self-join. A shingle

@@ -112,14 +112,11 @@ def promote_staged_parquet(spark: SparkSession, staging: str, dest: str) -> None
             continue
         target = Path(f"{dest}/{name}")
         if st.isDirectory():
-            if not fs.exists(target):
-                # fresh partition directory: move it wholesale
-                if not fs.rename(st.getPath(), target):
-                    raise IOError(
-                        f"promote_staged_parquet: rename {st.getPath()} -> "
-                        f"{target} failed"
-                    )
-                continue
+            # always file by file into a mkdirs'd target: renaming a whole
+            # new partition directory after an exists() check races another
+            # appender creating the same partition, and a directory renamed
+            # onto an existing one lands INSIDE it (<p>/<p>/part-*)
+            fs.mkdirs(target)
             for f in fs.listStatus(st.getPath()):
                 fn = f.getPath().getName()
                 if fn.startswith("_") or fn.startswith("."):

@@ -18,6 +18,10 @@ from alphastats_spark.sources import (
 
 DATES = [dt.date(2023, 1, i) for i in range(1, 6)]
 
+# Spark jobs of one small admit_against_index(...).collect(); see
+# test_admit_against_index_job_count.
+ADMIT_JOBS = 17
+
 
 @pytest.fixture
 def prices_df(spark):
@@ -927,6 +931,69 @@ def test_concurrent_index_appends_match_sequential(spark, tmp_path):
     assert [p for p in os.listdir(str(tmp_path)) if "__append_tmp_" in p] == []
 
 
+def test_promote_staged_partition_created_by_other_writer(spark, tmp_path, monkeypatch):
+    """Another appender creates the same new partition directory while
+    this one promotes: right after this writer's exists() on the target
+    (or right before its mkdirs) the directory appears, holding the other
+    writer's file. Every staged file must land directly in ``band=5/``
+    beside it, never nested as ``band=5/band=5/part-*``."""
+    import os
+
+    from alphastats_spark.sources import maintenance
+
+    dest, staging = str(tmp_path / "bands"), str(tmp_path / "bands__stage")
+    spark.createDataFrame([(1, 0), (2, 0)], "v int, band int").write.partitionBy(
+        "band"
+    ).parquet(dest)
+    spark.createDataFrame([(3, 5), (4, 5), (5, 0)], "v int, band int").write.partitionBy(
+        "band"
+    ).parquet(staging)
+    racy = os.path.join(dest, "band=5")
+    other = os.path.join(racy, "part-other-writer.parquet")
+    real_fs = maintenance._hadoop_fs
+
+    def other_writer_creates():
+        if not os.path.exists(racy):
+            spark.createDataFrame([(6,)], "v int").coalesce(1).write.parquet(
+                str(tmp_path / "other")
+            )
+            os.makedirs(racy)
+            src = [f for f in os.listdir(tmp_path / "other") if f.endswith(".parquet")][0]
+            os.rename(os.path.join(tmp_path / "other", src), other)
+
+    class RacyFs:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def exists(self, p):
+            found = self._fs.exists(p)
+            if p.toUri().getPath().rstrip("/") == racy:
+                other_writer_creates()
+            return found
+
+        def mkdirs(self, p):
+            if p.toUri().getPath().rstrip("/") == racy:
+                other_writer_creates()
+            return self._fs.mkdirs(p)
+
+    def racy_hadoop_fs(spark_, path):
+        fs, jpath = real_fs(spark_, path)
+        return RacyFs(fs), jpath
+
+    monkeypatch.setattr(maintenance, "_hadoop_fs", racy_hadoop_fs)
+    maintenance.promote_staged_parquet(spark, staging, dest)
+
+    assert os.path.exists(other)
+    assert not os.path.exists(os.path.join(racy, "band=5"))
+    staged = [f for f in os.listdir(racy) if f.startswith("part-") and f != os.path.basename(other)]
+    assert len(staged) >= 1
+    got = sorted(tuple(r) for r in spark.read.parquet(dest).collect())
+    assert got == [(1, 0), (2, 0), (3, 5), (4, 5), (5, 0), (6, 5)]
+
+
 def test_append_meta_rewrite_skipped_when_identical(spark, tmp_path):
     """A parameter-matching append (the only legal kind) must not touch
     the meta record — the delete+rename swap is what concurrent appenders
@@ -1106,22 +1173,41 @@ def _tiny_docs(spark, n=60):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
+def _executed_plans_since(spark, first_id: int) -> list[str]:
+    """Formatted physical plans of the SQL executions with id >= first_id,
+    as the SQL status store recorded them (final adaptive plans)."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if e.executionId() >= first_id
+    ]
+
+
+def _next_execution_id(spark) -> int:
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max((execs.apply(i).executionId() for i in range(execs.size())), default=-1) + 1
+
+
 def test_admit_against_index_band_dpp(spark, tmp_path):
-    """admit_against_index must reach the stored band table through
-    DYNAMIC partition pruning: the broadcast batch band table supplies the
-    band values, so the parquet scan of <path>/bands reads only the
-    colliding band directories — the partition-layout payoff that makes
-    the stored index O(batch) to probe."""
+    """The query of admit_against_index that scans the stored band table
+    must carry DYNAMIC partition pruning on ``band`` when the batch side
+    has a selective predicate (the filtered batch below; an unfiltered
+    batch has none). Every non-empty batch probes all band values, so the
+    filter prunes nothing; this pins that the stored scan stays a plain
+    partitioned scan that a runtime band filter can reach."""
     import re
 
     from alphastats_spark.functions import dedup
-    from alphastats_spark.plans.audit import explain_string
 
     docs = _tiny_docs(spark)
     path = str(tmp_path / "didx")
     dedup.write_dedup_index(docs.where("doc_id % 5 != 0"), path)
-    out = dedup.admit_against_index(docs.where("doc_id % 5 = 0"), path)
-    text = explain_string(out, "formatted")
+    first = _next_execution_id(spark)
+    dedup.admit_against_index(docs.where("doc_id % 5 = 0"), path).collect()
+    text = "\n\n".join(_executed_plans_since(spark, first))
     bands_scans = [
         b for b in text.split("\n\n") if "Scan parquet" in b and "/bands" in b
     ]
@@ -1130,6 +1216,150 @@ def test_admit_against_index_band_dpp(spark, tmp_path):
         re.search(r"PartitionFilters:.*dynamicpruningexpression\(band", b)
         for b in bands_scans
     ), bands_scans[0][:900]
+
+
+def _admit_texts(seed: int, n: int, vocab: int = 40, words: int = 14) -> list[str]:
+    import random
+
+    rng = random.Random(seed)
+    return [" ".join(f"w{rng.randrange(vocab)}" for _ in range(words)) for _ in range(n)]
+
+
+def _one_word_edit(text: str, pos: int) -> str:
+    words = text.split(" ")
+    words[pos % len(words)] = "zz"
+    return " ".join(words)
+
+
+@pytest.fixture(scope="module")
+def admit_indexes(spark, tmp_path_factory):
+    """Two small dedup indexes for the admission path-parity cases: bigint
+    ids 0..39 and string ids ``d-0``..``d-39``. Docs 6 and 17 share one
+    text, as do ``d-9`` and ``d-10``, so a copy of either ties at
+    jaccard 1.0."""
+    from alphastats_spark.functions import dedup
+
+    texts = _admit_texts(7, 40)
+    texts[17] = texts[6]
+    texts[10] = texts[9]
+    root = tmp_path_factory.mktemp("admit_parity")
+    num, txt = str(root / "num"), str(root / "txt")
+    dedup.write_dedup_index(
+        spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string"), num
+    )
+    dedup.write_dedup_index(
+        spark.createDataFrame(
+            [(f"d-{i}", t) for i, t in enumerate(texts)], "doc_id string, text string"
+        ),
+        txt,
+    )
+    return {"num": num, "txt": txt, "texts": texts}
+
+
+def _admit_batch(kind: str, texts: list[str]) -> tuple[str, list, str, float]:
+    """(index, rows, schema, threshold) of one path-parity case."""
+    fresh = _admit_texts(11, 12)
+    copies = [(100 + j, texts[j * 3]) for j in range(4)]
+    edits = [(110 + j, _one_word_edit(texts[j * 5 + 1], j)) for j in range(4)]
+    mixed = copies + edits + [(120 + j, t) for j, t in enumerate(fresh[:4])]
+    schema = "doc_id bigint, text string"
+    if kind == "random":
+        return "num", mixed, schema, 0.5
+    if kind == "random_low_threshold":
+        return "num", mixed + [(130 + j, t) for j, t in enumerate(fresh[4:])], schema, 0.2
+    if kind == "string_ids":
+        rows = [(f"n-{i}", t) for i, t in mixed] + [("n-tie", texts[9])]
+        return "txt", rows, "doc_id string, text string", 0.5
+    if kind == "null_ids":
+        rows = [(None, texts[2]), (None, fresh[0]), (1, texts[2]), (2, texts[8])]
+        return "num", rows, "doc_id int, text string", 0.5
+    if kind == "short_docs":
+        rows = [(1, "a b"), (2, ""), (3, None), (4, "one"), (5, texts[3])]
+        return "num", rows, schema, 0.5
+    if kind == "empty":
+        return "num", [], schema, 0.5
+    if kind == "no_candidates":
+        other = _admit_texts(3, 6, vocab=40)
+        return "num", [(i, t.replace("w", "v")) for i, t in enumerate(other)], schema, 0.5
+    if kind == "duplicate_ids":
+        rows = [(7, texts[3]), (7, texts[3]), (8, texts[5]), (8, _one_word_edit(texts[5], 2))]
+        return "num", rows + [(9, texts[11]), (9, fresh[1])], schema, 0.5
+    if kind == "tie":
+        return "num", [(1, texts[6]), (2, texts[17]), (3, _one_word_edit(texts[6], 4))], schema, 0.5
+    raise ValueError(kind)
+
+
+def _plan_root(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["random", "random_low_threshold", "string_ids", "null_ids", "short_docs",
+     "empty", "no_candidates", "duplicate_ids", "tie"],
+)
+def test_admit_against_index_driver_and_distributed_paths_agree(
+    spark, admit_indexes, monkeypatch, kind
+):
+    """admit_against_index returns the same rows and the same schema
+    (types and nullability) whether the batch is verified on the driver or
+    by the distributed verify + rank plan. The bound is forced to a large
+    value and to -1 (every batch, even an empty one, then falls back)."""
+    from alphastats_spark.functions import dedup
+    from alphastats_spark.operators import ordered
+
+    index, rows, schema, threshold = _admit_batch(kind, admit_indexes["texts"])
+    batch = spark.createDataFrame(rows, schema)
+    path = admit_indexes[index]
+    out = {}
+    for name, cap in (("driver", 10**6), ("distributed", -1)):
+        monkeypatch.setattr(dedup, "DRIVER_ADMIT_MAX_ROWS", cap)
+        with ordered.pass_cache_scope():
+            live = ordered.pass_cache_mark()
+            df = dedup.admit_against_index(batch, path, threshold=threshold)
+            if name == "driver":
+                # the small path releases its own caches before returning
+                assert ordered.pass_cache_mark() == live
+            out[name] = (df.schema, sorted(map(tuple, df.collect()), key=repr), _plan_root(df))
+    assert out["driver"][2] == "LocalRelation"
+    assert out["distributed"][2] != "LocalRelation"
+    assert out["driver"][0] == out["distributed"][0]
+    assert out["driver"][1] == out["distributed"][1]
+    got = out["driver"][1]
+    assert len(got) == len(rows)
+    if kind == "tie":
+        assert [r[2] for r in got] == [6, 6, 6]
+        assert got[0][1] == got[1][1] == 2 and got[0][3] == 1.0
+    if kind == "string_ids":
+        assert dict((r[0], r[2]) for r in got)["n-tie"] == "d-10"
+    if kind == "null_ids":
+        assert [r[1:] for r in got if r[0] is None] == [(0, -1, 0.0, True)] * 2
+    if kind == "random":
+        assert sum(not r[4] for r in got) >= 4  # the exact copies
+
+
+def test_admit_against_index_job_count(spark, tmp_path):
+    """Pins the number of Spark jobs one small admission takes, counted
+    through a statusTracker job group: band candidates with the batch ids
+    (one result job after the batch shingle, signature, probe and guard
+    stages), one shingle collect, and none for the returned local frame.
+    A change that moves this number must update the pin on purpose."""
+    from alphastats_spark.functions import dedup
+    from alphastats_spark.operators import ordered
+
+    docs = _tiny_docs(spark)
+    path = str(tmp_path / "didx_jobs")
+    dedup.write_dedup_index(docs.where("doc_id % 5 != 0"), path)
+    sc = spark.sparkContext
+    sc.setJobGroup("admit-job-pin", "admit_against_index job pin")
+    try:
+        with ordered.pass_cache_scope():
+            rows = dedup.admit_against_index(docs.where("doc_id % 5 = 0"), path).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 12
+    assert len(sc.statusTracker().getJobIdsForGroup("admit-job-pin")) == ADMIT_JOBS
 
 
 def test_streaming_index_join_stored_side_unshuffled(spark, tmp_path):
