@@ -16,9 +16,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from alphastats_spark import harness  # noqa: E402
+from alphastats_spark.registry import build_registry  # noqa: E402
+from alphastats_spark.registry.shared import load_returns  # noqa: E402
 
-_QUERIES, _ORACLES = harness.build_registry()
+_QUERIES, _ORACLES = build_registry()
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -26,7 +27,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from alphastats_spark import expressions as X
     from alphastats_spark.operators import ordered
 
-    rets = harness.load_returns(spark, "/root/testdata/sf0.001")
+    rets = load_returns(spark, "/root/testdata/sf0.001")
     rets = ordered.with_order(rets, "d")
     rets = ordered.add_drawdown_columns(rets, {"dd": "r"})
     spec = X.Spec(v="r", dd="dd")

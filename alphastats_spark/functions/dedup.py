@@ -41,8 +41,8 @@ from alphastats_spark.functions.text import normalize
 #: (k, rows_per_band) override; these module constants are only the
 #: defaults the DuckDB oracle mirrors also derive from.
 #:
-#: Sizing (round 12, measured — SCALE_r12.json:banding_ab, synthetic
-#: 2M/5M-doc corpora, threshold 0.5): the pre-r12 family (k=8, r=2, b=4)
+#: Sizing (measured — SCALE_r12.json:banding_ab, synthetic 2M/5M-doc
+#: corpora, threshold 0.5): the earlier family (k=8, r=2, b=4)
 #: produced 6.0M post-guard candidates at 2M docs and 27.4M at 5M while
 #: verified pairs stayed linear — the excess was ALL false positives
 #: (r=2 collides an s≈0.3 boilerplate pair per band with s²≈0.09), and
@@ -135,8 +135,8 @@ _AFFINE_TABLE: tuple = (
 def _affine_coeffs(k: int) -> tuple:
     """The first ``k`` frozen ``(a_j, b_j)`` pairs of the affine family
     (:data:`_AFFINE_TABLE`) — one source for the Spark expressions AND
-    the DuckDB oracle SQL (harness ``_mh_sql`` embeds these same values
-    as literals). Prefix-stable: coefficients for k=8 are the first 8 of
+    the DuckDB oracle SQL (``registry.shared._mh_sql`` embeds these same
+    values as literals). Prefix-stable: coefficients for k=8 are the first 8 of
     the k=24 table, so growing k never re-keys existing hashes."""
     if k > len(_AFFINE_TABLE):
         raise ValueError(
@@ -370,7 +370,7 @@ def recommend_banding(
 ) -> DataFrame:
     """Threshold → banding-family advisor: for each Jaccard threshold,
     the steepest (k, rows_per_band, n_bands) family within ``k_budget``
-    min-hashes that still catches clear duplicates — the round-12 README
+    min-hashes that still catches clear duplicates — the README's
     selection table as a queryable function.
 
     Selection rule: a pair of Jaccard s hits ≥1 band with
@@ -399,8 +399,8 @@ def recommend_banding(
     ``hit_prob`` the rounded probability at s*. The probability is
     rounded to 7dp BEFORE the ≥ comparison so the pick cannot flip on
     cross-engine float noise. Measured validation of the rule: at
-    t = 0.5 / budget 24 it returns (24, 3, 8) — the family the round-12
-    2M/5M A/B measured at 3.6× fewer candidates and higher recall than
+    t = 0.5 / budget 24 it returns (24, 3, 8) — the family the 2M/5M
+    A/B measured at 3.6× fewer candidates and higher recall than
     the old (8, 2, 4) default (SCALE_r12.json:banding_ab).
     """
     from pyspark.sql import Window
@@ -576,8 +576,8 @@ def _hashed_shingles(
     key universe is the corpus VOCABULARY: the birthday bound sits at
     ~2^30 distinct shingles vs ~65k for 32 bits. Per-doc sizes count
     ROWS, not distinct hashes, so they stay exact under any collision;
-    the DuckDB oracles mirror the hash verbatim (harness
-    ``_SHINGLE_HASH_CTE``), so cross-engine parity holds by construction
+    the DuckDB oracles mirror the hash verbatim
+    (``registry.shared._SHINGLE_HASH_CTE``), so cross-engine parity holds by construction
     rather than by collision luck. NOT used by the index/admit paths —
     the materialized band/shingle tables keep raw shingles as their
     stored format.
@@ -671,8 +671,8 @@ def _band_table(
 #: candidate pairs, and boilerplate-heavy corpora produce mega-buckets —
 #: MinHash's min over a doc's shingles lands on a globally-common shingle
 #: for a large fraction of documents at once, so D grows WITH the corpus
-#: and the band self-join goes quadratic (measured: the round-8 deep scale
-#: probe at 500k synthetic docs with a 25-word hot vocabulary head spilled
+#: and the band self-join goes quadratic (measured: a deep scale probe
+#: at 500k synthetic docs with a 25-word hot vocabulary head spilled
 #: >79 GB and died on disk before this guard existed; at 50k the same
 #: blow-up hid inside a tolerable 64 s). 200 is far above any honest
 #: near-dup cluster at the tested scales while bounding the per-bucket
@@ -682,7 +682,7 @@ def _band_table(
 #: collide in multiple independent bands. The DuckDB oracles mirror the
 #: cap structurally, so cross-engine parity holds at any scale factor.
 #:
-#: Sizing (round 10, measured): the instrumented deep probe showed
+#: Sizing (measured): an instrumented deep probe showed
 #: post-guard candidates growing at exponent ~1.48/decade under the old
 #: cap of 1000 — sub-cap buckets FILLING with corpus size is the one
 #: super-linear count in the whole pipeline — while verified pairs grew
@@ -691,7 +691,7 @@ def _band_table(
 #: 427,452 verified / 291 s; cap 200 → 6.42M / 427,226 (−0.053%) /
 #: 166 s; cap 100 → 5.19M / 427,147 (−0.071%) / 147 s.
 #:
-#: Re-sized to 25 in round 12 with the (24, 3, 8) banding family
+#: Re-sized to 25 with the (24, 3, 8) banding family
 #: (SCALE_r12.json:cap_sweep, 2M + 5M probe corpora): sub-cap buckets
 #: FILLING with corpus size is the one super-linear count in the whole
 #: pipeline, and the cap — not the banding family — is what flattens it.
@@ -793,14 +793,14 @@ def _candidates_from_sigs(
         sigs, id_col, k, rows_per_band,
         extra=(size_col,) if size_col else (),
     )
-    # mega-bucket guard, fused into the band-table pass (round-9: the
-    # round-8 shape — persist, then a SECOND groupBy traversal + collect/
-    # broadcast anti-join — cost ~2 s of fixed latency on the sf0.1 dedup
-    # headline and force-broadcast an unbounded over-cap list). A window
+    # mega-bucket guard, fused into the band-table pass (a separate pass —
+    # persist, then a SECOND groupBy traversal + collect/broadcast
+    # anti-join — cost ~2 s of fixed latency on the sf0.1 dedup headline
+    # and force-broadcast an unbounded over-cap list). A window
     # count over (band, sig) rides the SAME hash partitioning the self-join
     # below needs, so the guard is one filter inside the shuffle the join
     # pays anyway: no second traversal, no driver collect, no broadcast —
-    # and the hot-list-size blow-up ADVICE r8 flagged cannot exist here.
+    # and an over-cap list too large to broadcast cannot arise here.
     # Threshold semantics identical to _drop_hot_buckets (strictly greater
     # than cap drops the bucket); the DuckDB corpus_hot CTEs mirror it.
     if max_band_bucket is not None:
@@ -1186,8 +1186,8 @@ def _pairwise_cosine(
     The per-pair dot is the zip_with/aggregate HOF fold on purpose: a flat
     unrolled ``try_element_at`` sum is bit-identical but measured 2.7×
     SLOWER inside a join stage's whole-stage codegen (the method outgrows
-    the JIT — see the note above ``similarity._dot``), so the round-14
-    flat-dot experiment was reverted here."""
+    the JIT — see the note above ``similarity._dot``), so the flat dot is
+    not used here."""
     a = vecs.alias("a")
     b = vecs.alias("b")
     cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
@@ -1240,8 +1240,7 @@ def embedding_near_dup_pairs_lsh(
     approximate (a pair at cosine θ collides per table with
     P = (1 − arccos(θ)/π)^planes, missed by all tables with (1−P)^tables).
 
-    Plan shape (round 14, guide §2.3/§8 — decide with small rows, attach
-    the payload once): all ``n_tables`` bucket ids are computed in ONE
+    Plan shape (decide with small rows, attach the payload once): all ``n_tables`` bucket ids are computed in ONE
     projection and exploded to (id, table, bucket) rows, so ONE id-only
     self-join on (table, bucket) replaces ``n_tables`` separate joins
     that each carried both vectors; the distinct (id_a, id_b) candidates
@@ -2870,13 +2869,13 @@ def containment_pairs(
     frequency exceeds the cap (pinned by
     ``tests/test_functions.py::test_containment_cap_noop_below_df``).
 
-    .. warning:: BEHAVIOR CHANGE (r7): the default was ``max_shingle_df=
-       None`` (uncapped) through round 6. Default callers on corpora where
+    .. warning:: BEHAVIOR CHANGE: the default was once ``max_shingle_df=
+       None`` (uncapped). Default callers on corpora where
        boilerplate shingles exceed df 1000 now get capped — i.e.
        underestimated — containment, and a pair of documents composed
        mostly of hot shingles can drop below ``threshold``. Pass
        ``max_shingle_df=None`` explicitly to restore the exact (but
-       skew-unsafe) pre-r7 behavior.
+       skew-unsafe) behavior.
 
     Shingles shuffle as 60-bit hashes, not raw gram strings — see
     :func:`_hashed_shingles` for the width/collision reasoning.
@@ -3046,8 +3045,8 @@ def winnow_fingerprints(
     explode; no shuffle at all until the caller aggregates or joins the
     fingerprint column.
 
-    Two physical guards (round-14 profile: this operator measured >27
-    MINUTES at sf0.1 against ~1 s after):
+    Two physical guards (profiled: without them this operator took >27
+    MINUTES at sf0.1, against ~1 s with them):
 
     * the explode is ``explode_outer`` + an ``IS NOT NULL`` filter on
       the GENERATED column, not a plain ``explode`` of the projected

@@ -187,8 +187,8 @@ def _word_ngrams(toks: Column, n: int) -> Column:
     ``tokens(normalize(text))`` tree: the transform lambda closes over
     ``toks`` and interpreted higher-order functions re-evaluate a
     non-trivial closed-over subexpression once PER ELEMENT — the 25× trap
-    documented at ``dedup._grams_over`` (re-measured here in round 8:
-    projecting the token array first took source_overlap_matrix's gram
+    documented at ``dedup._grams_over`` (re-measured here: projecting the
+    token array first took source_overlap_matrix's gram
     explode from ~60 s to ~8 s at the 50k-doc probe scale). Use
     :func:`_exploded_grams` instead of calling this directly."""
     grams = F.transform(
@@ -850,10 +850,9 @@ def dsir_weights(
     Plan shape at 100 TB: explode to the token stream, ONE map-side-
     combinable groupBy to per-(doc, bucket) counts — the tokenizer runs
     exactly once; both distributions AND the per-doc weights derive from
-    that persisted reduced table (round 14: the un-persisted token stream
-    used to feed the bucket counts and the per-doc join separately, so
-    the corpus was tokenized twice — and twice more through the ``top_n``
-    re-read) — then ≤``n_buckets`` rows of log-ratio table broadcast-
+    that persisted reduced table (an un-persisted token stream fed the
+    bucket counts and the per-doc join separately, so the corpus was
+    tokenized twice — and twice more through the ``top_n`` re-read) — then ≤``n_buckets`` rows of log-ratio table broadcast-
     joined back, one per-doc groupBy. The per-doc mean over tokens is
     taken as Σ(count·diff)/Σcount over the (doc, bucket) counts — the
     grouped form of the same mean. No global window, no driver

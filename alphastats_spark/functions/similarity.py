@@ -56,7 +56,7 @@ def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-# --- SQL-text twins of the vector expression builders (round 14) -----------
+# --- SQL-text twins of the vector expression builders ----------------------
 #
 # The Column-DSL builders below pay one py4j round-trip per zip_with/
 # aggregate LAMBDA (~13 ms each — _create_lambda ships the function to the
@@ -297,8 +297,8 @@ KNN_JOIN_TARGET_BUCKET = 32
 #: duplicate-heavy corpus every copy of a vector lands in ONE bucket in
 #: EVERY table, so the bucket self-join is quadratic in the duplicate
 #: count with no upper bound; a bucket 32× the target is a hub/duplicate
-#: pathology, not a neighborhood (round-10 measurement at the shipped
-#: auto planes: max honest bucket was 409 at 500k vectors — well under
+#: pathology, not a neighborhood (measured at the shipped auto planes:
+#: max honest bucket was 409 at 500k vectors — well under
 #: this cap — while Σ|b|² grew at exponent ~1.2/decade from skew plus the
 #: ⌈log₂⌉ plane-count quantization, both bounded; the cap bounds the
 #: unbounded third term). Dropping a hot bucket costs those vectors that
@@ -362,8 +362,8 @@ def knn_join(
     difference between linear and quadratic candidate volume at scale.
     Pass an explicit ``n_planes`` to pin buckets (the oracle-gated
     queries do, for cross-engine determinism).
-    NOTE (behavior change vs rounds ≤6): the old fixed default was
-    ``n_planes=6``; default results differ from pre-r7 releases because
+    NOTE (behavior change): the old fixed default was ``n_planes=6``;
+    default results differ from releases with that default because
     bucket boundaries move with the corpus-sized plane count.
 
     ``multiprobe=1`` additionally probes every bucket at Hamming distance 1

@@ -68,8 +68,8 @@ def hash_key60(col: Column) -> Column:
     strings, with the birthday bound at ~2^30 distinct values (the
     default 8-digit key collides from ~65k). Every DuckDB oracle mirrors
     it as ``CAST(CONCAT('0x', substr(md5(x), 1, 15)) AS BIGINT)``
-    (harness ``_SHINGLE_HASH_CTE``); widen here and in the oracles in
-    lockstep or the engines silently diverge — which is why this is ONE
+    (``registry.shared._SHINGLE_HASH_CTE``); widen here and in the oracles
+    in lockstep or the engines silently diverge — which is why this is ONE
     helper and not a per-site ``hex_digits=15`` literal."""
     return md5_long(col, hex_digits=15)
 
@@ -256,8 +256,8 @@ def tf_idf_topk(
     from alphastats_spark.operators import ordered as _ordered
 
     # the tf table feeds doc_freq AND the scored join: persist the reduced
-    # (doc, term) table so the tokenize+explode+groupBy runs once (round 14
-    # — same shared-branch pattern as lsh_verified_pairs' shingle table)
+    # (doc, term) table so the tokenize+explode+groupBy runs once (the
+    # same shared-branch pattern as lsh_verified_pairs' shingle table)
     tf = _ordered.persist_tracked(term_frequencies(df, id_col, text_col))
     n_docs = df.select(F.countDistinct(F.col(id_col))).first()[0]
     doc_freq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -336,7 +336,7 @@ def tfidf_similarity_pairs(
     # tf feeds doc_freq and the weight projection; w feeds the norms and
     # BOTH posting join sides. Un-persisted, the corpus was re-tokenized
     # for every consumer (~6 scans per call); the two persisted reduced
-    # tables make it exactly one (round 14, the lsh shingle-table pattern).
+    # tables make it exactly one (the lsh shingle-table pattern).
     tf = _ordered.persist_tracked(term_frequencies(df, id_col, text_col))
     n_docs = df.select(F.countDistinct(F.col(id_col))).first()[0]
     doc_freq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -816,7 +816,7 @@ def corpus_divergence(
     Plan shape at 100 TB: two map-side-combinable token-count
     aggregations (one per slice), one vocabulary-sized full-outer join
     on term, the (T_a, T_b, V) totals crossed in as a one-row aggregate
-    (never a vocabulary broadcast — cf. the r13 TF-IDF fix), and a
+    (never a vocabulary broadcast, which TF-IDF once forced), and a
     single global aggregate. Nothing corpus-sized shuffles twice, no
     collect, no driver-side vocabulary. Cross-engine float determinism:
     each term's contribution is an exact-int-derived double and the

@@ -1,7 +1,7 @@
 """SparkSession factory with the engine's at-scale configuration.
 
 One place that encodes WHY each knob is set, so a cluster deployment and
-the local test/bench harnesses share the same posture:
+the local tests and benchmarks share the same posture:
 
 * **AQE on** (`spark.sql.adaptive.enabled` + coalescePartitions +
   skewJoin): runtime re-planning fixes the two things no static plan

@@ -96,8 +96,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from alphastats_spark import expressions as X
-    from alphastats_spark import harness, reports, stats
+    from alphastats_spark import reports, stats
     from alphastats_spark.operators import ordered
+    from alphastats_spark.registry.shared import _event_us, _events, load_benchmark, load_returns
 
     # Warm the JVM once (not part of any timed query): parquet footers plus
     # one small pass through the window/aggregate/join codegen paths, so the
@@ -107,19 +108,19 @@ def main() -> None:
     # through the OS page cache so the first timed run doesn't measure
     # cold-device reads (observed once at r10: a fresh box's first
     # q_snapshot paid ~10s of virtio reads that no later query repaid)
-    harness.load_returns(spark, sf_dir).count()
-    harness.load_benchmark(spark, sf_dir).count()
-    warm = harness.load_returns(spark, sf_dir).limit(500)
+    load_returns(spark, sf_dir).count()
+    load_benchmark(spark, sf_dir).count()
+    warm = load_returns(spark, sf_dir).limit(500)
     warm = ordered.with_order(warm, "d")
     warm = ordered.add_drawdown_columns(warm, {"dd": "r"})
     warm.agg(F.min("dd"), X.column("sharpe", "r"), X.column("tail_ratio", "r")).collect()
     # ... and the episode machinery's stack/groupBy codegen (q_episodes'
     # first run otherwise pays ~1.5s of JIT that shows up as spread)
-    stats.longest_drawdown_days(harness.load_returns(spark, sf_dir).limit(500)).collect()
+    stats.longest_drawdown_days(load_returns(spark, sf_dir).limit(500)).collect()
     ordered.release_pass_caches()
 
     def q_snapshot():
-        rets = harness.load_returns(spark, sf_dir)
+        rets = load_returns(spark, sf_dir)
         spec = X.Spec(v="r")
         outputs = {
             "total_return": "comp", "cagr": "cagr", "sharpe": "sharpe", "sortino": "sortino",
@@ -130,7 +131,7 @@ def main() -> None:
         return X.project(rets, {out: (name, spec) for out, name in outputs.items()}).collect()
 
     def q_drawdowns():
-        rets = harness.load_returns(spark, sf_dir).persist()
+        rets = load_returns(spark, sf_dir).persist()
         ddf = ordered.with_order(rets, "d")
         ddf = ordered.add_drawdown_columns(ddf, {"dd": "r"})
         out = ddf.agg(
@@ -140,23 +141,23 @@ def main() -> None:
         return out
 
     def q_episodes():
-        rets = harness.load_returns(spark, sf_dir)
+        rets = load_returns(spark, sf_dir)
         return stats.longest_drawdown_days(rets).collect()
 
     def q_greeks():
-        rets = harness.load_returns(spark, sf_dir)
-        bench = harness.load_benchmark(spark, sf_dir)
+        rets = load_returns(spark, sf_dir)
+        bench = load_benchmark(spark, sf_dir)
         return stats.greeks(rets, bench).collect()
 
     def q_monthly():
-        rets = harness.load_returns(spark, sf_dir)
+        rets = load_returns(spark, sf_dir)
         monthly, _ = stats._simple_returns(rets, "month", True)
         return monthly.agg(
             X.column("expected_return", "r"), F.max("r"), F.min("r")
         ).collect()
 
     def q_report():
-        rets = harness.load_returns(spark, sf_dir)
+        rets = load_returns(spark, sf_dir)
         return reports.metrics(rets, display=False, mode="basic").collect()
 
     queries = {
@@ -194,8 +195,8 @@ def main() -> None:
 
     def x_funnel():
         from alphastats_spark.functions import events as ev_ops
-        ev = harness._events(spark, sf_dir)
-        ev = ev.withColumn("us", harness._event_us(ev))
+        ev = _events(spark, sf_dir)
+        ev = ev.withColumn("us", _event_us(ev))
         return ev_ops.funnel(
             ev, steps=["signup", "click", "purchase"], max_gap_s=86_400
         ).collect()

@@ -59,10 +59,10 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from alphastats_spark import harness
     from alphastats_spark.operators import ordered
+    from alphastats_spark.registry import build_registry
 
-    queries, _ = harness.build_registry()
+    queries, _ = build_registry()
     names = args.names or sorted(queries)
 
     # warm: parquet footers + page cache, mirroring bench.py

@@ -48,9 +48,10 @@ def _scalar(df) -> float:
     "metric", ["tail_ratio", "common_sense_ratio", "outlier_win_ratio", "outlier_loss_ratio"]
 )
 def test_stats_approx_percentile_bounds(spark, metric):
-    from alphastats_spark import harness, stats
+    from alphastats_spark import stats
+    from alphastats_spark.registry.shared import load_returns
 
-    rets = harness.load_returns(spark, SF_DIR).persist()
+    rets = load_returns(spark, SF_DIR).persist()
     fn = getattr(stats, metric)
     exact = _scalar(fn(rets))
     approx = _scalar(fn(rets, exact=False))
@@ -76,10 +77,9 @@ def test_length_quantiles_approx_bounds(spark):
 
 
 def _events(spark):
-    from alphastats_spark import harness
+    from alphastats_spark.registry.events import _events_us
 
-    ev = harness._events(spark, SF_DIR)
-    return ev.withColumn("us", harness._event_us(ev))
+    return _events_us(spark, SF_DIR)
 
 
 def test_inter_event_gaps_approx_bounds(spark):

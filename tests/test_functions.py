@@ -546,11 +546,11 @@ def test_knn_join_recall(spark):
 
 
 def test_embedding_lsh_gate_recall(spark):
-    """Quantitative recall check at the GATE parameters (harness
+    """Quantitative recall check at the GATE parameters (registry
     emb_near_dups_lsh: threshold=0.4, n_planes=3, n_tables=12 — expected
-    recall ≈ 0.97, see harness calibration note) on the real driver
-    embeddings table — the approximate 100 TB path must recover nearly all
-    exact pairs, not just produce plausible rows."""
+    recall ≈ 0.97, see the calibration note in registry/ann.py) on the
+    real driver embeddings table — the approximate 100 TB path must
+    recover nearly all exact pairs, not just produce plausible rows."""
     import os
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
@@ -1014,7 +1014,7 @@ class TestReportFormatOracle:
     def _duck_fmt(self, values):
         import duckdb
 
-        from alphastats_spark.harness import _fmt_sql
+        from alphastats_spark.registry.report import _fmt_sql
 
         con = duckdb.connect()
         con.execute("CREATE TABLE t(x DOUBLE)")

@@ -245,16 +245,16 @@ def test_duplicate_clusters_edges_released_by_scope(spark):
 
 
 def test_daily_pct_change_matches_two_phase_lag(spark):
-    """The harness loaders' bounded-series fast path (plain global-order
+    """The registry loaders' bounded-series fast path (plain global-order
     lag over the per-day aggregate) must return exactly the rows the
     general two-phase lag machinery returns on the same daily table."""
     from pyspark.sql import functions as F
 
-    from alphastats_spark import harness
     from alphastats_spark.operators import ordered
+    from alphastats_spark.registry.shared import load_returns
 
     sf_dir = "/root/testdata/sf0.001"
-    fast = harness.load_returns(spark, sf_dir).orderBy("d").collect()
+    fast = load_returns(spark, sf_dir).orderBy("d").collect()
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(

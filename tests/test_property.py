@@ -452,7 +452,7 @@ def test_hash_key60_engine_parity(spark, values):
     """The 60-bit join-key hash (text.hash_key60) must agree bit-for-bit
     across Spark, DuckDB's mirror expression, and a pure-Python hashlib
     re-derivation — EVERY hashed gram/shingle join key in the engine rides
-    this contract (harness._SHINGLE_HASH_CTE), including on unicode,
+    this contract (registry.shared._SHINGLE_HASH_CTE), including on unicode,
     empty-string and whitespace inputs."""
     import hashlib
 

@@ -1625,8 +1625,8 @@ def test_funnel_step_filter_pushed_to_scan(spark):
     if not os.path.exists("/root/testdata/sf0.001/events.parquet"):
         pytest.skip("driver testdata not present")
     from alphastats_spark.functions import events as ev_ops
-    from alphastats_spark.harness import _event_us
     from alphastats_spark.plans.audit import scan_info
+    from alphastats_spark.registry.shared import _event_us
 
     raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     ev = raw.select("user_id", _event_us(raw).alias("us"), "event_type")

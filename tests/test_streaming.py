@@ -795,7 +795,7 @@ def test_stream_parts_concurrent_scopes_do_not_interleave(spark, tmp_path):
     or a timeout passes, so unserialised scopes would interleave here."""
     import threading
 
-    from alphastats_spark import harness
+    from alphastats_spark.registry.shared import _stream_parts
 
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
@@ -811,7 +811,7 @@ def test_stream_parts_concurrent_scopes_do_not_interleave(spark, tmp_path):
     seen = {}
 
     def first():
-        with harness._stream_parts(spark, str(small)):
+        with _stream_parts(spark, str(small)):
             barrier.wait()
             second_entered.wait(timeout=1.0)
             seen["first"] = spark.conf.get(key)
@@ -819,7 +819,7 @@ def test_stream_parts_concurrent_scopes_do_not_interleave(spark, tmp_path):
 
     def second():
         barrier.wait()
-        with harness._stream_parts(spark, str(mid)):
+        with _stream_parts(spark, str(mid)):
             second_entered.set()
             first_read.wait(timeout=1.0)
             seen["second"] = spark.conf.get(key)
@@ -834,10 +834,10 @@ def test_stream_parts_concurrent_scopes_do_not_interleave(spark, tmp_path):
 
 
 def test_stream_parts_scope_derivation_and_restore(spark, tmp_path):
-    """harness._stream_parts sizes the state-partition conf to the staged
+    """_stream_parts sizes the state-partition conf to the staged
     feed (>= 64 KiB per partition, floor 2, capped at defaultParallelism),
     and restores the session conf on exit — including on error."""
-    from alphastats_spark import harness
+    from alphastats_spark.registry.shared import _stream_parts
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
 
@@ -845,7 +845,7 @@ def test_stream_parts_scope_derivation_and_restore(spark, tmp_path):
     small = tmp_path / "small"
     small.mkdir()
     (small / "batch-000.parquet").write_bytes(b"x" * 1024)
-    with harness._stream_parts(spark, str(small)):
+    with _stream_parts(spark, str(small)):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
     assert spark.conf.get("spark.sql.shuffle.partitions") == old
 
@@ -857,7 +857,7 @@ def test_stream_parts_scope_derivation_and_restore(spark, tmp_path):
     mid = tmp_path / "mid" / "nested"
     mid.mkdir(parents=True)
     (mid / "part-0.parquet").write_bytes(b"x" * (150 << 10))
-    with harness._stream_parts(spark, str(tmp_path / "mid")):
+    with _stream_parts(spark, str(tmp_path / "mid")):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
     assert spark.conf.get("spark.sql.shuffle.partitions") == old
 
@@ -866,36 +866,61 @@ def test_stream_parts_scope_derivation_and_restore(spark, tmp_path):
     big.mkdir()
     (big / "batch-000.parquet").write_bytes(b"x" * (8 << 20))
     cap = str(spark.sparkContext.defaultParallelism)
-    with harness._stream_parts(spark, str(big)):
+    with _stream_parts(spark, str(big)):
         assert spark.conf.get("spark.sql.shuffle.partitions") == cap
     assert spark.conf.get("spark.sql.shuffle.partitions") == old
 
     # restore happens on the error path as well
     with pytest.raises(RuntimeError):
-        with harness._stream_parts(spark, str(small)):
+        with _stream_parts(spark, str(small)):
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.shuffle.partitions") == old
 
-    # explicit override wins over the derivation
-    import os as _os
 
-    _os.environ["SPARK_GRAFT_STREAM_PARTITIONS"] = "5"
-    try:
-        with harness._stream_parts(spark, str(big)):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
-    finally:
-        del _os.environ["SPARK_GRAFT_STREAM_PARTITIONS"]
-    assert spark.conf.get("spark.sql.shuffle.partitions") == old
+def _gate_feed(spark):
+    return spark.createDataFrame(
+        [(dt.date(2023, 1, i), 0.01 * i) for i in range(1, 6)], "d date, r double"
+    )
 
-    # invalid overrides fail loudly, naming the variable, and never touch
-    # the session conf (0/negative would set an invalid Spark conf;
-    # garbage would crash deep inside int())
-    for bad in ("0", "-3", "lots"):
-        _os.environ["SPARK_GRAFT_STREAM_PARTITIONS"] = bad
-        try:
-            with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_PARTITIONS"):
-                with harness._stream_parts(spark, str(small)):
-                    pass
-        finally:
-            del _os.environ["SPARK_GRAFT_STREAM_PARTITIONS"]
-        assert spark.conf.get("spark.sql.shuffle.partitions") == old
+
+def test_gate_stream_timeout_stops_query_and_cleans_up(spark, tmp_path, monkeypatch):
+    """A gate stream that outlives GATE_STREAM_TIMEOUT_S raises TimeoutError,
+    and leaves no active query, no staging directory and the session's
+    shuffle-partition conf as it found it."""
+    import tempfile
+
+    from alphastats_spark.registry import shared
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(shared, "GATE_STREAM_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError, match="did not terminate"):
+        shared._gate_stream(
+            spark, [_gate_feed(spark)], "d date, r double",
+            lambda stream, _: streaming_drawdowns(stream, temporal="d"),
+            "as_timeout_probe_",
+        )
+    assert not [q for q in spark.streams.active if (q.name or "").startswith("as_timeout_probe_")]
+    assert list(tmp_path.iterdir()) == []
+    assert spark.conf.get(key) == old
+
+
+def test_gate_stream_build_error_leaves_no_staging(spark, tmp_path, monkeypatch):
+    """A build that raises after the feed is staged leaves no staging
+    directory behind and restores the shuffle-partition conf."""
+    import tempfile
+
+    from alphastats_spark.registry import shared
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def build(stream, feed_bytes):
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        shared._gate_stream(spark, [_gate_feed(spark)], "d date, r double", build, "as_build_err_")
+    assert list(tmp_path.iterdir()) == []
+    assert spark.conf.get(key) == old
